@@ -755,8 +755,8 @@ object ConnectorOps {
     // Count-balanced time-range split (`split=stats`): identical relation
     // to loki_connector_split — boundary PLACEMENT must never change the
     // result, only the per-slice row balance — but the slices come from
-    // plan-time index/stats probes (LokiScan.statsBounds; SliceSmoke
-    // measures the balance win: max/mean 4.0 → ~1.2 on the bursty corpus).
+    // plan-time index/stats probes (LokiScan.statsBounds; a slice run
+    // measured the balance win: max/mean 4.0 → ~1.2 on the bursty corpus).
     ("loki_connector_split_stats",
       (s: SparkSession, d: String) =>
         s.read.format("loki")
@@ -783,10 +783,10 @@ object ConnectorOps {
     // forward-cursor pager (query_limit). The corpus is adversarial: every
     // `click` row is pinned to ONE nanosecond — a same-ns burst ~10× the
     // page size — so the gate certifies the round-10 held-run/doubling
-    // boundary (LokiPartitionReader.pagedRows) against the full-relation
-    // oracle, not just the easy distinct-ns walk. Lines carry the original
-    // µs so the pinned rows stay distinct entries (Loki ingest dedups
-    // identical (ts, labels, line) triples).
+    // boundary (LokiColumnarReader's forward pager) against the
+    // full-relation oracle, not just the easy distinct-ns walk. Lines
+    // carry the original µs so the pinned rows stay distinct entries
+    // (Loki ingest dedups identical (ts, labels, line) triples).
     ("loki_paged_scan",
       (s: SparkSession, d: String) => {
         val st = stubSync(stubs.getOrElseUpdate(s"$d#paged", {

@@ -177,7 +177,7 @@ object StreamOps {
           StreamingOps.streamStreamClickPurchase(s, d), name, OutputMode.Append(),
           // interval-join state buffers both watermark windows — the
           // heaviest state in the gate — but even here the round-8
-          // StreamTuneSmoke sweep measured 1 state partition fastest on
+          // stream-tuning sweep measured 1 state partition fastest on
           // the bounded drain (1.63 s vs 1.72 s at 4): per-store commit
           // tax beats parallelism until state outgrows one task
           statePartitions = 1)

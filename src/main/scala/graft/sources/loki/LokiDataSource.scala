@@ -79,7 +79,7 @@ final case class LokiOptions(
     /** Slice-boundary placement for `partitions=N`. "width" (default,
       * reference-shaped): N equal-WIDTH time slices — zero extra round
       * trips, but a bursty corpus serializes through the spike slice
-      * (SliceSmoke measured max/mean = 4.0 with 80% of rows in one day).
+      * (a slice run measured max/mean = 4.0 with 80% of rows in one day).
       * "stats": probe Loki's `index/stats` entry counts at plan time and
       * place boundaries on cumulative ROW COUNT — balanced slices at the
       * cost of O(N·log) cheap index-only probes (BASELINE.md "Connector
@@ -174,23 +174,15 @@ final case class LokiOptions(
       * stream's labels); only the payload shape changes.
       */
     groupStreams: Boolean = false,
-    /** Decode wire parquet into ColumnarBatches (both the single-request
-      * and paged read shapes) — the reference's end-to-end columnar shape
-      * (scan.rs:200-213). false forces the row-based readers; kept as a
-      * user-visible escape hatch and so the differential specs can pin
-      * the two decode paths against each other on the same corpus.
-      */
-    columnar: Boolean = true,
     /** Surface Loki 3.x per-entry STRUCTURED METADATA (trace/span ids —
       * non-indexed key/values attached to entries at ingest) as a fourth
       * `metadata map<string,string>` column, on reads AND writes (the
       * push payload gains the entry's third element). OFF by default —
       * the reference's 3-column schema is the contract its scripts
-      * assume. Reads with the column use the row-based decoder (the
-      * columnar fast path stays specialized to the 3-column shape);
-      * predicates on metadata always stay host residuals (Loki cannot
-      * filter on non-indexed metadata server-side without a parser
-      * stage).
+      * assume. The column decodes like `labels` (one wire shape, one
+      * columnar decoder); predicates on metadata always stay host
+      * residuals (Loki cannot filter on non-indexed metadata server-side
+      * without a parser stage).
       */
     structuredMetadata: Boolean = false,
     /** Streaming (readStream) start of the tail, epoch ns. Unset → the
@@ -294,7 +286,6 @@ final case class LokiOptions(
     "push_parsers" -> pushParsers.toString,
     "report_statistics" -> reportStatistics.toString,
     "group_streams" -> groupStreams.toString,
-    "columnar" -> columnar.toString,
     "structured_metadata" -> structuredMetadata.toString,
     "stream_lag_ms" -> streamLagMs.toString,
     "max_rows_per_batch" -> maxRowsPerBatch.toString,
@@ -347,7 +338,6 @@ object LokiOptions {
       pushParsers = m.getOrElse("push_parsers", "true").toBoolean,
       reportStatistics = m.getOrElse("report_statistics", "false").toBoolean,
       groupStreams = m.getOrElse("group_streams", "false").toBoolean,
-      columnar = m.getOrElse("columnar", "true").toBoolean,
       structuredMetadata =
         m.getOrElse("structured_metadata", "false").toBoolean,
       streamStartNs = m.get("stream_start_ns").map(_.toLong),

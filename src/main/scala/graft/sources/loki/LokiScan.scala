@@ -1,20 +1,16 @@
 package graft.sources.loki
 
-import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.vectorized.ColumnarBatch
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Scan half of the connector — the rebuild of `LokiLogScanExec`
   * (`src/scan.rs`). Pushdown mirrors `src/table.rs:90-156`:
@@ -348,7 +344,7 @@ case class LokiScan(
   // memoized twice: per-instance (lazy val — Spark calls
   // planInputPartitions more than once per query) AND across instances
   // (LokiScan.boundsCache — DSv2 rebuilds the Scan several times during
-  // optimization/execution; SliceSmoke measured ~6 rebuilds × ~63 probes
+  // optimization/execution; a slice run measured ~6 rebuilds × ~63 probes
   // before the shared cache). Keyed on exactly the probe inputs; windows
   // from now()-relative defaults just miss the cache, which is correct.
   @transient private lazy val plannedBounds: Seq[(Long, Long)] = {
@@ -403,7 +399,7 @@ case class LokiScan(
   /** Count-balanced slice boundaries via plan-time `index/stats` probes
     * (BASELINE.md "Connector time-range split under bursty logs"): equal-
     * WIDTH slicing serializes a bursty corpus through the spike slice
-    * (SliceSmoke measured max/mean = 4.0 at 80%-in-one-day skew — a skew
+    * (a slice run measured max/mean = 4.0 at 80%-in-one-day skew — a skew
     * AQE cannot touch because it lives inside one partition's HTTP read).
     *
     * Recursive bisection builds a count histogram fine only where the
@@ -451,11 +447,7 @@ case class LokiScan(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    // structured metadata rides the row-based decoder: the columnar
-    // readers are hand-specialized to the 3-column wire shape, and the
-    // metadata map would be a second repetition-structured column pair
-    // for a diagnostics-scale projection (see LokiOptions doc)
-    LokiReaderFactory(options.columnar && !options.structuredMetadata)
+    LokiReaderFactory()
 
   /** Partitions for one CONCRETE window [s, e) — the micro-batch path
     * ([[LokiMicroBatchStream]]): width slices only (a per-batch
@@ -516,7 +508,7 @@ object LokiScan {
     * function reports — correctness never depends on the stats, only
     * balance does. Probe budget 64×eff: probe count is O(#clusters ·
     * log(window/cluster_width)) — sharp sub-second bursts in a month-wide
-    * window cost ~20 probes each (SliceSmoke measured 462 on a 30-cluster
+    * window cost ~20 probes each (a slice run measured 462 on a 30-cluster
     * corpus); past the budget the remaining bins stay coarse (balance
     * degrades gracefully toward width-split, never correctness).
     */
@@ -714,301 +706,38 @@ case class LokiInputPartition(
     direction: Option[String] = None) extends InputPartition {
 
   /** The executor-side concrete window: defaults materialize at execute
-    * time, like scan.rs:104-115 (now−30d…now). ONE definition for all
-    * three readers (row, columnar, count) — the default is a semantic
-    * contract, and a copy drifting in one reader would silently diverge
-    * the paths that are differential-tested against each other.
+    * time, like scan.rs:104-115 (now−30d…now). ONE definition for both
+    * readers (scan and count) — the default is a semantic contract, and a
+    * copy drifting in one reader would silently diverge a pushed COUNT
+    * from the scan it replaces.
     */
   def effectiveWindow: (Long, Long) =
     (startNs.getOrElse(LokiHttp.thirtyDaysAgoNs),
       endNs.getOrElse(LokiHttp.nowNs))
 }
 
-case class LokiReaderFactory(columnar: Boolean = true)
-  extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[LokiInputPartition]
-    if (p.countOnly) new LokiCountReader(p) else new LokiPartitionReader(p)
-  }
+/** Every partition but a pushed COUNT reads columnar, through
+  * [[LokiColumnarReader]]: the reference streams Arrow batches end to end
+  * (scan.rs:200-213), and the wire parquet decodes straight into column
+  * vectors for every scan shape — single request or paged, with or
+  * without the structured-metadata column. A pushed COUNT is one
+  * stats-derived row ([[LokiCountReader]]).
+  */
+case class LokiReaderFactory() extends PartitionReaderFactory {
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new LokiCountReader(partition.asInstanceOf[LokiInputPartition])
 
-  /** Columnar decode for BOTH scan shapes — the reference streams Arrow
-    * batches end-to-end (scan.rs:200-213, batch 4096) and the row readers
-    * were the remaining connector CPU gap: the wire parquet decodes
-    * straight into column vectors (low-level column readers, no per-row
-    * Group materialization) and Spark consumes ColumnarBatches. The paged
-    * path (the 100 TB shape: unbounded scans page past the server cap)
-    * runs its held-back max-ts-run cursor over the decoded timestamp
-    * VECTOR — the emit range is always a page prefix, so completeness
-    * needs no per-row materialization (see [[LokiColumnarPagedReader]]).
-    * A pushed COUNT stays row-based (one stats-derived row).
-    */
   override def supportColumnarReads(partition: InputPartition): Boolean =
-    columnar && !partition.asInstanceOf[LokiInputPartition].countOnly
+    !partition.asInstanceOf[LokiInputPartition].countOnly
 
   override def createColumnarReader(
-      partition: InputPartition): PartitionReader[ColumnarBatch] = {
-    val p = partition.asInstanceOf[LokiInputPartition]
-    if (p.pageSize.isEmpty) new LokiColumnarPartitionReader(p)
-    else new LokiColumnarPagedReader(p)
-  }
-}
-
-/** Executor-side reader: HTTP range query(-ies), buffered body, parquet
-  * decode via the parquet-java Group API with column projection. Decode is
-  * INCREMENTAL — one record materialized at a time, row group by row group
-  * (the reference decodes in bounded batches the same way, scan.rs:200-213).
-  * Holding only the response bytes plus one row keeps the reader's memory
-  * bounded regardless of scan size; the earlier ArrayBuffer materialization
-  * held body bytes and every decoded InternalRow simultaneously.
-  *
-  * PAGINATION (`pageSize`, from the `query_limit` option): the reference
-  * issues ONE request with no `limit` param (scan.rs:113-115), and a real
-  * Loki then truncates at its server-side query_range default — silent
-  * row loss on any window bigger than ~100 entries. With a page size set,
-  * the reader walks the window in `direction=forward` pages. The cursor
-  * needs the timestamp column even when the projection pruned it, so the
-  * decode always requests it and simply doesn't emit it.
-  *
-  * SAME-NS COMPLETENESS: Loki's only cursor is the `start` timestamp
-  * (inclusive), so a page cut can land inside a run of rows sharing one
-  * identical ns. Advancing to maxTs+1 would silently drop the rest of
-  * that run (the round-9 boundary). Instead the reader never emits the
-  * trailing max-ts run of a FULL page: rows strictly below the page's max
-  * ts stream out, the max-ts run is held back and re-read by the next
-  * request at `start = maxTs` — no content-equality or server-tie-order
-  * assumption needed. The degenerate full page (every row at one ns,
-  * where re-requesting at the same limit would loop) emits nothing and
-  * retries the same cursor with a DOUBLED limit until the burst fits in
-  * one page — re-anchoring to the requested page size once the cursor
-  * advances, so payloads grow only while inside a burst; past the
-  * adaptive ceiling it fails loudly with the ns and the needed
-  * query_limit instead of dropping rows.
-  */
-class LokiPartitionReader(p: LokiInputPartition)
-  extends PartitionReader[InternalRow] {
-
-  private var parquetReader: ParquetFileReader = _
-
-  // defaults evaluated at execute time (p.effectiveWindow)
-  private lazy val rows: Iterator[InternalRow] = {
-    val (start, end) = p.effectiveWindow
-    p.pageSize match {
-      case None =>
-        val body = LokiHttp.queryRange(p.endpoint, p.logql, start, end, p.limit, p.direction)
-        if (body.isEmpty) Iterator.empty else decode(body)
-      case Some(ps) => pagedRows(start, end, ps)
-    }
-  }
-
-  private def pagedRows(start0: Long, end: Long, ps0: Int): Iterator[InternalRow] =
-    new Iterator[InternalRow] {
-      // adaptive-limit ceiling for single-ns bursts: generous (a burst this
-      // size is pathological data) but bounded, so a misbehaving server
-      // can't grow requests forever — and never above the server's own
-      // declared max_entries_limit (server_max_entries option): a request
-      // past that contract is either rejected loudly (real Loki) or
-      // silently clamped (middleware), and a clamped full page would make
-      // the drain test truncate the window (round-11 ADVICE)
-      private val maxPs =
-        p.serverMax.getOrElse(math.max(ps0, 1 << 20))
-      private var ps = math.min(ps0, maxPs)
-      private var cursor = start0
-      private var done = false      // emitted everything; no more fetches
-      private var drained = false   // server window exhausted (short page seen)
-      private var fetched = false
-      private var page: Iterator[InternalRow] = Iterator.empty
-      private var pageRows = 0
-      // rows cleared for emission (flushed below-max runs, or the final tail)
-      private val flushQ = scala.collection.mutable.Queue.empty[InternalRow]
-      // the current page's trailing run at its max ts — provisional until a
-      // higher ts supersedes it (flush) or the page proves short (flush) or
-      // full (discard: the next request re-reads it from cursor = heldTs)
-      private val held = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
-      private var heldTs = Long.MinValue
-
-      private def fetch(): Unit = {
-        close() // release the previous page's parquet reader
-        val body = LokiHttp.queryRange(
-          p.endpoint, p.logql, cursor, end, Some(ps), Some("forward"))
-        page = if (body.isEmpty) Iterator.empty else decode(body)
-        pageRows = 0
-        held.clear()
-        heldTs = Long.MinValue
-        fetched = true
-      }
-
-      override def hasNext: Boolean = {
-        while (flushQ.isEmpty && !done) {
-          if (!fetched) fetch() // first page
-          else if (page.hasNext) {
-            val r = page.next()
-            pageRows += 1
-            if (curTsNs > heldTs) {
-              // the held run is superseded by a later ts — it can no
-              // longer be cut by the page boundary, so it emits
-              flushQ ++= held
-              held.clear()
-              heldTs = curTsNs
-            } else if (curTsNs < heldTs) {
-              // forward-direction responses are ascending by contract; an
-              // out-of-order row would break the held-run completeness
-              // argument, so fail loudly rather than risk silent loss
-              throw new IllegalStateException(
-                s"Loki scan: out-of-order forward response (ts $curTsNs " +
-                s"after $heldTs) from ${p.endpoint}")
-            }
-            held += r
-          } else if (drained || pageRows < ps) {
-            // short/empty page: the window is exhausted — the trailing
-            // run cannot be cut, emit it
-            flushQ ++= held
-            held.clear()
-            drained = true
-            done = flushQ.isEmpty
-          } else if (heldTs <= cursor) {
-            // degenerate FULL page: every row at the cursor's own ns, so
-            // the cursor cannot advance. Re-requesting from the same
-            // cursor at the same limit would loop; emit nothing and retry
-            // with a doubled limit until the burst fits inside one
-            // (then-short) page. (A full page entirely at some LATER ns
-            // advances normally through the branch below.)
-            if (ps >= maxPs)
-              throw new IllegalStateException(
-                s"Loki scan: more than $ps entries share the nanosecond " +
-                s"timestamp $heldTs and the forward cursor cannot advance " +
-                "past it; raise the query_limit option above the largest " +
-                "same-timestamp burst" +
-                p.serverMax.fold("")(m => s" (adaptive growth is capped " +
-                  s"at server_max_entries=$m — a burst must fit strictly " +
-                  "inside one page to prove itself complete)"))
-            ps = math.min(ps.toLong * 2, maxPs.toLong).toInt
-            held.clear()
-            fetch()
-          } else {
-            // full page: rows below the max ts were flushed as they were
-            // superseded; the trailing max-ts run may have been cut by
-            // the page limit, so discard it and re-read from its ts
-            // (start is inclusive). Strict progress: the guard above
-            // ensures heldTs > cursor here. The limit re-anchors to the
-            // user's page size: a doubled limit exists only to swallow a
-            // single-ns burst, and keeping it for the rest of the window
-            // would grow every later payload past what query_limit asked
-            // for.
-            cursor = heldTs
-            ps = ps0
-            fetch()
-          }
-        }
-        if (done) close()
-        flushQ.nonEmpty
-      }
-
-      override def next(): InternalRow = {
-        if (!hasNext) throw new NoSuchElementException("exhausted Loki scan")
-        flushQ.dequeue()
-      }
-    }
-
-  private var current: InternalRow = _
-
-  override def next(): Boolean =
-    if (rows.hasNext) { current = rows.next(); true } else false
-
-  override def get(): InternalRow = current
-
-  // also reached on early termination (pushed LIMIT stops the scan mid-read)
-  override def close(): Unit =
-    if (parquetReader != null) { parquetReader.close(); parquetReader = null }
-
-  // the just-decoded row's raw ns timestamp — the pagination cursor
-  // source (updated in decode's iterator whether or not the projection
-  // includes the column)
-  private var curTsNs: Long = Long.MinValue
-
-  private def decode(body: Array[Byte]): Iterator[InternalRow] = {
-    parquetReader = ParquetFileReader.open(new ByteArrayInputFile(body))
-    val fileSchema = parquetReader.getFooter.getFileMetaData.getSchema
-    // projection: requested subset of the file schema, by column name
-    // (the ProjectionMask.roots analog, scan.rs:203-206). Paging needs
-    // the timestamp column for its cursor even when pruned from the
-    // output projection.
-    val wanted = p.requiredSchema.fieldNames
-    val decodeCols =
-      if (p.pageSize.isDefined && !wanted.contains("timestamp"))
-        wanted :+ "timestamp"
-      else wanted
-    val requested = new MessageType(fileSchema.getName,
-      decodeCols.map(n => fileSchema.getType(fileSchema.getFieldIndex(n))): _*)
-    val columnIO = new ColumnIOFactory().getColumnIO(requested, fileSchema)
-    new Iterator[InternalRow] {
-      private var recordReader: org.apache.parquet.io.RecordReader[Group] = _
-      private var remaining = 0L
-
-      private def advance(): Boolean = {
-        val pages = parquetReader.readNextRowGroup()
-        if (pages == null) {
-          close(); false
-        } else {
-          recordReader = columnIO.getRecordReader(pages, new GroupRecordConverter(requested))
-          remaining = pages.getRowCount
-          if (remaining == 0) advance() else true
-        }
-      }
-
-      override def hasNext: Boolean = remaining > 0 || (parquetReader != null && advance())
-
-      override def next(): InternalRow = {
-        if (!hasNext) throw new NoSuchElementException("exhausted Loki scan")
-        remaining -= 1
-        val g = recordReader.read()
-        if (p.pageSize.isDefined) curTsNs = g.getLong("timestamp", 0)
-        toRow(g, wanted)
-      }
-    }
-  }
-
-  private def toRow(g: Group, wanted: Array[String]): InternalRow = {
-    val values = new Array[Any](wanted.length)
-    var i = 0
-    while (i < wanted.length) {
-      values(i) = wanted(i) match {
-        case "timestamp" =>
-          // Loki ns → Spark µs, truncating (§7.4(b))
-          java.lang.Long.valueOf(g.getLong("timestamp", 0) / 1000L)
-        case "labels" => mapColumn(g, "labels")
-        case "metadata" => mapColumn(g, "metadata")
-        case "line" =>
-          UTF8String.fromBytes(g.getBinary("line", 0).getBytes)
-        case other =>
-          throw new IllegalStateException(s"unexpected column $other")
-      }
-      i += 1
-    }
-    new GenericInternalRow(values)
-  }
-
-  /** One `(MAP) { repeated key_value {key,value} }` column — labels and
-    * (round 16) structured metadata share the wire shape.
-    */
-  private def mapColumn(g: Group, name: String): ArrayBasedMapData = {
-    val grp = g.getGroup(name, 0)
-    val n = grp.getFieldRepetitionCount("key_value")
-    val keys = new Array[Any](n)
-    val vals = new Array[Any](n)
-    var j = 0
-    while (j < n) {
-      val kv = grp.getGroup("key_value", j)
-      keys(j) = UTF8String.fromBytes(kv.getBinary("key", 0).getBytes)
-      vals(j) = UTF8String.fromBytes(kv.getBinary("value", 0).getBytes)
-      j += 1
-    }
-    ArrayBasedMapData(keys, vals)
-  }
+      partition: InputPartition): PartitionReader[ColumnarBatch] =
+    new LokiColumnarReader(partition.asInstanceOf[LokiInputPartition])
 }
 
 /** COUNT(*) answered by ONE `index/stats` request — the scan never runs
   * (see [[LokiOptions.pushCount]] for the accuracy contract). Time
-  * defaults materialize executor-side exactly like the row reader's.
+  * defaults materialize executor-side exactly like the scan reader's.
   */
 class LokiCountReader(p: LokiInputPartition)
   extends PartitionReader[InternalRow] {
@@ -1022,339 +751,82 @@ class LokiCountReader(p: LokiInputPartition)
   override def close(): Unit = ()
 }
 
-/** Columnar decode of the wire parquet for the single-request path: the
-  * response's column chunks stream straight into OnHeapColumnVectors via
-  * parquet's low-level column readers — no per-row Group materialization,
-  * no per-row InternalRow — and Spark consumes 4096-row ColumnarBatches
-  * (the reference's batch size, scan.rs:200-213). The labels map
-  * reconstructs from the key column's repetition levels (rep 0 starts a
-  * row, rep 1 continues; definition 0 is an empty map), with the value
-  * column consumed in lockstep — the two columns share one repetition
-  * structure by schema.
+/** The scan reader. Each response page decodes straight into column
+  * vectors through parquet's low-level column readers — no per-row Group
+  * or InternalRow — and leaves as one ColumnarBatch. Memory is bounded by
+  * one response page: its body bytes plus its decoded vectors.
+  *
+  * A SINGLE REQUEST (no `pageSize`: a pushed LIMIT, or the
+  * reference-parity unlimited read, scan.rs:113-115) is a page that is
+  * never cut, sent with the partition's `limit` and `direction`.
+  *
+  * PAGES (`pageSize`, from `query_limit` or `server_max_entries`): a real
+  * Loki truncates an unlimited request at its server default, so the
+  * reader walks the window in `direction=forward` pages. Loki's only
+  * cursor is the inclusive `start`, and a page cut can land inside a run
+  * of rows sharing one ns — advancing to maxTs+1 would drop the rest of
+  * that run. So a FULL page emits only its prefix strictly below the
+  * page's max ts, and the next request re-reads the max-ts run from
+  * `start = maxTs`; a short page emits whole (the window is exhausted).
+  * A full page entirely at the cursor's own ns cannot advance the cursor:
+  * the reader retries it with a doubled limit until the burst fits in one
+  * page, re-anchors to the page size once the cursor moves, and fails
+  * loudly past the ceiling instead of dropping rows.
+  *
+  * The timestamp column is decoded only when projected or paged (the
+  * cursor needs it even when the projection pruned it), so a bare-count
+  * single request decodes nothing and emits a column-less batch. Ascending
+  * order, which the held-run cut rests on, is checked on forward pages
+  * only: a backward LIMIT response is descending by contract.
   */
-class LokiColumnarPartitionReader(p: LokiInputPartition)
+class LokiColumnarReader(p: LokiInputPartition)
   extends PartitionReader[ColumnarBatch] {
 
   import org.apache.parquet.column.ColumnReader
   import org.apache.parquet.column.impl.ColumnReadStoreImpl
-
-  private val BatchRows = 4096
-  private val wanted = p.requiredSchema.fieldNames
-
-  private var parquetReader: ParquetFileReader = _
-  private var fileSchema: MessageType = _
-  private var requested: MessageType = _
-  private var createdBy: String = _
-  private var opened = false
-  private var exhausted = false
-
-  // current row group state
-  private var groupRemaining = 0L
-  private var tsReader: ColumnReader = _
-  private var keyReader: ColumnReader = _
-  private var valReader: ColumnReader = _
-  private var lineReader: ColumnReader = _
-  private var keyValsConsumed = 0L
-  private var keyValsTotal = 0L
-
-  private var batch: ColumnarBatch = _
-
-  private def open(): Unit = {
-    val (start, end) = p.effectiveWindow
-    val body = LokiHttp.queryRange(p.endpoint, p.logql, start, end, p.limit, p.direction)
-    if (body.nonEmpty) {
-      parquetReader = ParquetFileReader.open(new ByteArrayInputFile(body))
-      val md = parquetReader.getFooter.getFileMetaData
-      fileSchema = md.getSchema
-      createdBy = md.getCreatedBy
-      requested =
-        if (wanted.isEmpty) null // bare count: row counts only, no decode
-        else new MessageType(fileSchema.getName,
-          wanted.map(n => fileSchema.getType(fileSchema.getFieldIndex(n))): _*)
-    } else exhausted = true
-    opened = true
-  }
-
-  private def advanceRowGroup(): Boolean = {
-    if (parquetReader == null) return false
-    val pages = parquetReader.readNextRowGroup()
-    if (pages == null) { exhausted = true; false }
-    else if (pages.getRowCount == 0) advanceRowGroup()
-    else {
-      groupRemaining = pages.getRowCount
-      if (requested != null) {
-        val store = new ColumnReadStoreImpl(pages,
-          new GroupRecordConverter(requested).getRootConverter, requested,
-          createdBy)
-        def rd(path: String*): ColumnReader =
-          store.getColumnReader(requested.getColumnDescription(path.toArray))
-        tsReader = if (wanted.contains("timestamp")) rd("timestamp") else null
-        lineReader = if (wanted.contains("line")) rd("line") else null
-        if (wanted.contains("labels")) {
-          keyReader = rd("labels", "key_value", "key")
-          valReader = rd("labels", "key_value", "value")
-          keyValsConsumed = 0L
-          keyValsTotal = keyReader.getTotalValueCount
-        } else { keyReader = null; valReader = null }
-      }
-      true
-    }
-  }
-
-  override def next(): Boolean = {
-    if (!opened) open()
-    if (batch != null) { batch.close(); batch = null }
-    while (groupRemaining == 0 && !exhausted) {
-      if (!advanceRowGroup()) return false
-    }
-    if (exhausted && groupRemaining == 0) return false
-    val n = math.min(groupRemaining, BatchRows.toLong).toInt
-    import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-    val vecs = OnHeapColumnVector.allocateColumns(n, p.requiredSchema)
-    var c = 0
-    while (c < wanted.length) {
-      val v = vecs(c)
-      wanted(c) match {
-        case "timestamp" =>
-          var r = 0
-          while (r < n) {
-            // Loki ns → Spark µs, truncating (§7.4(b)) — the row
-            // reader's rule
-            v.putLong(r, tsReader.getLong / 1000L)
-            tsReader.consume()
-            r += 1
-          }
-        case "line" =>
-          var r = 0
-          while (r < n) {
-            val b = lineReader.getBinary.getBytes
-            v.putByteArray(r, b, 0, b.length)
-            lineReader.consume()
-            r += 1
-          }
-        case "labels" =>
-          val keys = v.getChild(0)
-            .asInstanceOf[org.apache.spark.sql.execution.vectorized.WritableColumnVector]
-          val vals = v.getChild(1)
-            .asInstanceOf[org.apache.spark.sql.execution.vectorized.WritableColumnVector]
-          var offset = 0
-          var r = 0
-          while (r < n) {
-            var cnt = 0
-            if (keyReader.getCurrentDefinitionLevel == 0) {
-              // empty map: one (def 0) placeholder triplet, no value
-              keyReader.consume(); valReader.consume()
-              keyValsConsumed += 1
-            } else {
-              var more = true
-              while (more) {
-                val kb = keyReader.getBinary.getBytes
-                val vb = valReader.getBinary.getBytes
-                keys.appendByteArray(kb, 0, kb.length)
-                vals.appendByteArray(vb, 0, vb.length)
-                keyReader.consume(); valReader.consume()
-                keyValsConsumed += 1
-                cnt += 1
-                more = keyValsConsumed < keyValsTotal &&
-                  keyReader.getCurrentRepetitionLevel == 1
-              }
-            }
-            v.putArray(r, offset, cnt)
-            offset += cnt
-            r += 1
-          }
-        case other =>
-          throw new IllegalStateException(s"unexpected column $other")
-      }
-      c += 1
-    }
-    batch = new ColumnarBatch(vecs.map(_.asInstanceOf[
-      org.apache.spark.sql.vectorized.ColumnVector]), n)
-    groupRemaining -= n
-    true
-  }
-
-  override def get(): ColumnarBatch = batch
-
-  override def close(): Unit = {
-    if (batch != null) { batch.close(); batch = null }
-    if (parquetReader != null) { parquetReader.close(); parquetReader = null }
-  }
-}
-
-/** Columnar decode for the PAGED path — the 100 TB scan shape (an
-  * unbounded scan against a capped server walks the window in forward
-  * pages). The row pager's held-back max-ts-run completeness argument
-  * maps onto vectors directly: forward pages are ts-ascending, so the
-  * rows that are SAFE to emit from a full page are exactly the prefix
-  * strictly below the page's max timestamp — the trailing max-ts run
-  * (which the page limit may have cut mid-run) is never emitted and the
-  * next request re-reads it from `start = maxTs` (inclusive). A page
-  * therefore decodes once into column vectors (the single-request
-  * reader's wire-decode shape, no per-row Group/InternalRow
-  * materialization) and emits ONE ColumnarBatch over the safe prefix;
-  * the held-back tail is just the rows past the batch's numRows — no
-  * copy, no row materialization. Short pages (window exhausted) emit
-  * whole; the degenerate full page entirely at the cursor's own ns
-  * doubles the limit exactly like the row pager (same loud failure past
-  * the server cap). The timestamp column is always decoded for the
-  * cursor — into a raw-ns array, never into the output vectors unless
-  * projected.
-  */
-class LokiColumnarPagedReader(p: LokiInputPartition)
-  extends PartitionReader[ColumnarBatch] {
-
-  import org.apache.parquet.column.impl.ColumnReadStoreImpl
-  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
+  import org.apache.spark.sql.execution.vectorized.{OnHeapColumnVector, WritableColumnVector}
+  import org.apache.spark.sql.vectorized.ColumnVector
 
   private val wanted = p.requiredSchema.fieldNames
-
-  private val maxPs = p.serverMax.getOrElse(math.max(p.pageSize.get, 1 << 20))
-  private var ps = math.min(p.pageSize.get, maxPs)
-  private lazy val window = p.effectiveWindow
-  private var cursor = Long.MinValue // initialized on first fetch
-  private var started = false
+  private val emitTs = wanted.indexOf("timestamp")
+  private val paged = p.pageSize.isDefined
+  // adaptive-limit ceiling for single-ns bursts: generous (a burst this
+  // size is pathological data) but bounded, and never above the server's
+  // declared max_entries_limit — a request past it is either rejected
+  // (real Loki) or silently clamped (middleware), and a clamped full page
+  // would pass for a complete one
+  private val maxPs =
+    p.pageSize.fold(0)(ps => p.serverMax.getOrElse(math.max(ps, 1 << 20)))
+  private val ps0 = p.pageSize.fold(0)(math.min(_, maxPs))
+  private var ps = ps0
+  // defaults materialize at execute time (p.effectiveWindow)
+  private val (start, end) = p.effectiveWindow
+  private var cursor = start
   private var done = false
+  private var vecs: Array[OnHeapColumnVector] = _
+  // the decoded page's raw ns timestamps, paged reads only: the cursor
+  private var tsNs: Array[Long] = _
   private var batch: ColumnarBatch = _
 
-  /** Decode one wire-parquet page body fully into column vectors +
-    * the raw-ns timestamp array (cursor source). Enforces the
-    * forward-ascending contract the held-run argument rests on.
-    */
-  private def decodePage(
-      body: Array[Byte]): (Array[OnHeapColumnVector], Array[Long], Int) = {
-    val reader = ParquetFileReader.open(new ByteArrayInputFile(body))
-    try {
-      val md = reader.getFooter.getFileMetaData
-      val fileSchema = md.getSchema
-      val total = reader.getRecordCount.toInt
-      val tsNs = new Array[Long](total)
-      val vecs = OnHeapColumnVector.allocateColumns(math.max(total, 1),
-        p.requiredSchema)
-      // decode needs the timestamp column for the cursor even when the
-      // projection pruned it (the row pager's rule)
-      val decodeCols =
-        if (!wanted.contains("timestamp")) wanted :+ "timestamp" else wanted
-      val requested = new MessageType(fileSchema.getName,
-        decodeCols.map(n => fileSchema.getType(fileSchema.getFieldIndex(n))): _*)
-      var rowBase = 0
-      var mapOffset = 0
-      var pages = reader.readNextRowGroup()
-      while (pages != null) {
-        val n = pages.getRowCount.toInt
-        if (n > 0) {
-          val store = new ColumnReadStoreImpl(pages,
-            new GroupRecordConverter(requested).getRootConverter, requested,
-            md.getCreatedBy)
-          def rd(path: String*) =
-            store.getColumnReader(requested.getColumnDescription(path.toArray))
-          val tsReader = rd("timestamp")
-          val emitTs = wanted.indexOf("timestamp")
-          var r = 0
-          while (r < n) {
-            val ns = tsReader.getLong
-            tsReader.consume()
-            tsNs(rowBase + r) = ns
-            if (rowBase + r > 0 && ns < tsNs(rowBase + r - 1))
-              throw new IllegalStateException(
-                s"Loki scan: out-of-order forward response (ts $ns after " +
-                s"${tsNs(rowBase + r - 1)}) from ${p.endpoint}")
-            // Loki ns → Spark µs, truncating (§7.4(b))
-            if (emitTs >= 0) vecs(emitTs).putLong(rowBase + r, ns / 1000L)
-            r += 1
-          }
-          val emitLine = wanted.indexOf("line")
-          if (emitLine >= 0) {
-            val lineReader = rd("line")
-            r = 0
-            while (r < n) {
-              val b = lineReader.getBinary.getBytes
-              vecs(emitLine).putByteArray(rowBase + r, b, 0, b.length)
-              lineReader.consume()
-              r += 1
-            }
-          }
-          val emitLabels = wanted.indexOf("labels")
-          if (emitLabels >= 0) {
-            val keyReader = rd("labels", "key_value", "key")
-            val valReader = rd("labels", "key_value", "value")
-            val keys = vecs(emitLabels).getChild(0).asInstanceOf[
-              org.apache.spark.sql.execution.vectorized.WritableColumnVector]
-            val vals = vecs(emitLabels).getChild(1).asInstanceOf[
-              org.apache.spark.sql.execution.vectorized.WritableColumnVector]
-            val kvTotal = keyReader.getTotalValueCount
-            var consumed = 0L
-            r = 0
-            while (r < n) {
-              var cnt = 0
-              if (keyReader.getCurrentDefinitionLevel == 0) {
-                keyReader.consume(); valReader.consume()
-                consumed += 1
-              } else {
-                var more = true
-                while (more) {
-                  val kb = keyReader.getBinary.getBytes
-                  val vb = valReader.getBinary.getBytes
-                  keys.appendByteArray(kb, 0, kb.length)
-                  vals.appendByteArray(vb, 0, vb.length)
-                  keyReader.consume(); valReader.consume()
-                  consumed += 1
-                  cnt += 1
-                  more = consumed < kvTotal &&
-                    keyReader.getCurrentRepetitionLevel == 1
-                }
-              }
-              vecs(emitLabels).putArray(rowBase + r, mapOffset, cnt)
-              mapOffset += cnt
-              r += 1
-            }
-          }
-          rowBase += n
-        }
-        pages = reader.readNextRowGroup()
-      }
-      (vecs, tsNs, rowBase)
-    } finally reader.close()
-  }
-
   override def next(): Boolean = {
-    if (batch != null) { batch.close(); batch = null }
-    if (!started) { cursor = window._1; started = true }
     while (!done) {
-      val body = LokiHttp.queryRange(
-        p.endpoint, p.logql, cursor, window._2, Some(ps), Some("forward"))
-      if (body.isEmpty) { done = true; return false }
-      val (vecs, tsNs, rows) = decodePage(body)
-      if (rows == 0) { done = true; return false }
-      if (rows < ps) {
-        // short page: the window is exhausted — nothing can be cut
+      close() // release the previous page
+      val body = LokiHttp.queryRange(p.endpoint, p.logql, cursor, end,
+        if (paged) Some(ps) else p.limit,
+        if (paged) Some("forward") else p.direction)
+      val rows = if (body.isEmpty) 0 else decode(body)
+      if (!paged || rows < ps) {
+        // a single request or a short page: nothing was cut
         done = true
-        batch = new ColumnarBatch(vecs.map(_.asInstanceOf[
-          org.apache.spark.sql.vectorized.ColumnVector]), rows)
-        return true
+        return emit(rows)
       }
-      // full page: the trailing max-ts run may be cut mid-run by the
-      // page limit — emit only the prefix strictly below maxTs
       val maxTs = tsNs(rows - 1)
       var cut = rows - 1
       while (cut > 0 && tsNs(cut - 1) == maxTs) cut -= 1
-      if (cut > 0) {
+      if (cut > 0 || maxTs > cursor) {
         cursor = maxTs
-        ps = p.pageSize.get // re-anchor after any burst doubling
-        batch = new ColumnarBatch(vecs.map(_.asInstanceOf[
-          org.apache.spark.sql.vectorized.ColumnVector]), cut)
-        return true
-      }
-      // whole page at ONE ns
-      vecs.foreach(_.close())
-      if (maxTs > cursor) {
-        // ...at a LATER ns: cursor advances, re-read the run whole
-        cursor = maxTs
-        ps = p.pageSize.get
+        ps = ps0 // re-anchor after any burst doubling
       } else {
-        // ...at the cursor's own ns: the cursor cannot advance — retry
-        // with a doubled limit until the burst fits in one (then-short)
-        // page; past the ceiling fail loudly instead of dropping rows
         if (ps >= maxPs)
           throw new IllegalStateException(
             s"Loki scan: more than $ps entries share the nanosecond " +
@@ -1366,12 +838,132 @@ class LokiColumnarPagedReader(p: LokiInputPartition)
               "inside one page to prove itself complete)"))
         ps = math.min(ps.toLong * 2, maxPs.toLong).toInt
       }
+      if (cut > 0) return emit(cut)
     }
+    close()
     false
+  }
+
+  private def emit(rows: Int): Boolean = {
+    if (rows > 0) batch = new ColumnarBatch(vecs.map(v => v: ColumnVector), rows)
+    rows > 0
   }
 
   override def get(): ColumnarBatch = batch
 
-  override def close(): Unit =
-    if (batch != null) { batch.close(); batch = null }
+  override def close(): Unit = {
+    if (vecs != null) vecs.foreach(_.close())
+    vecs = null
+    batch = null
+  }
+
+  /** Decode one response body into `vecs` (and `tsNs` when paged);
+    * returns its row count.
+    */
+  private def decode(body: Array[Byte]): Int = {
+    val reader = ParquetFileReader.open(new ByteArrayInputFile(body))
+    try {
+      val md = reader.getFooter.getFileMetaData
+      val fileSchema = md.getSchema
+      val total = reader.getRecordCount.toInt
+      vecs = OnHeapColumnVector.allocateColumns(math.max(total, 1), p.requiredSchema)
+      tsNs = if (paged) new Array[Long](total) else null
+      val cols = if (paged && emitTs < 0) wanted :+ "timestamp" else wanted
+      if (cols.nonEmpty) {
+        // projection: the requested subset of the file schema, by column
+        // name (the ProjectionMask.roots analog, scan.rs:203-206)
+        val requested = new MessageType(fileSchema.getName,
+          cols.map(n => fileSchema.getType(fileSchema.getFieldIndex(n))): _*)
+        val converter = new GroupRecordConverter(requested).getRootConverter
+        var row = 0
+        var pages = reader.readNextRowGroup()
+        while (pages != null) {
+          val n = pages.getRowCount.toInt
+          if (n > 0) {
+            val store = new ColumnReadStoreImpl(pages, converter, requested,
+              md.getCreatedBy)
+            def rd(path: String*): ColumnReader =
+              store.getColumnReader(requested.getColumnDescription(path.toArray))
+            if (paged || emitTs >= 0) timestamps(rd("timestamp"), row, n)
+            var c = 0
+            while (c < wanted.length) {
+              wanted(c) match {
+                case "timestamp" => // decoded above
+                case "line" => lines(rd("line"), vecs(c), row, n)
+                case m => // labels, metadata: one wire shape
+                  maps(rd(m, "key_value", "key"), rd(m, "key_value", "value"),
+                    vecs(c), row, n)
+              }
+              c += 1
+            }
+            row += n
+          }
+          pages = reader.readNextRowGroup()
+        }
+      }
+      total
+    } finally reader.close()
+  }
+
+  private def timestamps(r: ColumnReader, row: Int, n: Int): Unit = {
+    var i = row
+    while (i < row + n) {
+      val ns = r.getLong
+      r.consume()
+      if (paged) {
+        if (i > 0 && ns < tsNs(i - 1))
+          throw new IllegalStateException(
+            s"Loki scan: out-of-order forward response (ts $ns after " +
+            s"${tsNs(i - 1)}) from ${p.endpoint}")
+        tsNs(i) = ns
+      }
+      // Loki ns → Spark µs, truncating (§7.4(b))
+      if (emitTs >= 0) vecs(emitTs).putLong(i, ns / 1000L)
+      i += 1
+    }
+  }
+
+  private def lines(r: ColumnReader, v: WritableColumnVector, row: Int, n: Int): Unit = {
+    var i = row
+    while (i < row + n) {
+      val b = r.getBinary.getBytes
+      v.putByteArray(i, b, 0, b.length)
+      r.consume()
+      i += 1
+    }
+  }
+
+  /** One `(MAP) { repeated key_value {key, value} }` column. Repetition
+    * level 0 starts a row and 1 continues it; definition level 0 is an
+    * empty map's placeholder. The value column shares the key column's
+    * repetition structure, so the two are consumed in lockstep.
+    */
+  private def maps(keyReader: ColumnReader, valReader: ColumnReader,
+      v: WritableColumnVector, row: Int, n: Int): Unit = {
+    val keys = v.getChild(0)
+    val vals = v.getChild(1)
+    val total = keyReader.getTotalValueCount
+    var consumed = 0L
+    var i = row
+    while (i < row + n) {
+      val offset = keys.getElementsAppended
+      if (keyReader.getCurrentDefinitionLevel == 0) {
+        keyReader.consume(); valReader.consume()
+        consumed += 1
+      } else {
+        var more = true
+        while (more) {
+          val kb = keyReader.getBinary.getBytes
+          val vb = valReader.getBinary.getBytes
+          keys.appendByteArray(kb, 0, kb.length)
+          vals.appendByteArray(vb, 0, vb.length)
+          keyReader.consume(); valReader.consume()
+          consumed += 1
+          more = consumed < total && keyReader.getCurrentRepetitionLevel == 1
+        }
+      }
+      v.putArray(i, offset, keys.getElementsAppended - offset)
+      i += 1
+    }
+  }
 }

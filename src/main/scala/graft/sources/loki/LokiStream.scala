@@ -215,7 +215,7 @@ class LokiMicroBatchStream(scan: LokiScan)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    LokiReaderFactory(opts.columnar)
+    LokiReaderFactory()
 
   // offsets are self-contained event-time positions; Loki holds no
   // consumer state to release

@@ -147,15 +147,15 @@ final class LokiStubServer {
     sortedCache
   }
 
-  /** Simulated per-request RTT for index/stats probes (ms), for the
-    * SliceSmoke real-endpoint-latency leg: plan-time probe latency is the
+  /** Simulated per-request RTT for index/stats probes (ms), for
+    * real-endpoint-latency runs: plan-time probe latency is the
     * thing the budgeted parallel frontier exists to bound, and a 0-RTT
     * loopback stub can't exercise it.
     */
   @volatile var statsLatencyMs: Long = 0L
 
-  /** Simulated per-request RTT for query_range (ms) — the SliceSmoke
-    * paging leg: a paged scan's wall is pages × RTT per slice, which is
+  /** Simulated per-request RTT for query_range (ms), for paging runs:
+    * a paged scan's wall is pages × RTT per slice, which is
     * what `partitions=N` divides; a 0-RTT loopback hides it.
     */
   @volatile var queryLatencyMs: Long = 0L

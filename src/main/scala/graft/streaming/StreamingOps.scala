@@ -557,7 +557,7 @@ object StreamingOps {
       // long-lived query to its state volume: on a bounded drain each
       // state store pays its own checkpoint, commit, and maintenance
       // task, and that per-store tax beats parallelism at gate-scale
-      // state — the round-8 StreamTuneSmoke sweep measured the heavy-3
+      // state — the round-8 stream-tuning sweep measured the heavy-3
       // family at 5.6 s with 1 state partition vs 6.1 s at 2/4, and
       // RocksDBStateStoreProvider at 7.1-8.1 s (native DB open/commit
       // per partition per batch is pure overhead when state is tiny;

@@ -146,7 +146,7 @@ class LogQLSpec extends AnyFunSuite {
       "push_count" -> "true", "push_metric" -> "false",
       "push_parsers" -> "false",
       "report_statistics" -> "true",
-      "group_streams" -> "true", "columnar" -> "false",
+      "group_streams" -> "true",
       "structured_metadata" -> "true",
       "stream_start_ns" -> "123", "stream_end_ns" -> "456",
       "stream_lag_ms" -> "11", "max_rows_per_batch" -> "500",
@@ -157,7 +157,7 @@ class LogQLSpec extends AnyFunSuite {
       s"round trip drifted:\n${LokiOptions.from(full.toMap)}\nvs\n$full")
     // every case-class field must be representable: the field count is
     // pinned so adding a field forces this test (and toMap) to be updated
-    assert(full.productArity == 28,
+    assert(full.productArity == 27,
       "LokiOptions gained/lost a field — update toMap AND this round trip")
     // direction is validated at option time
     assertThrows[IllegalArgumentException](

@@ -48,52 +48,59 @@ class LokiConnectorSpec extends SparkTestBase with BeforeAndAfterAll {
       s"{$ls} ${r.getAs[String]("line")}"
     }.sorted
 
-  test("both scan shapes decode columnar; columnar=false forces the row path") {
+  /** (line, labels, metadata) per row, sorted by line — the relation a
+    * `structured_metadata=true` scan must return for seeded rows.
+    */
+  private def relation(df: DataFrame): Seq[(String, Map[String, String], Map[String, String])] =
+    df.select("line", "labels", "metadata").collect().toSeq.map { r =>
+      (r.getString(0), r.getMap[String, String](1).toMap,
+        r.getMap[String, String](2).toMap)
+    }.sortBy(_._1)
+
+  test("every scan shape decodes columnar, structured metadata included") {
     // the reference streams Arrow batches end-to-end (scan.rs:200-213);
-    // both the single-request path and (round 12) the paged path decode
-    // wire parquet straight into column vectors, so their plans must
-    // carry the ColumnarToRow transition. columnar=false is the escape
-    // hatch that pins the row readers for differential testing.
-    val colPlan = lokiDf().queryExecution.executedPlan.toString
-    assert(colPlan.contains("ColumnarToRow"),
-      s"single-request scan must be columnar:\n$colPlan")
-    val pagedPlan = spark.read.format("loki")
-      .option("endpoint", stub.endpoint)
-      .option("default_label", "app")
-      .option("query_limit", "100")
-      .load().queryExecution.executedPlan.toString
-    assert(pagedPlan.contains("ColumnarToRow"),
-      s"paged scan must be columnar too:\n$pagedPlan")
-    val rowPlan = spark.read.format("loki")
-      .option("endpoint", stub.endpoint)
-      .option("default_label", "app")
-      .option("columnar", "false")
-      .load().queryExecution.executedPlan.toString
-    assert(!rowPlan.contains("ColumnarToRow"),
-      s"columnar=false must force the row reader:\n$rowPlan")
-    // all decode paths agree on the relation, map column included
+    // the single-request and paged shapes both decode wire parquet
+    // straight into column vectors, with or without the metadata column,
+    // so their plans must carry the ColumnarToRow transition
+    def plan(opts: Map[String, String]): String = {
+      val r = spark.read.format("loki")
+        .option("endpoint", stub.endpoint)
+        .option("default_label", "app")
+      opts.foreach { case (k, v) => r.option(k, v) }
+      r.load().queryExecution.executedPlan.toString
+    }
+    for (opts <- Seq(Map.empty[String, String],
+        Map("query_limit" -> "100"),
+        Map("structured_metadata" -> "true"),
+        Map("structured_metadata" -> "true", "query_limit" -> "100"))) {
+      val p = plan(opts)
+      assert(p.contains("ColumnarToRow"), s"opts=$opts must scan columnar:\n$p")
+    }
     val want = Seq(
       "{app=my-app1,detected_level=unknown,service_name=my-app1} this is aaa log",
       "{app=my-app2,detected_level=unknown,service_name=my-app2} this is bbb log")
     assert(golden(lokiDf()) == want)
-    assert(golden(spark.read.format("loki")
-      .option("endpoint", stub.endpoint).option("default_label", "app")
-      .option("columnar", "false").load()) == want)
   }
 
   test("both decode paths are complete across multiple wire row groups") {
     // real Loki responses to big windows span several parquet row groups;
-    // the default test stub writes ONE, leaving the readers' row-group
+    // the default test stub writes ONE, leaving the reader's row-group
     // advance unexercised. Force tiny row groups and drain a 5k-row
-    // response through the columnar (single-request) and row (paged)
-    // paths — both must return the corpus exactly once.
+    // response through the single-request and paged (query_limit) shapes
+    // — both must return the corpus exactly once, label and metadata
+    // maps intact across group and page boundaries.
     val rgStub = new LokiStubServer
     rgStub.start()
     rgStub.rowGroupBytes = 8 * 1024 // ~dozens of rows per group
     try {
       val base = 1704067200000000000L
-      rgStub.seed((0 until 5000).map(i =>
-        rgStub.LogRow(base + i * 1000000000L, Map("app" -> "rg"), s"row-$i")))
+      // every third row carries no metadata (the classic-entry shape)
+      val seeded = (0 until 5000).map(i =>
+        rgStub.LogRow(base + i * 1000000000L,
+          Map("app" -> "rg", "pod" -> s"p${i % 7}"), s"row-$i",
+          if (i % 3 == 0) Map.empty[String, String]
+          else Map("trace" -> s"t$i", "span" -> s"s${i % 5}")))
+      rgStub.seed(seeded)
       def scan(opts: Map[String, String]) = {
         val r = spark.read.format("loki")
           .option("endpoint", rgStub.endpoint)
@@ -103,56 +110,45 @@ class LokiConnectorSpec extends SparkTestBase with BeforeAndAfterAll {
           col("timestamp") >= lit("2024-01-01 00:00:00").cast("timestamp") &&
           col("timestamp") < lit("2024-02-01 00:00:00").cast("timestamp"))
       }
-      val expected = (0 until 5000).map(i => s"row-$i").sorted
-      val viaColumnar = scan(Map.empty)
-      assert(viaColumnar.queryExecution.executedPlan.toString
-        .contains("ColumnarToRow"))
-      assert(viaColumnar.select("line").collect().map(_.getString(0))
-        .sorted.toSeq == expected, "columnar path dropped/duplicated rows")
-      // labels decode across group boundaries too
-      assert(viaColumnar.select(map_keys(col("labels")))
-        .collect().forall(_.getSeq[String](0).contains("app")))
-      val viaPaged = scan(Map("query_limit" -> "700"))
-        .select("line").collect().map(_.getString(0)).sorted.toSeq
-      assert(viaPaged == expected, "paged path dropped/duplicated rows")
-      // the ROW readers (columnar=false escape hatch) must agree on the
-      // same multi-row-group corpus, both shapes
-      val viaRow = scan(Map("columnar" -> "false"))
-        .select("line").collect().map(_.getString(0)).sorted.toSeq
-      assert(viaRow == expected, "row path dropped/duplicated rows")
-      val viaRowPaged = scan(Map("columnar" -> "false", "query_limit" -> "700"))
-        .select("line").collect().map(_.getString(0)).sorted.toSeq
-      assert(viaRowPaged == expected, "row paged path dropped/duplicated rows")
-      // labels decode across page AND group boundaries on the columnar
-      // paged path too
-      assert(scan(Map("query_limit" -> "700"))
-        .select(map_keys(col("labels")))
-        .collect().forall(_.getSeq[String](0).contains("app")))
+      val expected = seeded.map(r => (r.line, r.labels, r.metadata)).sortBy(_._1)
+      for (shape <- Seq(Map.empty[String, String], Map("query_limit" -> "700"))) {
+        val lines = scan(shape).select("line").collect().map(_.getString(0))
+          .sorted.toSeq
+        assert(lines == expected.map(_._1).sorted,
+          s"opts=$shape dropped/duplicated rows")
+        val got = relation(scan(shape + ("structured_metadata" -> "true")))
+        assert(got == expected, s"opts=$shape: maps differ across row groups")
+      }
     } finally rgStub.stop()
   }
 
   test("wire parquet conformance matrix: codecs x dictionary x page version, all reader paths") {
     // a real `frontend.support_parquet_encoding` Loki picks its own
     // compression codec, dictionary policy, and data-page version; the
-    // readers must accept the whole matrix (the reference inherits the
+    // reader must accept the whole matrix (the reference inherits the
     // same contract from ParquetRecordBatchStreamBuilder,
-    // scan.rs:200-213). Every combination drains through all four reader
-    // paths — {columnar, row} x {single-request, paged} — over a
-    // multi-row-group response, against the same golden relation.
+    // scan.rs:200-213). Every combination drains through both read
+    // shapes — single request and query_limit paged — over a
+    // multi-row-group response, against the same golden relation,
+    // label and metadata maps included.
     import org.apache.parquet.hadoop.metadata.CompressionCodecName._
     val mStub = new LokiStubServer
     mStub.start()
     mStub.rowGroupBytes = 4 * 1024 // force several row groups per page
     try {
       val base = 1704067200000000000L
-      mStub.seed((0 until 800).map(i =>
+      // every fourth row carries no metadata (the classic-entry shape)
+      val seeded = (0 until 800).map(i =>
         mStub.LogRow(base + i * 1000000000L,
-          Map("app" -> s"a${i % 3}", "k" -> "v"), s"row-$i")))
-      val expected = (0 until 800).map(i => s"row-$i").sorted
+          Map("app" -> s"a${i % 3}", "k" -> "v"), s"row-$i",
+          if (i % 4 == 0) Map.empty[String, String]
+          else Map("trace" -> s"t${i % 9}")))
+      val expected = seeded.map(r => (r.line, r.labels, r.metadata)).sortBy(_._1)
       def scan(opts: Map[String, String]) = {
         val r = spark.read.format("loki")
           .option("endpoint", mStub.endpoint)
           .option("default_label", "app")
+          .option("structured_metadata", "true")
         opts.foreach { case (k, v) => r.option(k, v) }
         r.load().filter(
           col("timestamp") >= lit("2024-01-01 00:00:00").cast("timestamp") &&
@@ -167,23 +163,12 @@ class LokiConnectorSpec extends SparkTestBase with BeforeAndAfterAll {
         mStub.wireDictionary = dict
         mStub.wireV2Pages = v2
         mStub.clear()
-        mStub.seed((0 until 800).map(i =>
-          mStub.LogRow(base + i * 1000000000L,
-            Map("app" -> s"a${i % 3}", "k" -> "v"), s"row-$i")))
+        mStub.seed(seeded)
         val tag = s"codec=$codec dict=$dict v2=$v2"
-        for (opts <- Seq(
-            Map.empty[String, String],                          // columnar single
-            Map("columnar" -> "false"),                         // row single
-            Map("query_limit" -> "150"),                        // columnar paged
-            Map("columnar" -> "false", "query_limit" -> "150")  // row paged
-          )) {
-          val got = scan(opts).select("line")
-            .collect().map(_.getString(0)).sorted.toSeq
+        for (opts <- Seq(Map.empty[String, String], Map("query_limit" -> "150"))) {
+          val got = relation(scan(opts))
           assert(got == expected, s"$tag opts=$opts: ${got.size} rows")
         }
-        // label maps survive the encoding too (dictionary-heavy column)
-        assert(scan(Map.empty).select(map_keys(col("labels")))
-          .collect().forall(_.getSeq[String](0).contains("k")), tag)
       }
     } finally mStub.stop()
   }

@@ -69,6 +69,37 @@ class LokiStreamSpec extends SparkTestBase {
     }
   }
 
+  test("structured_metadata drain projects metadata like the batch read") {
+    // the micro-batch path builds its reader factory apart from the batch
+    // scan; both must decode the fourth column, over entries with and
+    // without metadata (empty map, so element_at yields NULL)
+    withStub { stub =>
+      stub.seed((0 until 120).map(i =>
+        stub.LogRow(base + i * 1000000000L, Map("app" -> "m"), s"m-$i",
+          if (i % 3 == 0) Map.empty[String, String] else Map("trace" -> s"t$i"))))
+      val cap = base + 3600L * 1000000000L
+      def project(df: DataFrame): DataFrame =
+        df.select(col("line"), element_at(col("metadata"), "trace").as("trace"))
+      val streamed = drain(
+        project(streamDf(stub, Map(
+          "stream_end_ns" -> cap.toString, "structured_metadata" -> "true"))),
+        "loki_tail_meta", tmp("loki_tail_meta_ck"))
+        .collect().map(r => (r.getString(0), Option(r.getString(1)))).sortBy(_._1).toSeq
+      val batch = project(spark.read.format("loki")
+        .option("endpoint", stub.endpoint)
+        .option("default_label", "app")
+        .option("structured_metadata", "true")
+        .load()
+        .filter(col("timestamp") >= timestamp_micros(lit(base / 1000)) &&
+          col("timestamp") < timestamp_micros(lit(cap / 1000))))
+        .collect().map(r => (r.getString(0), Option(r.getString(1)))).sortBy(_._1).toSeq
+      val want = (0 until 120).map(i =>
+        (s"m-$i", if (i % 3 == 0) None else Some(s"t$i"))).sortBy(_._1)
+      assert(batch == want, s"batch read: ${batch.take(5)}")
+      assert(streamed == want, s"stream=${streamed.size} batch=${batch.size}")
+    }
+  }
+
   test("checkpointed re-drain reads only the NEW window (incremental tail)") {
     withStub { stub =>
       // first generation: historical rows well in the past
