@@ -11,6 +11,12 @@ cd "$(dirname "$0")/.."
 
 sbt -batch Test/compile "runMain graft.Smoke" | tee /tmp/precommit_smoke.out
 
+# The benchmark (perfbench/) is its own sbt build on top of this one, so a
+# renamed connector method it calls breaks only the benchmark run: compile
+# it here too, resolving offline like the test run.
+(cd perfbench && COURSIER_MODE=offline SBT_OPTS="${SBT_OPTS:--Dsbt.override.build.repos=true -Dsbt.repository.config=$HOME/.sbt/repositories -Dsbt.offline=true -Xmx4g}" \
+  sbt --batch compile)
+
 # Gate-count consistency (round-12 directive 4): SURVEY.md's "FINAL gate: N
 # queries" claim must equal len(SparkEntry.queries), which the Smoke run
 # just printed — the docs froze at 178 in round 11 while the gate shipped

@@ -4,6 +4,12 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.core.JsonProcessingException
+import com.fasterxml.jackson.core.io.JsonEOFException
+import com.fasterxml.jackson.databind.JsonNode
+
 /** Minimal HTTP helpers over the JDK client. One shared client per JVM:
   * HttpClient is immutable and thread-safe, and a client per request would
   * pay connection setup on every partition scan / push batch — needless
@@ -12,6 +18,13 @@ import java.time.Duration
   *   - GET  /loki/api/v1/status/buildinfo   (table.rs:60-73)
   *   - GET  /loki/api/v1/query_range        (scan.rs:177-216)
   *   - POST /loki/api/v1/push               (insert.rs:142-165)
+  *
+  * plus the metadata, metric, volume, patterns, stats and delete
+  * endpoints of real Loki. Every JSON response is read as a tree by the
+  * one strict Jackson mapper ([[LokiParsers.strictJson]]); a body that
+  * does not parse fails with `… truncated` (unexpected end of input) or
+  * `… malformed`, and a body of the wrong shape names the missing or
+  * mistyped field. Each message carries the body prefix.
   */
 object LokiHttp {
 
@@ -115,31 +128,13 @@ object LokiHttp {
     * and ships back #series × #steps samples, not rows. `stepNs` must be
     * a positive whole-second multiple — the `step` param speaks duration
     * seconds and the response's sample timestamps carry second precision
-    * (the same contract [[indexVolumeRange]] enforces).
+    * (the same contract [[indexVolumeRange]] enforces). Samples are
+    * float64: unwrapped range aggregations (`avg_over_time(… | unwrap x
+    * …)`) carry fractional values, and the entry-counting kinds decode
+    * exactly too (float64 is exact to 2^53, far past any per-bucket
+    * entry/byte count).
     */
   def queryRangeMetric(
-      endpoint: String,
-      logql: String,
-      startNs: Long,
-      endNs: Long,
-      stepNs: Long): Seq[(Seq[(String, String)], Seq[(Long, Long)])] = {
-    require(stepNs > 0 && stepNs % 1000000000L == 0,
-      s"metric query step must be a positive whole-second multiple of ns, " +
-        s"got $stepNs")
-    val enc = java.net.URLEncoder.encode(logql, "UTF-8")
-    parseMetricSamples(getJson("query_range(metric)", URI.create(
-      s"$endpoint/loki/api/v1/query_range?query=$enc&start=$startNs" +
-        s"&end=$endNs&step=${stepNs / 1000000000L}s")))
-  }
-
-  /** [[queryRangeMetric]] with FLOAT sample values — unwrapped range
-    * aggregations (`avg_over_time(… | unwrap x …)`) carry float64
-    * samples where the entry-counting kinds are whole numbers. Integer
-    * kinds decode exactly through this path too (float64 is exact to
-    * 2^53, far past any per-bucket entry/byte count), so the metric
-    * reader uses it uniformly.
-    */
-  def queryRangeMetricD(
       endpoint: String,
       logql: String,
       startNs: Long,
@@ -154,93 +149,86 @@ object LokiHttp {
         s"&end=$endNs&step=${stepNs / 1000000000L}s")))
   }
 
-  /** `GET /loki/api/v1/index/stats` — entry count for a stream SELECTOR
-    * over [startNs, endNs). Powers the `split=stats` plan-time boundary
-    * placement: index-only, so each probe is cheap on real Loki (it reads
-    * the TSDB index, not chunks). Real Loki accepts only a stream
-    * selector here (no line-filter stages), which is fine for balancing —
-    * line-filter selectivity shifts slice sizes uniformly, not boundaries.
-    * Returns the `entries` field.
+  /** `GET /loki/api/v1/index/stats` — `(entries, bytes)` for a stream
+    * SELECTOR over [startNs, endNs). Index-only, so each probe is cheap
+    * on real Loki (it reads the TSDB index, not chunks). Powers the
+    * `split=stats` plan-time boundary placement, the streaming
+    * admission caps and the scan-statistics report (row count for join
+    * planning, bytes for the broadcast size estimate). Real Loki accepts
+    * only a stream selector here (no line-filter stages), which is fine
+    * for balancing — line-filter selectivity shifts slice sizes
+    * uniformly, not boundaries.
     */
   def indexStats(
       endpoint: String,
       selector: String,
       startNs: Long,
-      endNs: Long): Long =
-    indexStatsFull(endpoint, selector, startNs, endNs)._1
-
-  /** index/stats `(entries, bytes)` — the scan-statistics report needs
-    * both (row count for join planning, bytes for the broadcast size
-    * estimate); [[indexStats]] keeps the entries-only shape its callers
-    * use.
-    */
-  def indexStatsFull(
-      endpoint: String,
-      selector: String,
-      startNs: Long,
       endNs: Long): (Long, Long) = {
     val enc = java.net.URLEncoder.encode(selector, "UTF-8")
-    val uri = URI.create(
-      s"$endpoint/loki/api/v1/index/stats?query=$enc&start=$startNs&end=$endNs")
-    val req = HttpRequest.newBuilder(uri)
-      .timeout(Duration.ofSeconds(30)).GET().build()
-    val resp = withRetry("index/stats")(() =>
-      client.send(req, HttpResponse.BodyHandlers.ofString()))(_.statusCode())
-    if (resp.statusCode() != 200) {
-      throw new RuntimeException(
-        s"Loki index/stats failed: HTTP ${resp.statusCode()}: ${resp.body().take(500)}")
-    }
+    val body = new Body("index/stats", getJson("index/stats", URI.create(
+      s"$endpoint/loki/api/v1/index/stats?query=$enc&start=$startNs&end=$endNs")))
     // {"streams":S,"chunks":C,"bytes":B,"entries":E}
     def field(name: String): Long = {
-      val m = java.util.regex.Pattern.compile("\"" + name + "\"\\s*:\\s*(\\d+)")
-        .matcher(resp.body())
-      if (!m.find()) throw new RuntimeException(
-        s"Loki index/stats: no $name field in: ${resp.body().take(200)}")
-      m.group(1).toLong
+      val n = body.tree.get(name)
+      if (n == null || !n.isIntegralNumber) body.die(s"has no $name field")
+      n.longValue
     }
     (field("entries"), field("bytes"))
   }
 
-  /** Minimal parse of the metadata response shape
-    * `{"status":"success","data":["a","b",…]}` → the data strings.
-    * Handles the standard JSON escapes; anything structurally off fails
-    * loudly with the body prefix.
+  /** A JSON response body under decode. [[tree]] reads it with the
+    * shared strict mapper; every decode failure dies loudly with the
+    * body prefix: `Loki <what> response truncated|malformed|<shape>: …`.
     */
-  private[loki] def parseStringArray(body: String): Seq[String] = {
-    val start = dataArrayStart(body)
-    val end = scanToCloser(body, start, ']')
-    if (end < 0) throw new RuntimeException(
-      s"Loki metadata response truncated: ${body.take(200)}")
-    parseStringArrayRaw(body.substring(start, end))
-  }
+  private final class Body(what: String, text: String) {
+    def die(msg: String): Nothing = throw new RuntimeException(
+      s"Loki $what response $msg: ${text.take(200)}")
+    lazy val tree: JsonNode =
+      try LokiParsers.strictJson.readTree(text)
+      catch {
+        case _: JsonEOFException => die("truncated")
+        case _: JsonProcessingException => die("malformed")
+      }
 
-  /** Index just past the `"data"` field's `[`; loud on a missing field. */
-  private def dataArrayStart(body: String): Int = {
-    val di = body.indexOf("\"data\"")
-    if (di < 0) throw new RuntimeException(
-      s"Loki metadata response has no data field: ${body.take(200)}")
-    val bi = body.indexOf('[', di)
-    if (bi < 0) throw new RuntimeException(
-      s"Loki metadata data field is not an array: ${body.take(200)}")
-    bi + 1
-  }
-
-  /** First `closer` at/after `from` OUTSIDE any quoted string (escape
-    * aware), or −1.
-    */
-  private def scanToCloser(body: String, from: Int, closer: Char): Int = {
-    var i = from
-    var inStr = false
-    while (i < body.length) {
-      val c = body.charAt(i)
-      if (inStr) {
-        if (c == '\\') i += 1
-        else if (c == '"') inStr = false
-      } else if (c == '"') inStr = true
-      else if (c == closer) return i
-      i += 1
+    /** The `data` array of a `{"status":"success","data":[…]}` body. */
+    def dataArray: Seq[JsonNode] = {
+      val data = tree.get("data")
+      if (data == null) die("has no data field")
+      if (!data.isArray) die("data field is not an array")
+      data.asScala.toSeq
     }
-    -1
+
+    /** A flat `{"k":"v",…}` object → its pairs in wire order. */
+    def labelPairs(o: JsonNode): Seq[(String, String)] = {
+      if (!o.isObject) die("has a malformed label set")
+      o.properties.asScala.toSeq.map { e =>
+        if (!e.getValue.isTextual) die("has a malformed label set")
+        (e.getKey, e.getValue.textValue)
+      }
+    }
+
+    /** `[<ts>,<value>]` → (ts in whole epoch seconds, value node).
+      * Prometheus timestamps may carry a fraction, which is truncated.
+      */
+    def sample(s: JsonNode): (Long, JsonNode) = {
+      if (!s.isArray || s.size != 2 || !s.get(0).isNumber)
+        die("has a malformed sample")
+      (s.get(0).asLong, s.get(1))
+    }
+
+    /** The array under field `name` of `el`, None when it is absent. */
+    def arrayField(el: JsonNode, name: String): Option[Seq[JsonNode]] =
+      el.get(name) match {
+        case null => None
+        case a if a.isArray => Some(a.asScala.toSeq)
+        case _ => die(s"has a malformed $name array")
+      }
+  }
+
+  /** Decode `{"status":"success","data":["a","b",…]}` → the data strings. */
+  private[loki] def parseStringArray(body: String): Seq[String] = {
+    val b = new Body("metadata", body)
+    b.dataArray.map(v => if (v.isTextual) v.textValue else b.die("has a non-string value"))
   }
 
   private def getJson(what: String, uri: URI): String = {
@@ -277,68 +265,15 @@ object LokiHttp {
       s"$endpoint/loki/api/v1/label/$name/values?start=$startNs&end=$endNs$q")))
   }
 
-  /** Parse the series response shape
+  /** Decode the series response shape
     * `{"status":"success","data":[{"k":"v",…},…]}` → one (key, value)
     * seq per stream, in WIRE order (consumers that need canonical order
     * sort — [[LokiMetaReader]] does). Flat string→string objects only —
     * exactly what the endpoint returns.
     */
   private[loki] def parseObjectArray(body: String): Seq[Seq[(String, String)]] = {
-    var i = dataArrayStart(body)
-    val out = Seq.newBuilder[Seq[(String, String)]]
-    while (i < body.length && body.charAt(i) != ']') {
-      body.charAt(i) match {
-        case '{' =>
-          // the object's true end — '}' inside quoted values skipped
-          val end = scanToCloser(body, i, '}')
-          if (end < 0) throw new RuntimeException(
-            s"Loki series response truncated: ${body.take(200)}")
-          // one flat object: the string-array walk over its k/v strings —
-          // they alternate key, value
-          val kv = parseStringArrayRaw(body.substring(i, end + 1))
-          out += kv.grouped(2).collect { case Seq(k, v) => (k, v) }.toSeq
-          i = end + 1
-        case _ => i += 1 // comma / whitespace
-      }
-    }
-    if (i >= body.length) throw new RuntimeException(
-      s"Loki series response truncated: ${body.take(200)}")
-    out.result()
-  }
-
-  /** All JSON strings in `chunk`, in order (escape-aware). */
-  private def parseStringArrayRaw(chunk: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val sb = new StringBuilder
-    var inStr = false
-    var i = 0
-    while (i < chunk.length) {
-      val c = chunk.charAt(i)
-      if (inStr) {
-        if (c == '\\' && i + 1 < chunk.length) {
-          chunk.charAt(i + 1) match {
-            case '"' => sb += '"'; i += 1
-            case '\\' => sb += '\\'; i += 1
-            case '/' => sb += '/'; i += 1
-            case 'n' => sb += '\n'; i += 1
-            case 'r' => sb += '\r'; i += 1
-            case 't' => sb += '\t'; i += 1
-            // the full JSON escape set: a standards-compliant producer
-            // may emit \b and \f, which the default branch used to
-            // mis-decode as the literal letters
-            case 'b' => sb += '\b'; i += 1
-            case 'f' => sb += '\f'; i += 1
-            case 'u' if i + 5 < chunk.length =>
-              sb += Integer.parseInt(chunk.substring(i + 2, i + 6), 16).toChar
-              i += 5
-            case o => sb += o; i += 1
-          }
-        } else if (c == '"') { out += sb.toString; sb.clear(); inStr = false }
-        else sb += c
-      } else if (c == '"') inStr = true
-      i += 1
-    }
-    out.result()
+    val b = new Body("series", body)
+    b.dataArray.map(b.labelPairs)
   }
 
   /** `GET /loki/api/v1/series` — distinct label sets (streams) in the
@@ -355,52 +290,9 @@ object LokiHttp {
       s"$endpoint/loki/api/v1/series?start=$startNs&end=$endNs$q")))
   }
 
-  /** Index of the closing quote of the JSON string opening at
-    * `openQuote` (escape-aware), or −1.
-    */
-  private def stringEnd(s: String, openQuote: Int): Int = {
-    var i = openQuote + 1
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '\\' => i += 1
-        case '"' => return i
-        case _ =>
-      }
-      i += 1
-    }
-    -1
-  }
-
-  /** Index of the closer matching the `{`/`[` at `open`, accounting for
-    * NESTED objects/arrays and quoted strings, or −1. The flat-object
-    * scans above can use [[scanToCloser]]; the Prometheus-style volume
-    * response nests (`result` elements hold a metric object and a value
-    * array), so its walk needs real depth tracking.
-    */
-  private def scanToMatching(body: String, open: Int): Int = {
-    var i = open
-    var depth = 0
-    var inStr = false
-    while (i < body.length) {
-      val c = body.charAt(i)
-      if (inStr) {
-        if (c == '\\') i += 1
-        else if (c == '"') inStr = false
-      } else c match {
-        case '"' => inStr = true
-        case '{' | '[' => depth += 1
-        case '}' | ']' =>
-          depth -= 1
-          if (depth == 0) return i
-        case _ =>
-      }
-      i += 1
-    }
-    -1
-  }
-
-  /** Parse a Prometheus-style vector/matrix response — the shape of real
-    * Loki's `index/volume` / `index/volume_range` endpoints:
+  /** Decode a Prometheus-style vector/matrix response — the shape of real
+    * Loki's `index/volume` / `index/volume_range` endpoints and of metric
+    * `query_range`:
     *
     * {{{
     *   {"status":"success","data":{"resultType":"vector","result":[
@@ -409,12 +301,10 @@ object LokiHttp {
     *     {"metric":{"k":"v"},"values":[[1712300000,"12"],…]}, …]}}
     * }}}
     *
-    * → one (sorted metric kvs, samples) per series; each sample is
-    * (epoch SECONDS, numeric value). Vector elements decode as a single
-    * sample. Element fields are walked structurally (depth- and
-    * string-aware), so a label VALUE containing `"metric"`/`"values"` or
-    * brackets cannot derail the scan; anything structurally off fails
-    * loudly with the body prefix.
+    * → one (metric kvs in wire order, samples) per series; each sample
+    * is (epoch SECONDS, numeric value). Vector elements decode as a
+    * single sample. Anything structurally off fails loudly with the body
+    * prefix.
     */
   private[loki] def parseMetricSamples(
       body: String): Seq[(Seq[(String, String)], Seq[(Long, Long)])] =
@@ -424,7 +314,7 @@ object LokiHttp {
       }
     }
 
-  /** Float-valued variant for unwrapped range aggregations. */
+  /** Float-valued variant for metric queries. */
   private[loki] def parseMetricSamplesD(
       body: String): Seq[(Seq[(String, String)], Seq[(Long, Double)])] =
     parseMetricSamplesWith(body) { (vs, die) =>
@@ -433,137 +323,25 @@ object LokiHttp {
       }
     }
 
+  /** The sample value is a quoted numeric string converted by `conv`. */
   private def parseMetricSamplesWith[V](body: String)(
       conv: (String, String => Nothing) => V): Seq[(Seq[(String, String)], Seq[(Long, V)])] = {
-    def die(msg: String): Nothing =
-      throw new RuntimeException(s"Loki volume response $msg: ${body.take(200)}")
-    val ri = body.indexOf("\"result\"")
-    if (ri < 0) die("has no result field")
-    val ro = body.indexOf('[', ri)
-    if (ro < 0) die("result field is not an array")
-    val rc = scanToMatching(body, ro)
-    if (rc < 0) die("truncated")
-
-    val out = Seq.newBuilder[(Seq[(String, String)], Seq[(Long, V)])]
-    var i = ro + 1
-    while (i < rc) {
-      body.charAt(i) match {
-        case '{' =>
-          val end = scanToMatching(body, i)
-          if (end < 0 || end > rc) die("truncated")
-          out += parseSeriesElement(body.substring(i, end + 1), die, conv)
-          i = end + 1
-        case ',' => i += 1
-        case c if c.isWhitespace => i += 1
-        // a bare string/number/array element here is structurally off —
-        // silently skipping it would drop a series under the documented
-        // "anything structurally off fails loudly" contract
-        case _ => die("has a malformed result array")
-      }
+    val b = new Body("volume", body)
+    val result = b.tree.path("data").get("result")
+    if (result == null) b.die("has no result field")
+    if (!result.isArray) b.die("result field is not an array")
+    def sample(s: JsonNode): (Long, V) = b.sample(s) match {
+      case (ts, v) if v.isTextual => (ts, conv(v.textValue, b.die))
+      case _ => b.die("has a malformed sample value")
     }
-    out.result()
-  }
-
-  /** Walk a flat-braced element's TOP-LEVEL `"key": value` fields
-    * structurally (depth- and string-aware), handing each (key, raw
-    * value chunk) to `f`. Shared by the metric- and pattern-element
-    * parsers.
-    */
-  private def forEachTopLevelField(
-      el: String, die: String => Nothing)(f: (String, String) => Unit): Unit = {
-    var i = 1 // past the element's '{'
-    while (i < el.length - 1) {
-      el.charAt(i) match {
-        case '"' =>
-          val ke = stringEnd(el, i)
-          if (ke < 0) die("truncated")
-          val key = parseStringArrayRaw(el.substring(i, ke + 1)).head
-          val ci = el.indexOf(':', ke + 1)
-          if (ci < 0) die("truncated")
-          var v = ci + 1
-          while (v < el.length && el.charAt(v).isWhitespace) v += 1
-          val ve = el.charAt(v) match {
-            case '{' | '[' => scanToMatching(el, v)
-            case '"' => stringEnd(el, v)
-            case _ => // bare literal: runs to the next ',' or the closing '}'
-              var j = v
-              while (j < el.length && el.charAt(j) != ',' && el.charAt(j) != '}') j += 1
-              j - 1
-          }
-          if (ve < 0) die("truncated")
-          f(key, el.substring(v, ve + 1))
-          i = ve + 1
-        case _ => i += 1
-      }
+    result.asScala.toSeq.map { el =>
+      if (!el.isObject) b.die("has a malformed result array")
+      val metric = b.labelPairs(
+        Option(el.get("metric")).getOrElse(b.die("element has no metric")))
+      val samples = b.arrayField(el, "values").map(_.map(sample)).getOrElse(
+        Seq(sample(Option(el.get("value")).getOrElse(b.die("element has no value")))))
+      (metric, samples)
     }
-  }
-
-  /** Walk the `[…]` sample arrays inside a `values`/`samples` chunk. */
-  private def forEachSampleArray(
-      chunk: String, die: String => Nothing)(f: String => Unit): Unit = {
-    var j = 1
-    while (j < chunk.length - 1) {
-      chunk.charAt(j) match {
-        case '[' =>
-          val se = scanToMatching(chunk, j)
-          if (se < 0) die("truncated")
-          f(chunk.substring(j, se + 1))
-          j = se + 1
-        case ',' => j += 1
-        case c if c.isWhitespace => j += 1
-        case _ => die("has a malformed values array")
-      }
-    }
-  }
-
-  /** One `result` element `{"metric":{…},"value(s)":…}` → (metric kvs,
-    * samples). Walks the element's TOP-LEVEL fields structurally.
-    */
-  private def parseSeriesElement[V](
-      el: String, die: String => Nothing,
-      conv: (String, String => Nothing) => V): (Seq[(String, String)], Seq[(Long, V)]) = {
-    var metric: Option[Seq[(String, String)]] = None
-    var samples: Option[Seq[(Long, V)]] = None
-    forEachTopLevelField(el, die) { (key, chunk) =>
-      key match {
-        case "metric" =>
-          val flat = parseStringArrayRaw(chunk)
-          // strict pairing: an unpaired trailing key means a
-          // truncated/corrupt metric — misattributing the series
-          // would be worse than failing
-          if (flat.size % 2 != 0) die("has an unpaired metric key")
-          metric = Some(flat.grouped(2)
-            .collect { case Seq(k, vv) => (k, vv) }.toSeq)
-        case "value" => samples = Some(Seq(parseSample(chunk, die, conv)))
-        case "values" =>
-          val ss = Seq.newBuilder[(Long, V)]
-          forEachSampleArray(chunk, die)(s => ss += parseSample(s, die, conv))
-          samples = Some(ss.result())
-        case _ => // resultType etc. — ignored
-      }
-    }
-    (metric.getOrElse(die("element has no metric")),
-      samples.getOrElse(die("element has no value")))
-  }
-
-  private val samplePattern =
-    java.util.regex.Pattern.compile("^\\[\\s*(-?\\d+)(?:\\.\\d+)?\\s*,")
-
-  /** `[<ts>,"<value>"]` → (ts floor seconds, value). Prometheus sample
-    * timestamps may carry a fractional part; the value is a quoted
-    * numeric string converted by `conv` (whole integers for the volume/
-    * entry-count callers, float64 for unwrapped aggregations) —
-    * anything else dies with the body prefix like every other
-    * malformed-shape path here.
-    */
-  private def parseSample[V](
-      chunk: String, die: String => Nothing,
-      conv: (String, String => Nothing) => V): (Long, V) = {
-    val m = samplePattern.matcher(chunk)
-    if (!m.find()) die(s"has a malformed sample")
-    val vs = parseStringArrayRaw(chunk)
-    if (vs.size != 1) die(s"has a malformed sample value")
-    (m.group(1).toLong, conv(vs.head, die))
   }
 
   /** `GET /loki/api/v1/index/volume` — aggregate log volume (bytes) per
@@ -632,7 +410,7 @@ object LokiHttp {
       (if (limit > 0) s"&limit=$limit" else "")
   }
 
-  /** Parse the pattern-detection response shape of real Loki's
+  /** Decode the pattern-detection response shape of real Loki's
     * `GET /loki/api/v1/patterns`:
     *
     * {{{
@@ -644,55 +422,26 @@ object LokiHttp {
     * → one (pattern, samples) per detected pattern; each sample is
     * (epoch SECONDS, count) — here the count is a BARE number, unlike
     * the quoted string values of the Prometheus-style metric shape.
-    * Structural walk, loud on anything off, like every parser here.
+    * Loud on anything off, like every decoder here.
     */
-  private val bareSamplePattern = java.util.regex.Pattern.compile(
-    "^\\[\\s*(-?\\d+)(?:\\.\\d+)?\\s*,\\s*(-?\\d+)(?:\\.\\d+)?\\s*\\]$")
-
   private[loki] def parsePatternSamples(
       body: String): Seq[(String, Seq[(Long, Long)])] = {
-    def die(msg: String): Nothing =
-      throw new RuntimeException(
-        s"Loki patterns response $msg: ${body.take(200)}")
-    val start = dataArrayStart(body)
-    val rc = scanToMatching(body, start - 1) // the data array's closer
-    if (rc < 0) die("truncated")
-    val out = Seq.newBuilder[(String, Seq[(Long, Long)])]
-    var i = start
-    while (i < rc) {
-      body.charAt(i) match {
-        case '{' =>
-          val end = scanToMatching(body, i)
-          if (end < 0 || end > rc) die("truncated")
-          val el = body.substring(i, end + 1)
-          var pattern: Option[String] = None
-          var samples: Option[Seq[(Long, Long)]] = None
-          forEachTopLevelField(el, die) { (key, chunk) =>
-            key match {
-              case "pattern" =>
-                if (!chunk.startsWith("\"")) die("has a non-string pattern")
-                pattern = parseStringArrayRaw(chunk).headOption
-                  .orElse(Some("")) // the empty pattern "" parses to none
-              case "samples" =>
-                val ss = Seq.newBuilder[(Long, Long)]
-                forEachSampleArray(chunk, die) { s =>
-                  val m = bareSamplePattern.matcher(s)
-                  if (!m.matches()) die("has a malformed sample")
-                  ss += ((m.group(1).toLong, m.group(2).toLong))
-                }
-                samples = Some(ss.result())
-              case _ => // ignored
-            }
-          }
-          out += ((pattern.getOrElse(die("element has no pattern")),
-            samples.getOrElse(die("element has no samples"))))
-          i = end + 1
-        case ',' => i += 1
-        case c if c.isWhitespace => i += 1
-        case _ => die("has a malformed data array")
+    val b = new Body("patterns", body)
+    b.dataArray.map { el =>
+      if (!el.isObject) b.die("has a malformed data array")
+      val pattern = el.get("pattern") match {
+        case null => b.die("element has no pattern")
+        case p if p.isTextual => p.textValue
+        case _ => b.die("has a non-string pattern")
       }
+      val samples = b.arrayField(el, "samples")
+        .getOrElse(b.die("element has no samples"))
+        .map(b.sample(_) match {
+          case (ts, c) if c.isNumber => (ts, c.asLong)
+          case _ => b.die("has a malformed sample")
+        })
+      (pattern, samples)
     }
-    out.result()
   }
 
   /** `GET /loki/api/v1/patterns` — real Loki's server-side log-pattern
@@ -786,49 +535,24 @@ object LokiHttp {
     */
   def deleteRequests(
       endpoint: String): Seq[(String, String, Long, Long, String)] = {
-    val body = getJson("delete(list)", URI.create(s"$endpoint/loki/api/v1/delete"))
-    def die(msg: String): Nothing = throw new RuntimeException(
-      s"Loki delete list response $msg: ${body.take(200)}")
+    val b = new Body("delete list",
+      getJson("delete(list)", URI.create(s"$endpoint/loki/api/v1/delete")))
     // top-level array (no data wrapper on this endpoint)
-    val open = body.indexOf('[')
-    if (open < 0) die("is not an array")
-    val close = scanToMatching(body, open)
-    if (close < 0) die("truncated")
-    val out = Seq.newBuilder[(String, String, Long, Long, String)]
-    var i = open + 1
-    while (i < close) {
-      body.charAt(i) match {
-        case '{' =>
-          val end = scanToMatching(body, i)
-          if (end < 0 || end > close) die("truncated")
-          val el = body.substring(i, end + 1)
-          var id, query, status: Option[String] = None
-          var startT, endT: Option[Long] = None
-          def num(chunk: String): Long =
-            try chunk.trim.takeWhile(c => c.isDigit || c == '-').toLong
-            catch { case _: NumberFormatException => die("has a bad timestamp") }
-          forEachTopLevelField(el, die) { (key, chunk) =>
-            key match {
-              case "request_id" => id = parseStringArrayRaw(chunk).headOption
-              case "query" => query = parseStringArrayRaw(chunk).headOption
-              case "status" => status = parseStringArrayRaw(chunk).headOption
-              case "start_time" => startT = Some(num(chunk))
-              case "end_time" => endT = Some(num(chunk))
-              case _ => // created_at etc. — ignored
-            }
-          }
-          out += ((id.getOrElse(die("element has no request_id")),
-            query.getOrElse(die("element has no query")),
-            startT.getOrElse(die("element has no start_time")),
-            endT.getOrElse(die("element has no end_time")),
-            status.getOrElse(die("element has no status"))))
-          i = end + 1
-        case ',' => i += 1
-        case c if c.isWhitespace => i += 1
-        case _ => die("has a malformed array")
+    if (!b.tree.isArray) b.die("is not an array")
+    b.tree.asScala.toSeq.map { el =>
+      if (!el.isObject) b.die("has a malformed array")
+      def str(k: String): String = el.get(k) match {
+        case v if v != null && v.isTextual => v.textValue
+        case _ => b.die(s"element has no $k")
       }
+      def num(k: String): Long = el.get(k) match {
+        case null => b.die(s"element has no $k")
+        case v if v.isNumber => v.asLong
+        case _ => b.die("has a bad timestamp")
+      }
+      (str("request_id"), str("query"), num("start_time"), num("end_time"),
+        str("status"))
     }
-    out.result()
   }
 
   /** push-API POST; body is the JSON `{"streams":[...]}` payload. */

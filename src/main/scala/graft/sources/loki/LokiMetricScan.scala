@@ -325,7 +325,7 @@ class LokiMetricReader(p: LokiMetricPartition)
     // an unwrapped kind's rows are a SUBSET of the enumeration's — a
     // missing sample is semantically the host's NULL aggregate
     val perFn: Seq[Map[(Seq[String], Long), Double]] = p.metricQueries.map { q =>
-      LokiHttp.queryRangeMetricD(p.endpoint, q, startT, endT, p.stepNs)
+      LokiHttp.queryRangeMetric(p.endpoint, q, startT, endT, p.stepNs)
         .iterator.flatMap { case (metric, samples) =>
           val kvs = metric.toMap
           // Prometheus metric objects omit empty-valued labels; an

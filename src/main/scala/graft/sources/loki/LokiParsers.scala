@@ -1,5 +1,8 @@
 package graft.sources.loki
 
+import com.fasterxml.jackson.core.{JsonFactory, JsonFactoryBuilder, JsonParser, JsonProcessingException, JsonToken}
+import com.fasterxml.jackson.core.json.JsonReadFeature
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.unsafe.types.UTF8String
 
 /** SHARED semantics for LogQL parser stages (`| json`, `| logfmt`) — the
@@ -31,19 +34,23 @@ import org.apache.spark.unsafe.types.UTF8String
   * Loki-fidelity notes (documented modeling decisions, pinned by the
   * stub rather than a live server, like the ILIKE case-fold caveat):
   *
-  *   - json: explicit-expression extraction takes Spark
-  *     `get_json_object`'s Jackson-streaming shape, PROBED and
+  *   - json: every json input is read by Jackson. Explicit-expression
+  *     extraction walks a parser configured like Spark's
+  *     `get_json_object` (its `SharedFactory`: `ALLOW_UNESCAPED_CONTROL_CHARS`
+  *     and `ALLOW_SINGLE_QUOTES`) the way Spark's evaluator walks it,
   *     property-pinned in LokiParsersProps (the equality pushdown idiom
   *     rides on the agreement): full root-object validation, trailing
   *     bytes after the root close ignored, duplicate keys explored with
-  *     first successful capture winning — see [[jsonGet]]. Real Loki's
+  *     the first non-null capture winning — see [[jsonGet]]. Real Loki's
   *     jsonexpr (buger/jsonparser) is more lenient on malformed tails;
   *     where the two differ, the Spark-builtin contract wins and the
   *     deviation is this documented line. Non-integer numbers keep
   *     their literal text (`1.50` stays `"1.50"` — Spark re-renders
   *     them, so float-looking comparison literals are rejected by the
   *     translator); strings decode their escapes; composite values
-  *     return their raw text slice verbatim.
+  *     return their raw text slice verbatim. The bare `| json` stage
+  *     ([[jsonValid]], [[jsonFlatten]]) reads with Jackson's strict
+  *     defaults.
   *   - logfmt: go-logfmt shapes — bare keys get an empty value, quoted
   *     values decode Go escapes, an unterminated quote is a parse error
   *     (real Loki sets `__error__=LogfmtParserErr`). Repeated keys:
@@ -154,20 +161,39 @@ object LokiParsers {
   private def isHex(c: Char): Boolean =
     (c >= '0' && c <= '9') || (c >= 'a' && c <= 'f') || (c >= 'A' && c <= 'F')
 
+  /** The tokenizer Spark's `get_json_object` reads with (its
+    * `SharedFactory`): Jackson plus `ALLOW_UNESCAPED_CONTROL_CHARS` and
+    * `ALLOW_SINGLE_QUOTES`, both enabled there for Hive compatibility.
+    */
+  private val sparkJson: JsonFactory = new JsonFactoryBuilder()
+    .enable(JsonReadFeature.ALLOW_UNESCAPED_CONTROL_CHARS)
+    .enable(JsonReadFeature.ALLOW_SINGLE_QUOTES)
+    .build()
+
+  /** Strict JSON: Jackson's defaults. The bare `| json` stage, the Loki
+    * HTTP response decoders and the stub's push decoder all read with it.
+    */
+  private[loki] val strictJson: ObjectMapper = new ObjectMapper()
+
   /** Extraction of a dotted path (`a` or `a.b.c`) from a json-object
-    * line, with the exact shape Spark's `get_json_object` (Jackson
-    * streaming) exhibits — probed and property-pinned in
-    * LokiParsersProps, because the equality pushdown idiom rides on it:
+    * line, with the outcome Spark's `get_json_object` gives — the
+    * equality pushdown idiom rides on the agreement, property-pinned in
+    * LokiParsersProps. The same Jackson walk as Spark's
+    * `GetJsonObjectEvaluator`, over a parser configured like Spark's
+    * (see [[sparkJson]]: raw control characters and single-quoted
+    * strings are accepted):
     *
     *   - the ROOT OBJECT must parse completely (a malformed field
     *     anywhere — even after the match — or an unclosed root yields
     *     null); bytes after the root's closing `}` are ignored;
-    *   - duplicate keys: every occurrence is explored, the FIRST
-    *     successful full-path capture wins;
+    *   - duplicate keys: occurrences are explored in order and the FIRST
+    *     capture wins, where a json `null` is no capture (Spark's rule) —
+    *     `{"k":null,"k":"w"}` yields `w`;
     *   - numbers: strict JSON grammar (no `01`, `+1`, `.5`), INTEGER
-    *     tokens canonicalize (`-0` → `0`) while float tokens keep their
-    *     literal text (Spark re-renders floats — `5e2` → `500.0` — so
-    *     the translator rejects float-looking comparison literals);
+    *     tokens canonicalize through `BigInteger` (`-0` → `0`) while
+    *     float tokens keep their literal text (Spark re-renders floats —
+    *     `5e2` → `500.0` — so the translator rejects float-looking
+    *     comparison literals);
     *   - null for missing key / parse failure / json null / empty
     *     string value (empty ≡ absent); strings decode; composites
     *     return their raw slice.
@@ -175,25 +201,59 @@ object LokiParsers {
   def jsonGet(line: String, path: String): String = {
     val segs = path.split('.')
     if (segs.isEmpty || segs.exists(_.isEmpty)) return null
-    val p = new JsonWalk(line)
-    p.skipWs()
-    if (!p.parseObjectCapture(segs, 0)) return null
-    val v = p.capturedValue
-    if (v == null || v.isEmpty) null else v
+    try {
+      val p = sparkJson.createParser(line)
+      try {
+        if (p.nextToken() != JsonToken.START_OBJECT) return null
+        val v = captureIn(p, line, segs, 0)
+        if (v == null || v.isEmpty) null else v
+      } finally p.close()
+    } catch { case _: JsonProcessingException => null }
   }
+
+  /** With `p` on a START_OBJECT: read the object to its END_OBJECT and
+    * return the first non-null capture of `segs(from..)`, or null.
+    */
+  private def captureIn(
+      p: JsonParser, line: String, segs: Array[String], from: Int): String = {
+    var found: String = null
+    while (p.nextToken() == JsonToken.FIELD_NAME) {
+      val hit = found == null && p.currentName == segs(from)
+      val t = p.nextToken()
+      if (hit && from == segs.length - 1) found = valueText(p, line, t)
+      else if (hit && t == JsonToken.START_OBJECT)
+        found = captureIn(p, line, segs, from + 1)
+      else p.skipChildren()
+    }
+    found
+  }
+
+  /** The text of the value at `p` (token `t`): null for json null, the
+    * raw slice for a composite, canonical integers, literal floats,
+    * decoded strings, `true`/`false`.
+    */
+  private def valueText(p: JsonParser, line: String, t: JsonToken): String =
+    t match {
+      case JsonToken.VALUE_NULL => null
+      case JsonToken.START_OBJECT | JsonToken.START_ARRAY =>
+        val from = p.currentTokenLocation().getCharOffset.toInt
+        p.skipChildren()
+        line.substring(from, p.currentLocation().getCharOffset.toInt)
+      case JsonToken.VALUE_NUMBER_INT => p.getBigIntegerValue.toString
+      case _ => p.getText
+    }
 
   /** Whether the line parses as one complete json value (with only
     * whitespace after it) — the strictness gate the BARE `| json` stage
     * (jsoniter full parse in real Loki) applies, unlike the lenient
     * jsonexpr walk above.
     */
-  def jsonValid(line: String): Boolean = {
-    val p = new JsonWalk(line)
-    p.skipWs()
-    if (!p.skipValue()) return false
-    p.skipWs()
-    p.atEnd
-  }
+  def jsonValid(line: String): Boolean =
+    try {
+      val p = strictJson.createParser(line)
+      try p.nextToken() != null && { p.skipChildren(); p.nextToken() == null }
+      finally p.close()
+    } catch { case _: JsonProcessingException => false }
 
   /** Full `| json` flatten: nested objects join with '_', arrays are
     * skipped (grafana/loki json parser), scalar values keep literal
@@ -201,42 +261,27 @@ object LokiParsers {
     * line is not one valid json OBJECT.
     */
   def jsonFlatten(line: String): Either[String, Seq[(String, String)]] = {
-    if (!jsonValid(line)) return Left("JSONParserErr")
-    val p = new JsonWalk(line)
-    p.skipWs()
-    if (p.peek != '{') return Left("JSONParserErr")
     val out = Seq.newBuilder[(String, String)]
-    def walk(prefix: String): Boolean = {
-      if (!p.expect('{')) return false
-      p.skipWs()
-      if (p.peek == '}') { p.next(); return true }
-      var more = true
-      while (more) {
-        p.skipWs()
-        val k = p.string()
-        if (k == null) return false
-        val key = if (prefix.isEmpty) sanitizeLabelName(k)
-          else prefix + "_" + sanitizeLabelName(k)
-        p.skipWs()
-        if (!p.expect(':')) return false
-        p.skipWs()
-        p.peek match {
-          case '{' => if (!walk(key)) return false
-          case '[' => if (!p.skipValue()) return false // arrays skipped
-          case _ if p.isNullLit => p.skipNullLit() // json null ≡ absent
-          case _ =>
-            val v = p.scalar()
-            if (v == null) return false
-            if (v.nonEmpty) out += ((key, v)) // empty ≡ absent
+    def walk(p: JsonParser, prefix: String): Unit =
+      while (p.nextToken() == JsonToken.FIELD_NAME) {
+        val k = sanitizeLabelName(p.currentName)
+        val key = if (prefix.isEmpty) k else prefix + "_" + k
+        p.nextToken() match {
+          case JsonToken.START_OBJECT => walk(p, key)
+          case JsonToken.START_ARRAY => p.skipChildren() // arrays skipped
+          case t =>
+            val v = valueText(p, line, t)
+            if (v != null && v.nonEmpty) out += ((key, v)) // null/empty ≡ absent
         }
-        p.skipWs()
-        if (p.peek == ',') { p.next(); more = true }
-        else if (p.peek == '}') { p.next(); more = false }
-        else return false
       }
-      true
-    }
-    if (walk("")) Right(out.result()) else Left("JSONParserErr")
+    try {
+      val p = strictJson.createParser(line)
+      try {
+        if (p.nextToken() != JsonToken.START_OBJECT) return Left("JSONParserErr")
+        walk(p, "")
+        if (p.nextToken() != null) Left("JSONParserErr") else Right(out.result())
+      } finally p.close()
+    } catch { case _: JsonProcessingException => Left("JSONParserErr") }
   }
 
   // ------------------------------------------------------------------
@@ -685,171 +730,6 @@ object LokiParsers {
     if (mapped.nonEmpty && mapped.charAt(0) >= '0' && mapped.charAt(0) <= '9')
       "_" + mapped
     else mapped
-  }
-
-  /** Minimal streaming json walk over a string. Methods return null /
-    * false on malformed input; the caller decides whether that is an
-    * error (bare stage) or a missing value (jsonexpr stage).
-    */
-  private final class JsonWalk(s: String) {
-    private var i = 0
-    def atEnd: Boolean = i >= s.length
-    def peek: Char = if (i < s.length) s.charAt(i) else SP
-    def next(): Unit = i += 1
-    def skipWs(): Unit = while (i < s.length && (s.charAt(i) == SP ||
-      s.charAt(i) == TAB || s.charAt(i) == '\n' || s.charAt(i) == '\r')) i += 1
-    def expect(c: Char): Boolean =
-      if (i < s.length && s.charAt(i) == c) { i += 1; true } else false
-    def isNullLit: Boolean = i < s.length && s.startsWith("null", i)
-    def skipNullLit(): Unit = i += 4
-
-    /** Decoded string value; null on malformed. */
-    def string(): String = {
-      if (!expect('"')) return null
-      val sb = new StringBuilder
-      while (i < s.length) {
-        s.charAt(i) match {
-          case '"' => i += 1; return sb.toString
-          case '\\' if i + 1 < s.length =>
-            s.charAt(i + 1) match {
-              case '"' => sb += '"'; i += 2
-              case '\\' => sb += '\\'; i += 2
-              case '/' => sb += '/'; i += 2
-              case 'b' => sb += '\b'; i += 2
-              case 'f' => sb += '\f'; i += 2
-              case 'n' => sb += '\n'; i += 2
-              case 'r' => sb += '\r'; i += 2
-              case 't' => sb += TAB; i += 2
-              case 'u' if i + 5 < s.length &&
-                s.substring(i + 2, i + 6).forall(isHex) =>
-                sb += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar
-                i += 6
-              case _ => return null
-            }
-          case c if c < SP => return null // raw control char in a string
-          case c => sb += c; i += 1
-        }
-      }
-      null // unterminated
-    }
-
-    /** NON-NULL scalar value at the cursor: literal text for numbers
-      * (ints canonicalized — see [[LokiParsers.jsonGet]]) and booleans,
-      * decoded text for strings; null on malformed, including numbers
-      * outside strict JSON grammar (`01`, `+1`, `.5`, bare `-`). The
-      * json `null` keyword is the CALLER's case (see [[isNullLit]]) —
-      * it never reaches here from the extraction walks, and
-      * [[skipValue]] handles it itself.
-      */
-    def scalar(): String = peek match {
-      case '"' => string()
-      case 't' if s.startsWith("true", i) => i += 4; "true"
-      case 'f' if s.startsWith("false", i) => i += 5; "false"
-      case c if c == '-' || (c >= '0' && c <= '9') =>
-        val v0 = i
-        while (i < s.length && (s.charAt(i) == '-' || s.charAt(i) == '+' ||
-          s.charAt(i) == '.' || s.charAt(i) == 'e' || s.charAt(i) == 'E' ||
-          (s.charAt(i) >= '0' && s.charAt(i) <= '9'))) i += 1
-        val tok = s.substring(v0, i)
-        if (!tok.matches("-?(0|[1-9][0-9]*)(\\.[0-9]+)?([eE][+-]?[0-9]+)?"))
-          null
-        else if (tok.indexOf('.') < 0 && tok.indexOf('e') < 0 &&
-          tok.indexOf('E') < 0)
-          new java.math.BigInteger(tok).toString // -0 → 0 (Jackson)
-        else tok
-      case _ => null
-    }
-
-    /** Skip one complete value (validating as it goes). */
-    def skipValue(): Boolean = {
-      skipWs()
-      peek match {
-        case '{' =>
-          i += 1; skipWs()
-          if (peek == '}') { i += 1; return true }
-          var more = true
-          while (more) {
-            skipWs()
-            if (string() == null) return false
-            skipWs()
-            if (!expect(':')) return false
-            if (!skipValue()) return false
-            skipWs()
-            if (peek == ',') { i += 1 }
-            else if (peek == '}') { i += 1; more = false }
-            else return false
-          }
-          true
-        case '[' =>
-          i += 1; skipWs()
-          if (peek == ']') { i += 1; return true }
-          var more = true
-          while (more) {
-            if (!skipValue()) return false
-            skipWs()
-            if (peek == ',') { i += 1 }
-            else if (peek == ']') { i += 1; more = false }
-            else return false
-          }
-          true
-        case _ if isNullLit => skipNullLit(); true
-        case _ => scalar() != null
-      }
-    }
-
-    /** The path-capturing full parse (see [[LokiParsers.jsonGet]] for
-      * the pinned Jackson-shape semantics): validates the WHOLE object
-      * at the cursor while capturing the first successful full-path
-      * match — duplicate keys all explored, later ones ignored once a
-      * capture exists. Returns structural validity; the capture (which
-      * may legitimately be a json null ≡ absent) is read from
-      * [[capturedValue]].
-      */
-    private var captured: String = null
-    private var capturedSet = false
-    def capturedValue: String = captured
-
-    def parseObjectCapture(segs: Array[String], from: Int): Boolean = {
-      if (!expect('{')) return false
-      skipWs()
-      if (peek == '}') { i += 1; return true }
-      var more = true
-      while (more) {
-        skipWs()
-        val k = string()
-        if (k == null) return false
-        skipWs()
-        if (!expect(':')) return false
-        skipWs()
-        val hit = k == segs(from)
-        if (hit && from == segs.length - 1) {
-          peek match {
-            case '{' | '[' =>
-              val v0 = i
-              if (!skipValue()) return false
-              if (!capturedSet) { captured = s.substring(v0, i); capturedSet = true }
-            case _ if isNullLit =>
-              skipNullLit()
-              if (!capturedSet) { captured = null; capturedSet = true }
-            case _ =>
-              val v = scalar()
-              if (v == null) return false
-              if (!capturedSet) { captured = v; capturedSet = true }
-          }
-        } else if (hit && peek == '{') {
-          if (!parseObjectCapture(segs, from + 1)) return false
-        } else {
-          // non-matching key (or a matching one whose value isn't an
-          // object to descend into): validated, never captured
-          if (!skipValue()) return false
-        }
-        skipWs()
-        if (peek == ',') { i += 1 }
-        else if (peek == '}') { i += 1; more = false }
-        else return false
-      }
-      true
-    }
   }
 
   // ------------------------------------------------------------------

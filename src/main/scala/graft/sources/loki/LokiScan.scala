@@ -426,7 +426,7 @@ case class LokiScan(
         (lo, hi) =>
           if (lo == s && hi == e)
             LokiScan.cachedStats(options.endpoint, selector, lo, hi)._1
-          else LokiHttp.indexStats(options.endpoint, selector, lo, hi),
+          else LokiHttp.indexStats(options.endpoint, selector, lo, hi)._1,
         s, e, eff,
         probeParallelism = options.statsProbeParallelism,
         shouldStop = () => System.nanoTime() > deadline)
@@ -667,7 +667,7 @@ object LokiScan {
         statsCache.update(key, v); v // refresh recency
       }
     }.getOrElse {
-      val v = LokiHttp.indexStatsFull(endpoint, selector, s, e)
+      val v = LokiHttp.indexStats(endpoint, selector, s, e)
       statsCache.synchronized {
         statsCache.update(key, v)
         while (statsCache.size > 256) statsCache.remove(statsCache.head._1)
@@ -746,7 +746,7 @@ class LokiCountReader(p: LokiInputPartition)
   override def get(): InternalRow = {
     val (start, end) = p.effectiveWindow
     new GenericInternalRow(Array[Any](
-      java.lang.Long.valueOf(LokiHttp.indexStats(p.endpoint, p.logql, start, end))))
+      java.lang.Long.valueOf(LokiHttp.indexStats(p.endpoint, p.logql, start, end)._1)))
   }
   override def close(): Unit = ()
 }

@@ -177,7 +177,7 @@ class LokiMicroBatchStream(scan: LokiScan)
     def within(e: Long): Boolean = {
       val (entries, bytes) =
         if (e == cap) LokiScan.cachedStats(opts.endpoint, scan.selector, s, e)
-        else LokiHttp.indexStatsFull(opts.endpoint, scan.selector, s, e)
+        else LokiHttp.indexStats(opts.endpoint, scan.selector, s, e)
       entries <= maxRows && bytes <= maxBytes
     }
     try {

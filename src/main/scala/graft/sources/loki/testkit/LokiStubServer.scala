@@ -7,6 +7,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.JsonNode
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.parquet.example.data.simple.SimpleGroup
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
@@ -330,43 +331,32 @@ final class LokiStubServer {
     respond(ex, 204, Array.emptyByteArray)
   }
 
-  /** Tiny JSON parser for the exact push payload shape the writer emits:
-    * {"streams":[{"stream":{k:v,...},"values":[["ns","line"],...]},...]}
+  /** Decode the push payload the writer emits (strict JSON):
+    * {"streams":[{"stream":{k:v,...},"values":[["ns","line"(,{meta})?],...]},...]}
+    * A body off this shape fails the request.
     */
   private def parsePush(json: String): Seq[LogRow] = {
-    val out = mutable.ArrayBuffer.empty[LogRow]
-    val p = new JsonP(json)
-    p.expect('{'); p.key("streams"); p.expect('[')
-    while (p.peek() != ']') {
-      p.expect('{'); p.key("stream"); p.expect('{')
-      val labels = mutable.Map.empty[String, String]
-      while (p.peek() != '}') {
-        val k = p.string(); p.expect(':'); val v = p.string()
-        labels += k -> v
-        if (p.peek() == ',') p.expect(',')
-      }
-      p.expect('}'); p.expect(','); p.key("values"); p.expect('[')
-      while (p.peek() != ']') {
-        p.expect('['); val ts = p.string(); p.expect(','); val line = p.string()
-        // optional third element (Loki 3.x): structured-metadata object
-        val meta = mutable.Map.empty[String, String]
-        if (p.peek() == ',') {
-          p.expect(','); p.expect('{')
-          while (p.peek() != '}') {
-            val k = p.string(); p.expect(':'); val v = p.string()
-            meta += k -> v
-            if (p.peek() == ',') p.expect(',')
-          }
-          p.expect('}')
-        }
-        p.expect(']')
-        out += LogRow(ts.toLong, labels.toMap, line, meta.toMap)
-        if (p.peek() == ',') p.expect(',')
-      }
-      p.expect(']'); p.expect('}')
-      if (p.peek() == ',') p.expect(',')
+    def field(n: JsonNode, name: String): JsonNode = {
+      val v = n.get(name)
+      require(v != null, s"push payload: no $name in ${json.take(200)}")
+      v
     }
-    out.toSeq
+    def text(n: JsonNode): String = {
+      require(n != null && n.isTextual,
+        s"push payload: expected a string in ${json.take(200)}")
+      n.textValue
+    }
+    def strMap(o: JsonNode): Map[String, String] =
+      o.properties.asScala.iterator.map(e => e.getKey -> text(e.getValue)).toMap
+    field(graft.sources.loki.LokiParsers.strictJson.readTree(json), "streams")
+      .asScala.toSeq.flatMap { st =>
+        val labels = strMap(field(st, "stream"))
+        field(st, "values").asScala.map { v =>
+          // optional third element (Loki 3.x): structured-metadata object
+          LogRow(text(v.get(0)).toLong, labels, text(v.get(1)),
+            if (v.size > 2) strMap(v.get(2)) else Map.empty)
+        }
+      }
   }
 
   // ----------------------------------------------------------- query_range
@@ -1855,38 +1845,5 @@ final class LokiStubServer {
     ex.sendResponseHeaders(code, if (body.isEmpty) -1 else body.length.toLong)
     if (body.nonEmpty) ex.getResponseBody.write(body)
     ex.close()
-  }
-}
-
-/** Minimal recursive-descent JSON cursor for the stub's fixed payloads. */
-private[testkit] final class JsonP(s: String) {
-  private var i = 0
-  private def skipWs(): Unit = while (i < s.length && s(i).isWhitespace) i += 1
-  def peek(): Char = { skipWs(); s(i) }
-  def expect(c: Char): Unit = {
-    skipWs()
-    require(s(i) == c, s"expected '$c' at $i in ${s.take(i + 20)}")
-    i += 1
-  }
-  def key(name: String): Unit = {
-    val k = string(); require(k == name, s"expected key $name, got $k"); expect(':')
-  }
-  def string(): String = {
-    skipWs(); require(s(i) == '"', s"expected string at $i"); i += 1
-    val sb = new StringBuilder
-    while (s(i) != '"') {
-      if (s(i) == '\\') {
-        i += 1
-        s(i) match {
-          case 'n' => sb.append('\n'); case 'r' => sb.append('\r')
-          case 't' => sb.append('\t'); case 'u' =>
-            sb.append(Integer.parseInt(s.substring(i + 1, i + 5), 16).toChar); i += 4
-          case c => sb.append(c)
-        }
-      } else sb.append(s(i))
-      i += 1
-    }
-    i += 1
-    sb.toString()
   }
 }

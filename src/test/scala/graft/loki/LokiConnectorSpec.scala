@@ -301,7 +301,7 @@ class LokiConnectorSpec extends SparkTestBase with BeforeAndAfterAll {
         rStub.endpoint, """sum(count_over_time({app="r"} [90s]))""",
         base + 90L * 1000000000L - 1, base + 90L * 1000000000L - 1,
         90L * 1000000000L)
-      assert(metric.map(_._2.map(_._2).sum).sum == 90L,
+      assert(metric.map(_._2.map(_._2).sum).sum == 90.0,
         s"metric after retry: $metric")
       rStub.failNextMeta.set(2)
       val pats = graft.sources.loki.LokiHttp.patterns(

@@ -12,7 +12,8 @@ import graft.sources.loki.LokiParsers
   * Jackson-streaming `get_json_object` and the shared wire semantics
   * [[LokiParsers.jsonGet]] must agree on the EQUALITY OUTCOME for every
   * line — adversarial inputs included (duplicate keys, trailing
-  * garbage, malformed tails, nested composites, escapes). The raw
+  * garbage, malformed tails, nested composites, escapes, raw control
+  * characters, single-quoted strings). The raw
   * outputs may differ outside the pushable shapes (e.g. Spark returns
   * '' for an empty json string where the label model reads absent) —
   * that is exactly why those shapes are rejected by the translator.
@@ -31,7 +32,10 @@ object LokiParsersProps extends Properties("LokiParsers") {
   private val scalarGen: Gen[String] = Gen.oneOf(
     "\"v\"", "\"\"", "\"w\"", "1", "1.50", "5e2", "-0.5", "true", "false",
     "null", "\"a\\nb\"", "\"\\u00e9\"", "\"null\"", "\"1\"",
-    "{\"x\":1}", "{\"k\":\"v\"}", "[1,2]", "[]", "{\"x\": {\"y\": 2}}")
+    "{\"x\":1}", "{\"k\":\"v\"}", "[1,2]", "[]", "{\"x\": {\"y\": 2}}",
+    // raw control characters and single quotes: Spark's reader accepts
+    // both
+    "\"v\tw\"", "\"a\u0001b\"", "'v'", "'w'")
 
   private val fieldGen: Gen[String] = for {
     k <- keyGen
@@ -71,7 +75,8 @@ object LokiParsersProps extends Properties("LokiParsers") {
   // Spark re-renders float json numbers), plus values the generated
   // fields actually carry
   private val pushableV: Gen[String] = Gen.oneOf(
-    "v", "w", "1", "0", "-0", "true", "false", "a\nb", "\u00e9", "x", "2")
+    "v", "w", "1", "0", "-0", "true", "false", "a\nb", "\u00e9", "x", "2",
+    "v\tw")
 
   property("get_json_object ≡ jsonGet on pushed equality outcomes (top-level)") =
     Prop.forAll(lineGen, keyGen, pushableV) { (line, k, v) =>

@@ -1,5 +1,7 @@
 package graft.loki
 
+import org.apache.spark.sql.catalyst.expressions.{GetJsonObject, Literal}
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.loki.LokiParsers
@@ -69,6 +71,32 @@ class LokiParsersSpec extends AnyFunSuite {
     assert(LokiParsers.jsonGet("""{"k":-0}""", "k") == "0")
     assert(LokiParsers.jsonGet("""{"k":01}""", "k") == null)
     assert(LokiParsers.jsonGet("""{"k":+1}""", "k") == null)
+  }
+
+  private def gjo(line: String, path: String): String = {
+    val r = GetJsonObject(
+      Literal(UTF8String.fromString(line)),
+      Literal(UTF8String.fromString("$." + path))).eval(null)
+    if (r == null) null else r.toString
+  }
+
+  // Inputs where Spark's get_json_object finds a value: a json null on an
+  // earlier duplicate key does not end the search, and Spark's reader
+  // accepts raw control characters and single-quoted strings. A null
+  // here would make the pushed equality filter drop the row.
+  Seq(
+    ("null on an earlier duplicate key",
+      """{"bb":null,"k":"","bb":"w","bb":"null"}""", "bb", "w"),
+    ("null on an earlier nested duplicate",
+      """{"a":{"b":null},"a":{"b":"w"}}""", "a.b", "w"),
+    ("raw control character in the line",
+      "{\"x\":\"a\tb\",\"k\":\"v\"}", "k", "v"),
+    ("single-quoted strings", "{'k':'v'}", "k", "v")).foreach {
+    case (name, line, path, want) =>
+      test(s"json: $name reads like get_json_object") {
+        assert(gjo(line, path) == want, s"get_json_object on [$line]")
+        assert(LokiParsers.jsonGet(line, path) == want, s"jsonGet on [$line]")
+      }
   }
 
   // ---------------------------------------------------------- pattern

@@ -2,11 +2,13 @@ package graft.sources.loki
 
 import org.scalacheck.{Gen, Prop, Properties}
 
-/** ScalaCheck properties for the metadata-response decoders
-  * ([[LokiHttp.parseStringArray]] / [[LokiHttp.parseObjectArray]]): an
-  * independently-written JSON encoder in the generator round-trips
-  * through the production parser for arbitrary label names/values —
-  * quotes, backslashes, braces, brackets, control chars, unicode. Lives
+/** ScalaCheck properties for the JSON response decoders (metadata,
+  * series, volume/metric, patterns, delete listing), which read every
+  * body through the shared Jackson mapper: an independently-written JSON
+  * encoder in the generator round-trips through the production decoders
+  * for arbitrary label names/values — quotes, backslashes, braces,
+  * brackets, control chars, unicode — and truncated, malformed or
+  * mis-shaped bodies fail loudly with the decoder's own message. Lives
   * in the source package (the decoders are private[loki] by design).
   */
 object LokiHttpProps extends Properties("LokiHttpCodec") {
@@ -122,9 +124,10 @@ object LokiHttpProps extends Properties("LokiHttpCodec") {
         diesWith("element has no value")(
           LokiHttp.parseMetricSamples(
             """{"status":"success","data":{"result":[{"metric":{}}]}}""")) &&
-        // an unpaired metric key (truncated/corrupt object) dies rather
-        // than misattributing the series to a shorter label set
-        diesWith("unpaired metric key")(
+        // an unpaired metric key (corrupt object) dies rather than
+        // misattributing the series to a shorter label set; the
+        // tokenizer rejects it as malformed JSON
+        diesWith("malformed")(
           LokiHttp.parseMetricSamples(
             """{"status":"success","data":{"result":[""" +
               """{"metric":{"a":"b","c"},"value":[1,"2"]}]}}""")) &&
