@@ -50,7 +50,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *     translator); strings decode their escapes; composite values
   *     return their raw text slice verbatim. The bare `| json` stage
   *     ([[jsonValid]], [[jsonFlatten]]) reads with Jackson's strict
-  *     defaults.
+  *     defaults; the explicit-expression stage marks `__error__` only
+  *     on lines [[jsonReadable]] rejects, so the unwrap render's
+  *     `| __error__=""` never drops a value the host reads.
   *   - logfmt: go-logfmt shapes — bare keys get an empty value, quoted
   *     values decode Go escapes, an unterminated quote is a parse error
   *     (real Loki sets `__error__=LogfmtParserErr`). Repeated keys:
@@ -242,6 +244,20 @@ object LokiParsers {
       case JsonToken.VALUE_NUMBER_INT => p.getBigIntegerValue.toString
       case _ => p.getText
     }
+
+  /** Whether [[jsonGet]] can read the line at all: a root object that
+    * parses completely under Spark's configuration, bytes after its
+    * close ignored. The explicit-expression `| json k="…"` stage marks
+    * `__error__` only when this fails, so every line the host accessor
+    * reads a value from keeps its sample under the unwrap render's
+    * `| __error__=""`.
+    */
+  def jsonReadable(line: String): Boolean =
+    try {
+      val p = sparkJson.createParser(line)
+      try p.nextToken() == JsonToken.START_OBJECT && { p.skipChildren(); true }
+      finally p.close()
+    } catch { case _: JsonProcessingException => false }
 
   /** Whether the line parses as one complete json value (with only
     * whitespace after it) — the strictness gate the BARE `| json` stage

@@ -310,7 +310,16 @@ final class LokiStubServer {
     if (injectFailure(ex, failNextPushes)) return
     val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
     pushBodies.synchronized(pushBodies += body)
-    parsePush(body).foreach { r =>
+    val pushed =
+      try parsePush(body)
+      catch {
+        // Loki answers a push body it cannot decode with 400
+        case e @ (_: IllegalArgumentException |
+            _: com.fasterxml.jackson.core.JsonProcessingException) =>
+          respond(ex, 400, String.valueOf(e.getMessage).getBytes(UTF_8))
+          return
+      }
+    pushed.foreach { r =>
       val svc = r.labels.get("service_name").getOrElse(
         serviceLabels.collectFirst {
           case l if r.labels.contains(l) => r.labels(l)
@@ -333,7 +342,7 @@ final class LokiStubServer {
 
   /** Decode the push payload the writer emits (strict JSON):
     * {"streams":[{"stream":{k:v,...},"values":[["ns","line"(,{meta})?],...]},...]}
-    * A body off this shape fails the request.
+    * A body off this shape is answered 400.
     */
   private def parsePush(json: String): Seq[LogRow] = {
     def field(n: JsonNode, name: String): JsonNode = {
@@ -346,15 +355,24 @@ final class LokiStubServer {
         s"push payload: expected a string in ${json.take(200)}")
       n.textValue
     }
-    def strMap(o: JsonNode): Map[String, String] =
+    def arr(n: JsonNode): Seq[JsonNode] = {
+      require(n.isArray, s"push payload: expected an array in ${json.take(200)}")
+      n.asScala.toSeq
+    }
+    def strMap(o: JsonNode): Map[String, String] = {
+      require(o.isObject, s"push payload: expected an object in ${json.take(200)}")
       o.properties.asScala.iterator.map(e => e.getKey -> text(e.getValue)).toMap
-    field(graft.sources.loki.LokiParsers.strictJson.readTree(json), "streams")
-      .asScala.toSeq.flatMap { st =>
+    }
+    arr(field(graft.sources.loki.LokiParsers.strictJson.readTree(json), "streams"))
+      .flatMap { st =>
         val labels = strMap(field(st, "stream"))
-        field(st, "values").asScala.map { v =>
+        arr(field(st, "values")).map { v =>
+          val e = arr(v)
+          require(e.size >= 2,
+            s"push payload: a value needs a timestamp and a line in ${json.take(200)}")
           // optional third element (Loki 3.x): structured-metadata object
-          LogRow(text(v.get(0)).toLong, labels, text(v.get(1)),
-            if (v.size > 2) strMap(v.get(2)) else Map.empty)
+          LogRow(text(e(0)).toLong, labels, text(e(1)),
+            if (e.size > 2) strMap(e(2)) else Map.empty)
         }
       }
   }
@@ -1419,11 +1437,15 @@ final class LokiStubServer {
         }
         kind match {
           case "json" =>
-            // jsoniter-strict error labeling; the EXTRACTION itself stays
-            // jsonparser-lenient (first match, trailing garbage ok) — the
+            // the bare stage labels errors jsoniter-strict; the explicit
+            // stage labels only the lines its lenient extraction cannot
+            // read (LokiParsers.jsonReadable), so a value the host
+            // accessor reads is never dropped by `| __error__=""` — the
             // __error__ label never drops a row by itself
-            if (!graft.sources.loki.LokiParsers.jsonValid(curLine))
-              labels += ("__error__" -> "JSONParserErr")
+            val readable =
+              if (exprs.isEmpty) graft.sources.loki.LokiParsers.jsonValid(curLine)
+              else graft.sources.loki.LokiParsers.jsonReadable(curLine)
+            if (!readable) labels += ("__error__" -> "JSONParserErr")
             if (exprs.isEmpty)
               graft.sources.loki.LokiParsers.jsonFlatten(curLine) match {
                 case Right(kvs) => kvs.foreach { case (k, v) => put(k, v) }

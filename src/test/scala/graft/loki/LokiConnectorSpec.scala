@@ -1302,6 +1302,33 @@ class LokiConnectorSpec extends SparkTestBase with BeforeAndAfterAll {
     } finally st.stop()
   }
 
+  test("the stub answers an off-shape push body 400 and ingests nothing") {
+    val st = new LokiStubServer
+    st.start()
+    try {
+      val client = java.net.http.HttpClient.newHttpClient()
+      def post(body: String): Int = client.send(
+        java.net.http.HttpRequest.newBuilder()
+          .uri(java.net.URI.create(st.endpoint + "/loki/api/v1/push"))
+          .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body))
+          .build(),
+        java.net.http.HttpResponse.BodyHandlers.discarding()).statusCode()
+      def push(streams: String) = s"""{"streams":$streams}"""
+      Seq(
+        push("""{"s":{"stream":{"app":"a"},"values":[["1","x"]]}}"""),
+        push("""[{"stream":"app","values":[["1","x"]]}]"""),
+        push("""[{"stream":{"app":"a"},"values":{"v":["1","x"]}}]"""),
+        push("""[{"stream":{"app":"a"},"values":["1"]}]"""),
+        push("""[{"stream":{"app":"a"},"values":[["1"]]}]"""),
+        push("""[{"stream":{"app":"a"},"values":[["1","x","meta"]]}]"""),
+        push("""[{"stream":{"app":"a"},"values":[["1","x"]]}""")
+      ).foreach(b => assert(post(b) == 400, b))
+      assert(st.ingested.isEmpty)
+      assert(post(push("""[{"stream":{"app":"a"},"values":[["1","x",{"t":"u"}]]}]""")) == 204)
+      assert(st.ingested.size == 1)
+    } finally st.stop()
+  }
+
   test("direction option: which n rows a LIMIT keeps (backward=newest, forward=oldest, paged=ignored)") {
     val st = new LokiStubServer
     st.start()

@@ -338,4 +338,51 @@ class LokiParserPushdownSpec extends SparkTestBase with BeforeAndAfterAll {
     assert(d.collect().map(r => (r.getString(0), r.getLong(1))).toSeq ==
       Seq(("json", 3L)))
   }
+
+  test("unwrap over loki_json_get keeps every line the host reads") {
+    // lines Spark's json reader accepts and a strict parser rejects (a
+    // raw tab, single quotes, bytes after the root `}`): the explicit
+    // `| json gp0="d"` stage must not mark them `__error__`, or the
+    // unwrap render's `| __error__=""` drops samples the host counts
+    val own = new LokiStubServer
+    own.start()
+    try {
+      own.seed(Seq(
+        "{\"x\":\"a\tb\",\"d\":\"5\"}",
+        "{'d':'7'}",
+        """{"d":"9"} trailing""",
+        """{"d":null,"d":"4"}""",
+        """{"d":"2"}""",
+        """{"d":"x"}""",
+        """{"d":"3","broken": }""",
+        "not json").zipWithIndex.map { case (l, i) =>
+        own.LogRow(base + i * 60L * 1000000000L, Map("app" -> "json"), l)
+      })
+      def acc = graft.functions.GraftFunctions.loki_unwrap(
+        graft.functions.GraftFunctions.loki_json_get(col("line"), lit("d")))
+      def q(push: Boolean) = spark.read.format("loki")
+        .option("endpoint", own.endpoint)
+        .option("default_label", "app")
+        .option("push_metric", push.toString)
+        .option("push_parsers", push.toString)
+        .load()
+        .filter(col("timestamp") >= lit("2024-01-01 00:00:00").cast("timestamp") &&
+          col("timestamp") < lit("2024-01-02 00:00:00").cast("timestamp"))
+        .groupBy(element_at(col("labels"), "app").as("app"))
+        .agg(avg(acc), min(acc), max(acc), sum(acc))
+      val pushed = q(push = true)
+      val plan = pushed.queryExecution.executedPlan.toString
+      assert(plan.contains("LokiMetricScan") &&
+        plan.contains("""| json gp0="d" | gp0!="" | unwrap gp0 | __error__="""""),
+        plan)
+      def rows(d: DataFrame) = d.collect().map(r =>
+        (r.getString(0), r.getDouble(1), r.getDouble(2), r.getDouble(3),
+          r.getDouble(4))).toSeq
+      val host = rows(q(push = false))
+      assert(host == Seq(("json", 5.4, 2.0, 9.0, 27.0)))
+      val got = rows(pushed)
+      assert(got.map(_.copy(_2 = 0.0)) == host.map(_.copy(_2 = 0.0)) &&
+        math.abs(got.head._2 - host.head._2) < 1e-9, s"got=$got")
+    } finally own.stop()
+  }
 }

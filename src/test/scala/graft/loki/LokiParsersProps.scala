@@ -86,6 +86,14 @@ object LokiParsersProps extends Properties("LokiParsers") {
         s"line=[$line] k=$k v=[$v] spark=[$spark] wire=[$wire]"
     }
 
+  // the unwrap render ends in `| __error__=""`: a line the host accessor
+  // reads a value from must not be marked by the explicit `| json` stage
+  property("jsonGet reads a value only from a jsonReadable line") =
+    Prop.forAll(lineGen, keyGen) { (line, k) =>
+      Prop(LokiParsers.jsonGet(line, k) == null || LokiParsers.jsonReadable(line)) :|
+        s"line=[$line] k=$k"
+    }
+
   private val nestedGen: Gen[String] = for {
     inner <- fieldGen
     pre <- Gen.listOf(fieldGen).map(_.take(2))
