@@ -23,7 +23,7 @@ import com.fasterxml.jackson.databind.JsonNode
   * endpoints of real Loki. Every JSON response is read as a tree by the
   * one strict Jackson mapper ([[LokiParsers.strictJson]]); a body that
   * does not parse fails with `… truncated` (unexpected end of input) or
-  * `… malformed`, and a body of the wrong shape names the missing or
+  * `… malformed` (trailing bytes after the value included), and a body of the wrong shape names the missing or
   * mistyped field. Each message carries the body prefix.
   */
 object LokiHttp {

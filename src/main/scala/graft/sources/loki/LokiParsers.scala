@@ -2,7 +2,7 @@ package graft.sources.loki
 
 import com.fasterxml.jackson.core.{JsonFactory, JsonFactoryBuilder, JsonParser, JsonProcessingException, JsonToken}
 import com.fasterxml.jackson.core.json.JsonReadFeature
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** SHARED semantics for LogQL parser stages (`| json`, `| logfmt`) — the
@@ -172,10 +172,12 @@ object LokiParsers {
     .enable(JsonReadFeature.ALLOW_SINGLE_QUOTES)
     .build()
 
-  /** Strict JSON: Jackson's defaults. The bare `| json` stage, the Loki
+  /** Strict JSON: Jackson's defaults, and a tree read fails on anything
+    * but whitespace after the value. The bare `| json` stage, the Loki
     * HTTP response decoders and the stub's push decoder all read with it.
     */
-  private[loki] val strictJson: ObjectMapper = new ObjectMapper()
+  private[loki] val strictJson: ObjectMapper =
+    new ObjectMapper().enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
 
   /** Extraction of a dotted path (`a` or `a.b.c`) from a json-object
     * line, with the outcome Spark's `get_json_object` gives — the

@@ -1321,7 +1321,8 @@ class LokiConnectorSpec extends SparkTestBase with BeforeAndAfterAll {
         push("""[{"stream":{"app":"a"},"values":["1"]}]"""),
         push("""[{"stream":{"app":"a"},"values":[["1"]]}]"""),
         push("""[{"stream":{"app":"a"},"values":[["1","x","meta"]]}]"""),
-        push("""[{"stream":{"app":"a"},"values":[["1","x"]]}""")
+        push("""[{"stream":{"app":"a"},"values":[["1","x"]]}"""),
+        push("""[{"stream":{"app":"a"},"values":[["1","x"]]}]""") + " {"
       ).foreach(b => assert(post(b) == 400, b))
       assert(st.ingested.isEmpty)
       assert(post(push("""[{"stream":{"app":"a"},"values":[["1","x",{"t":"u"}]]}]""")) == 204)

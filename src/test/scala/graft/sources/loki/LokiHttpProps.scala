@@ -236,6 +236,7 @@ object LokiHttpProps extends Properties("LokiHttpCodec") {
         LokiHttp.parseStringArray(whole.dropRight(2))) &&
         diesWith("has no data field")(
           LokiHttp.parseStringArray("""{"status":"success"}""")) &&
+        diesWith("malformed")(LokiHttp.parseStringArray(whole + " {")) &&
         diesWith("truncated")(
           LokiHttp.parseObjectArray(
             s"""{"status":"success","data":[{${enc("k")}:${enc(v)}"""))
