@@ -9,6 +9,28 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+# Parquet reads build their options from the one JVM-wide configuration
+# (LokiColumnarReader.conf). The one-argument ParquetFileReader.open and the
+# no-argument ParquetReadOptions.builder() each parse Hadoop's
+# core-default.xml/core-site.xml again, which cost more than decoding a
+# 5,000-row response page. Calls may span lines, so match whole files with
+# balanced parentheses and look for a top-level comma in the arguments.
+per_call=$(find src/main -name '*.scala' -exec perl -0777 -ne '
+  sub at { 1 + (substr($_, 0, $_[0]) =~ tr/\n//) }
+  while (/ParquetFileReader\.open\s*(\(((?:[^()]++|(?1))*)\))/g) {
+    my ($call, $args, $line) = ($&, $2, at($-[0]));
+    $args =~ s/(\((?:[^()]++|(?1))*\))//g;
+    print "$ARGV:$line: $call\n" unless $args =~ /,/;
+  }
+  print "$ARGV:", at($-[0]), ": $&\n" while /ParquetReadOptions\.builder\s*\(\s*\)/g;
+' {} +)
+if [[ -n "$per_call" ]]; then
+  echo "FAIL: parquet read options built from per-call defaults; pass" >&2
+  echo "ParquetReadOptions.builder(LokiColumnarReader.conf) instead:" >&2
+  echo "$per_call" >&2
+  exit 1
+fi
+
 sbt -batch Test/compile "runMain graft.Smoke" | tee /tmp/precommit_smoke.out
 
 # The benchmark (perfbench/) is its own sbt build on top of this one, so a

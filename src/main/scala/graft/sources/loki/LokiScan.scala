@@ -1,11 +1,15 @@
 package graft.sources.loki
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.ParquetReadOptions
+import org.apache.parquet.conf.HadoopParquetConfiguration
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar}
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.sources.Filter
@@ -232,6 +236,9 @@ case class LokiScan(
   }
 
   override def toBatch: Batch = this
+
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    Array(new LokiPagesMetric, new LokiWireBytesMetric, new LokiDecodeMsMetric)
 
   // EXPLAIN surface, mirroring the reference's DisplayAs (scan.rs:149-175)
   override def description(): String = {
@@ -778,6 +785,18 @@ class LokiCountReader(p: LokiInputPartition)
   * single request decodes nothing and emits a column-less batch. Ascending
   * order, which the held-run cut rests on, is checked on forward pages
   * only: a backward LIMIT response is descending by contract.
+  *
+  * Each page opens with its own `ParquetReadOptions`, built from the one
+  * JVM-wide configuration in the companion object. Building options
+  * without a configuration parses Hadoop's `core-default.xml` and
+  * `core-site.xml` again, which cost more than decoding a 5,000-row page.
+  * The options themselves stay per page: `ParquetFileReader.close()`
+  * releases the options' codec factory, so with one shared set a closing
+  * reader would return to the pool decompressors that readers in other
+  * tasks are still using.
+  *
+  * Task metrics (declared by `LokiScan.supportedCustomMetrics`): responses
+  * read, their body bytes and the time spent decoding them.
   */
 class LokiColumnarReader(p: LokiInputPartition)
   extends PartitionReader[ColumnarBatch] {
@@ -807,6 +826,9 @@ class LokiColumnarReader(p: LokiInputPartition)
   // the decoded page's raw ns timestamps, paged reads only: the cursor
   private var tsNs: Array[Long] = _
   private var batch: ColumnarBatch = _
+  private var pages = 0L
+  private var wireBytes = 0L
+  private var decodeNs = 0L
 
   override def next(): Boolean = {
     while (!done) {
@@ -814,7 +836,11 @@ class LokiColumnarReader(p: LokiInputPartition)
       val body = LokiHttp.queryRange(p.endpoint, p.logql, cursor, end,
         if (paged) Some(ps) else p.limit,
         if (paged) Some("forward") else p.direction)
+      pages += 1
+      wireBytes += body.length
+      val t0 = System.nanoTime()
       val rows = if (body.isEmpty) 0 else decode(body)
+      decodeNs += System.nanoTime() - t0
       if (!paged || rows < ps) {
         // a single request or a short page: nothing was cut
         done = true
@@ -851,6 +877,11 @@ class LokiColumnarReader(p: LokiInputPartition)
 
   override def get(): ColumnarBatch = batch
 
+  override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
+    LokiTaskMetric("loki_pages", pages),
+    LokiTaskMetric("loki_wire_bytes", wireBytes),
+    LokiTaskMetric("loki_decode_ms", decodeNs / 1000000L))
+
   override def close(): Unit = {
     if (vecs != null) vecs.foreach(_.close())
     vecs = null
@@ -861,7 +892,8 @@ class LokiColumnarReader(p: LokiInputPartition)
     * returns its row count.
     */
   private def decode(body: Array[Byte]): Int = {
-    val reader = ParquetFileReader.open(new ByteArrayInputFile(body))
+    val reader = ParquetFileReader.open(new ByteArrayInputFile(body),
+      ParquetReadOptions.builder(LokiColumnarReader.conf).build())
     try {
       val md = reader.getFooter.getFileMetaData
       val fileSchema = md.getSchema
@@ -966,4 +998,29 @@ class LokiColumnarReader(p: LokiInputPartition)
       i += 1
     }
   }
+}
+
+object LokiColumnarReader {
+  /** Hadoop's default configuration, parsed once per JVM and only read
+    * afterwards; every page builds its options from it.
+    */
+  private lazy val conf = new HadoopParquetConfiguration(new Configuration())
+}
+
+/** `query_range` responses the scan read, summed over tasks. */
+class LokiPagesMetric extends CustomSumMetric {
+  override def name(): String = "loki_pages"
+  override def description(): String = "Loki responses read"
+}
+
+/** Body bytes of those responses. */
+class LokiWireBytesMetric extends CustomSumMetric {
+  override def name(): String = "loki_wire_bytes"
+  override def description(): String = "Loki response bytes"
+}
+
+/** Time spent decoding those responses. */
+class LokiDecodeMsMetric extends CustomSumMetric {
+  override def name(): String = "loki_decode_ms"
+  override def description(): String = "Loki decode time (ms)"
 }

@@ -76,9 +76,8 @@ class LokiRowsWrittenMetric extends CustomSumMetric {
   override def description(): String = "rows written to Loki"
 }
 
-case class LokiRowsWrittenTaskMetric(value: Long) extends CustomTaskMetric {
-  override def name(): String = "loki_rows_written"
-}
+/** One task's value of a named sum metric, for the scan's and the write's. */
+case class LokiTaskMetric(name: String, value: Long) extends CustomTaskMetric
 
 class LokiWriteBuilder(
     options: LokiOptions,
@@ -310,7 +309,7 @@ class LokiDataWriter(options: LokiOptions) extends DataWriter[InternalRow] {
   }
 
   override def currentMetricsValues(): Array[CustomTaskMetric] =
-    Array(LokiRowsWrittenTaskMetric(count))
+    Array(LokiTaskMetric("loki_rows_written", count))
 
   // at-least-once: batches already POSTed by write() stay in Loki (see
   // class doc); only the unflushed tail is dropped

@@ -165,11 +165,45 @@ class LokiConnectorSpec extends SparkTestBase with BeforeAndAfterAll {
         mStub.clear()
         mStub.seed(seeded)
         val tag = s"codec=$codec dict=$dict v2=$v2"
-        for (opts <- Seq(Map.empty[String, String], Map("query_limit" -> "150"))) {
+        // the last leg decodes compressed pages in four tasks at once,
+        // all through the reader's one shared parquet configuration
+        for (opts <- Seq(Map.empty[String, String], Map("query_limit" -> "150"),
+            Map("query_limit" -> "150", "partitions" -> "4"))) {
           val got = relation(scan(opts))
           assert(got == expected, s"$tag opts=$opts: ${got.size} rows")
         }
       }
+    } finally mStub.stop()
+  }
+
+  test("a paged scan reports its pages, wire bytes and decode time as task metrics") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val mStub = new LokiStubServer
+    mStub.start()
+    try {
+      val base = 1704067200000000000L
+      mStub.seed((0 until 250).map(i =>
+        mStub.LogRow(base + i * 1000000000L, Map("app" -> "m"), s"m-$i")))
+      val df = spark.read.format("loki")
+        .option("endpoint", mStub.endpoint)
+        .option("default_label", "app")
+        .option("query_limit", "100")
+        .load().filter(
+          col("timestamp") >= lit("2024-01-01 00:00:00").cast("timestamp") &&
+          col("timestamp") < lit("2024-02-01 00:00:00").cast("timestamp"))
+      val before = mStub.queries.synchronized(mStub.queries.size)
+      assert(df.collect().length == 250)
+      val requests = mStub.queries.synchronized(mStub.queries.size) - before
+      val plan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      val metrics = plan.collectFirst { case b: BatchScanExec => b.metrics }.get
+      assert(requests >= 3, s"$requests requests for 250 rows in pages of 100")
+      assert(metrics("loki_pages").value == requests)
+      assert(metrics("loki_wire_bytes").value > 0)
+      assert(metrics.contains("loki_decode_ms"))
     } finally mStub.stop()
   }
 
