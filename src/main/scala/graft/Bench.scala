@@ -313,19 +313,16 @@ object Bench {
     // established cold/min arrays or the final total line
     duckdbArr.foreach(a => println(
       s"""{"metric":"per_query_duckdb","unit":"centisec","order":"sorted_query_names","n":${results.size},"duckdb":$a}"""))
-    // the NAMES behind the positional arrays, on their own line (round-16
-    // verdict item 2: the driver's round-over-round PERF comparison could
-    // not re-align the arrays when the query count changed, because
-    // "sorted_query_names" never shipped the names). They CANNOT ride the
-    // per_query line itself: 228 names ≈ 4.8 KB, and the driver keeps only
-    // the LAST ~2000 chars of stdout — a names field inline would evict
-    // the cold/min arrays from the captured tail entirely (a head-truncated
-    // JSON line parses as nothing). Printed ahead of per_query so if
-    // anything truncates it is this line — full-stdout consumers
-    // (BENCH_COMPARE, local artifacts) always see it. Additions-only:
-    // every previously-emitted line is unchanged.
-    println(s"""{"metric":"per_query_names","order":"sorted_query_names","n":${results.size},"names":${results.map("\"" + _._1 + "\"").mkString("[", ",", "]")}}""")
-    println(s"""{"metric":"per_query","unit":"centisec","order":"sorted_query_names","n":${results.size},"failed_idx":$failedIdx,"cold":${csArr(_._2)},"min":${csArr(_._3)}}""")
+    // the NAMES behind the positional arrays travel as a digest on the
+    // per_query line: the list itself (228 names, ~4.8 KB) cannot survive
+    // a ~2000-char stdout-tail capture. A consumer re-aligns arrays by
+    // hashing its own sorted name list (e.g. the CORRECTNESS artifact's
+    // keys) the same way: SHA-256 over the names joined by '\n', first 16
+    // hex digits.
+    val namesDigest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(results.map(_._1).mkString("\n").getBytes("UTF-8"))
+      .take(8).map(b => f"${b & 0xff}%02x").mkString
+    println(s"""{"metric":"per_query","unit":"centisec","order":"sorted_query_names","n":${results.size},"names_sha256":"$namesDigest","failed_idx":$failedIdx,"cold":${csArr(_._2)},"min":${csArr(_._3)}}""")
     // FINAL driver-facing line: printed LAST (after spark.stop(), so no
     // late log write can trail it) and kept tiny — counts and totals only,
     // no per-query maps (they live on the total_full line above and in

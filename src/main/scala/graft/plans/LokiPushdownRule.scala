@@ -143,6 +143,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(_ => LokiDeleteRule)
     e.injectOptimizerRule(_ => LokiInsertRowsRule)
     e.injectPlannerStrategy(_ => TopKStrategy)
+    e.injectPlannerStrategy(_ => LokiLocalStrategy)
     graft.functions.GraftFunctions.inject(e)
   }
 }

@@ -36,6 +36,20 @@ import org.apache.parquet.schema.{MessageType, MessageTypeParser}
   * bumps per request).
   */
 object LokiStubServer {
+  // Real Loki (Go) sets TCP_NODELAY on every connection. The JDK server
+  // leaves Nagle's algorithm on unless this property is set before its
+  // first socket, and then a small response sent after its headers waits
+  // for the client's delayed ACK: about 40 ms per back-to-back request on
+  // a kept-alive connection. An explicit -D setting wins.
+  if (System.getProperty("sun.net.httpserver.nodelay") == null)
+    System.setProperty("sun.net.httpserver.nodelay", "true")
+
+  /** A JDK HTTP server on a free loopback port, created after the
+    * property above is set.
+    */
+  private def createServer(): HttpServer =
+    HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+
   val reqs = new java.util.concurrent.atomic.AtomicLong(0)
   val cacheHits = new java.util.concurrent.atomic.AtomicLong(0)
   val serveNs = new java.util.concurrent.atomic.AtomicLong(0)
@@ -96,9 +110,10 @@ final class LokiStubServer {
   // parquet on a cache that thrashed empty (the loki_log_patterns warm
   // drift the r16 verdict asked to pin: code and plan were unchanged,
   // the stub's cache footprint was not). Real Loki bounds its results
-  // cache by memory the same way.
+  // cache by memory the same way. The budget is 256 MB unless
+  // GRAFT_STUB_CACHE_BYTES sets it.
   private val respCacheBudget: Long = sys.env.get("GRAFT_STUB_CACHE_BYTES")
-    .map(_.toLong).getOrElse(1024L << 20)
+    .map(_.toLong).getOrElse(256L << 20)
   private var respCacheBytes = 0L
   private val respCache =
     new java.util.LinkedHashMap[(String, Long, Long, Option[Int]), Array[Byte]](
@@ -217,7 +232,7 @@ final class LokiStubServer {
     }
 
   def start(): Int = {
-    server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    server = LokiStubServer.createServer()
     // a real Loki serves concurrent requests; the default (null) executor
     // runs every handler on the single dispatcher thread, which would
     // serialize the connector's parallel slice reads and parallel stats

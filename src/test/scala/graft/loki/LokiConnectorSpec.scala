@@ -204,6 +204,30 @@ class LokiConnectorSpec extends SparkTestBase with BeforeAndAfterAll {
       assert(metrics("loki_pages").value == requests)
       assert(metrics("loki_wire_bytes").value > 0)
       assert(metrics.contains("loki_decode_ms"))
+      // that scan was read on the driver; with partitions=2 the same
+      // counters come from two tasks
+      assert(plan.isInstanceOf[graft.plans.LokiLocalExec], plan.toString)
+      val df2 = spark.read.format("loki")
+        .option("endpoint", mStub.endpoint)
+        .option("default_label", "app")
+        .option("query_limit", "100")
+        .option("partitions", "2")
+        .load().filter(
+          col("timestamp") >= lit("2024-01-01 00:00:00").cast("timestamp") &&
+          col("timestamp") < lit("2024-02-01 00:00:00").cast("timestamp"))
+      val before2 = mStub.queries.synchronized(mStub.queries.size)
+      assert(df2.collect().length == 250)
+      val requests2 = mStub.queries.synchronized(mStub.queries.size) - before2
+      val plan2 = df2.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      assert(plan2.collectFirst { case l: graft.plans.LokiLocalExec => l }.isEmpty,
+        plan2.toString)
+      val metrics2 = plan2.collectFirst { case b: BatchScanExec => b.metrics }.get
+      assert(requests2 >= 4, s"$requests2 requests for two slices in pages of 100")
+      assert(metrics2("loki_pages").value == requests2)
+      assert(metrics2("loki_wire_bytes").value > 0)
     } finally mStub.stop()
   }
 
@@ -1333,6 +1357,28 @@ class LokiConnectorSpec extends SparkTestBase with BeforeAndAfterAll {
       client.send(req, java.net.http.HttpResponse.BodyHandlers.discarding())
       client.send(req, java.net.http.HttpResponse.BodyHandlers.discarding())
       assert(st.ingested.size == 2, "re-POSTed batch must not double-count")
+    } finally st.stop()
+  }
+
+  test("the stub answers back-to-back small query_range calls without a Nagle stall") {
+    // with Nagle's algorithm on, a response body written after its headers
+    // waits for the client's delayed ACK, about 40 ms per request on a
+    // kept-alive connection; real Loki sets TCP_NODELAY and so does the stub
+    val st = new LokiStubServer
+    st.start()
+    try {
+      val base = 1704067200000000000L
+      st.seed((0 until 200).map(i =>
+        st.LogRow(base + i * 1000000000L, Map("app" -> "n"), s"nagle line $i")))
+      val ms = (0 until 20).map { _ =>
+        val t0 = System.nanoTime()
+        val body = graft.sources.loki.LokiHttp.queryRange(st.endpoint, """{app="n"}""",
+          base, base + 3600L * 1000000000L, Some(200), None)
+        assert(body.nonEmpty)
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      val median = (ms(9) + ms(10)) / 2
+      assert(median < 20.0, s"median $median ms over ${ms.map(m => f"$m%.1f")}")
     } finally st.stop()
   }
 
