@@ -31,6 +31,16 @@ if [[ -n "$per_call" ]]; then
   exit 1
 fi
 
+# Only the three entry points the scripts and docs use may define a
+# `main`: dev-only mains with no caller once grew to ~1,200 lines.
+extra_mains=$(grep -rlE '^\s*def main\s*\(|extends\s+App\b' src/main --include='*.scala' |
+  grep -vE '/graft/(Smoke|Verify|Bench)\.scala$' || true)
+if [[ -n "$extra_mains" ]]; then
+  echo "FAIL: an entry point (\`def main\` or \`extends App\`) outside Smoke, Verify and Bench:" >&2
+  echo "$extra_mains" >&2
+  exit 1
+fi
+
 sbt -batch Test/compile "runMain graft.Smoke" | tee /tmp/precommit_smoke.out
 
 # The benchmark (perfbench/) is its own sbt build on top of this one, so a

@@ -28,8 +28,7 @@ import org.apache.spark.sql.DataFrame
   * has been stopped are dropped without touching the (already torn down)
   * cache, and unpersist is best-effort.
   *
-  * The cap (`graft.cache.maxLiveCorpora`; legacy key
-  * `graft.dedup.maxLiveCorpora` still honored, default 12) is a
+  * The cap (`graft.cache.maxLiveCorpora`, default 12) is a
   * per-session memory knob: the full gate interleaves ~10 distinct
   * registered corpora (shingle groups, embedding groups, simhash union +
   * slice, BPE rounds, PMI/dup-spans gram relations, the incremental
@@ -43,7 +42,6 @@ object CacheRegistry {
 
   private def maxLiveCorpora(session: org.apache.spark.sql.SparkSession): Int =
     session.conf.getOption("graft.cache.maxLiveCorpora")
-      .orElse(session.conf.getOption("graft.dedup.maxLiveCorpora"))
       .map(_.toInt).getOrElse(12)
 
   private var live: Seq[(DataFrame, Seq[DataFrame])] = Nil

@@ -1652,7 +1652,7 @@ object ConnectorOps {
         // the plan pin runs on the FINAL returned relation — the outer
         // unix_micros projection collapses into the aggregate list, and
         // a pin on a pre-projection probe once certified a rewrite the
-        // returned plan wasn't actually using (the PLANS.md catch).
+        // returned plan wasn't actually using.
         // partitions=4: the metric window slices into whole-bucket runs
         // (disjoint-range-composable like the log scan), so the oracle
         // also certifies the sliced union
@@ -2936,7 +2936,7 @@ object ConnectorOps {
           .count()
         Seq((rt(part) == part,
           rt(LokiReaderFactory()).isInstanceOf[LokiReaderFactory],
-          rt(LokiWriterFactory(LokiOptions("http://x", None, 1, 4096, false, false)))
+          rt(LokiWriterFactory(LokiOptions("http://x", None, 1, 4096, false)))
             .isInstanceOf[LokiWriterFactory],
           scanRows))
           .toDF("part_roundtrip_ok", "reader_factory_ok", "writer_factory_ok",

@@ -486,7 +486,7 @@ object DedupOps {
 
   /** Contrastive negative sampling over pre-built anchors + clusters
     * (the `documents_contrastive_negatives` gate body, extracted so
-    * ScaleSmoke can drive both branches on a multiplied corpus): each
+    * DedupSpec can drive both branches): each
     * anchor draws 5 deterministic pseudo-random candidates (cross-engine
     * md5-prefix hash), keeps the first 3 surviving keep-first dedup and
     * the near-dup leakage guard (a candidate sharing the anchor's
@@ -520,7 +520,7 @@ object DedupOps {
     // TWO bounds gate the map-literal branch: bytes (broadcast safety)
     // AND membership count — element_at on a MapType value is a LINEAR
     // scan, so the branch's CPU is anchors × 5 × |map|; measured at the
-    // ×16 ScaleSmoke clique corpus (80k members, well under the byte
+    // ×16 copy-clique documents corpus (80k members, well under the byte
     // cap) the probe cost alone was ~65 s where the join branch is
     // hash-probed. 4096 members × 5 probes keeps the scan cost below
     // the join's exchange setup at any anchor count. Overridable so the
@@ -905,9 +905,9 @@ object DedupOps {
     // so successive delta batches against the same corpus hit the same
     // CacheManager entry (plan-keyed) instead of rebuilding the index;
     // and because the rep-level index plan is the SAME plan the full
-    // prefix path builds, a prior full-corpus run warms it. Measured in
-    // ScaleSmoke: first probe pays the index build, the next delta probes
-    // the warm index at a fraction of the full re-pairing.
+    // prefix path builds, a prior full-corpus run warms it: the first
+    // probe pays the index build, the next delta probes the warm index
+    // at a fraction of the full re-pairing.
     val groups = groupedByArray(docs, "doc_id", "sh")
     val reps = groups.select(col("rep").as("doc_id"), col("arr").as("sh"))
     // the SAME index construction as the full prefix path — structurally,
@@ -1055,7 +1055,7 @@ object DedupOps {
     * what the DuckDB oracle (a plain base semi-join) re-verifies.
     */
   /** 20-token chunk relation of a (doc_id, text) corpus — the C4-style
-    * dedup unit shared by the bloom path, its spec, and ScaleSmoke.
+    * dedup unit shared by the bloom path and its spec.
     */
   private[graft] def chunks20(docs: DataFrame): DataFrame =
     docs
@@ -1644,7 +1644,7 @@ object DedupOps {
         val docs = documents(s, d)
           .select(col("doc_id"), split(col("text"), " ").as("toks"))
         // the shared 20-token chunking unit (chunks20) — the same rule
-        // the bloom path and ScaleSmoke use; one definition, no drift
+        // the bloom path uses; one definition, no drift
         val chunks = chunks20(documents(s, d))
         val winners = chunks.groupBy("chunk")
           .agg(min(struct(col("doc_id"), col("pos"))).as("first"))

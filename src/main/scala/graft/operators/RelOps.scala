@@ -153,9 +153,9 @@ object RelOps {
   }
 
   /** Five-round integer fixed-point PageRank over a directed edge list
-    * (src, dst) — the iterate behind the `graph_pagerank` gate row and
-    * ScaleSmoke's pagerank leg. All arithmetic is ×1e12 fixed-point
-    * integer (`r div deg`, `85·Σ div 100`), so the result is
+    * (src, dst) — the iterate behind the `graph_pagerank` gate row. All
+    * arithmetic is ×1e12 fixed-point integer (`r div deg`, `85·Σ div 100`),
+    * so the result is
     * accumulation-order-independent and bit-identical across engines.
     *
     * Scale shape: the edge relation is cached PRE-PARTITIONED on the
@@ -642,9 +642,7 @@ object RelOps {
   }
 
   /** Inverted-trigram accelerated substring search (see the
-    * `part_trigram_search` entry) — shared by the gate query and
-    * ScaleSmoke so the smoke exercises the shipped pipeline, not a
-    * copy. Lossless for patterns of ≥ 3 characters.
+    * `part_trigram_search` entry). Lossless for patterns of ≥ 3 characters.
     */
   def trigramSearch(parts: DataFrame, pat: String): DataFrame = {
     require(pat.length >= 3, "trigram prefilter is lossless only for >=3 chars")
@@ -2383,9 +2381,9 @@ object RelOps {
           .groupBy(col("prev").as("from_type"), col("event_type").as("to_type"))
           .agg(count(lit(1)).as("n"))
           // cached (round 17): the totals broadcast leg and the main job
-          // each re-ran the whole scan + lag-window pipeline (Prof: the
-          // window stage twice per pass); the cached relation is the
-          // type×type count matrix — dozens of rows
+          // each re-ran the whole scan + lag-window pipeline (a profile
+          // showed the window stage twice per pass); the cached relation
+          // is the type×type count matrix — dozens of rows
           .cache()
         graft.operators.CacheRegistry.register(pairs, Seq(pairs))
         val totals = pairs.groupBy("from_type").agg(sum("n").as("n_from"))

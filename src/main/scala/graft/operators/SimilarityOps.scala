@@ -280,7 +280,7 @@ object SimilarityOps {
   private[graft] def kmeans8(s: SparkSession, d: String): (DataFrame, DataFrame) =
     kmeans8Of(vecs(s, d))
 
-  /** [[kmeans8]] over any (vec_id, v) relation — the ScaleSmoke surface. */
+  /** [[kmeans8]] over any (vec_id, v) relation. */
   private[graft] def kmeans8Of(e: DataFrame): (DataFrame, DataFrame) = {
     // spread before the quantize+assign passes: every Lloyd round and the
     // final assignment do k×dim integer distances per row, and a one-file

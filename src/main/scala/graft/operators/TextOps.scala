@@ -123,8 +123,7 @@ object TextOps {
     * scales with the source): under `graft.broadcast.maxBytes` (default
     * 64 MB) the relation broadcasts as before; past it the hint is
     * dropped and the join falls back to a shuffle join (AQE may still
-    * re-plan at runtime). ExplainSpec pins both branches; ScaleSmoke
-    * drives the fallback on a multiplied corpus.
+    * re-plan at runtime). ExplainSpec pins both branches.
     */
   private[graft] def estimatedSmall(df: DataFrame): Boolean = {
     val maxBytes = df.sparkSession.conf

@@ -25,10 +25,14 @@ import graft.sources.loki.{LogQL, LokiHttp, LokiOptions, LokiTable}
   *   - every conjunct must translate: label matcher (absent-matching
   *     forms rejected — Loki would delete streams the SQL predicate's
   *     NULL semantics spare), line filter, or timestamp bound;
-  *   - at least one label matcher, or (with a `default_label` and at
-  *     least one other conjunct) the default fallback — the endpoint
-  *     requires a selector, and a bare unconditional `DELETE FROM loki`
-  *     is deliberately refused rather than expanded to "everything";
+  *   - the query is assembled like the table's reads
+  *     ([[LogQL.logQuery]]): the `selector` option's pieces first, then
+  *     the translated matchers and line filters, with the
+  *     `default_label` fallback when there is no matcher at all — so a
+  *     DELETE never reaches rows the table's own SELECT cannot see. The
+  *     endpoint requires a selector, and a bare unconditional
+  *     `DELETE FROM loki` is deliberately refused rather than expanded to
+  *     "everything";
   *   - timestamp bounds translate at full ns precision: the compactor's
   *     delete window is INCLUSIVE on both ends (an entry is deleted when
   *     start ≤ ts ≤ end), so the SQL-exclusive `ts < E` ships as the
@@ -81,26 +85,24 @@ object LokiDeleteRule extends Rule[LogicalPlan] {
             }
         }
     }
-    // repeated bounds would engage the strict/parity tie-break — refuse
-    // rather than encode it twice (the metric rule's rule)
+    // a repeated bound of one kind is refused rather than folded to the
+    // tightest: the metric rule's rule, kept simple on an irreversible
+    // operation
     if (starts.size > 1 || ends.size > 1) return None
     // an exclusive end at the saturated floor is an empty window (no ns
     // timestamp precedes it) — refuse rather than wrap the −1ns below
     if (ends.contains(Long.MinValue)) return None
-    matchers = matchers.reverse
-    lines = lines.reverse
-    val esc = table.options.escapeLogql
-    val matcherParts =
-      if (matchers.nonEmpty) matchers.map(_.render(esc))
-      else table.options.defaultLabel match {
-        // default-label fallback only when SOMETHING else narrows the
-        // delete — a bare DELETE FROM loki must not expand to everything
-        case Some(l) if lines.nonEmpty || starts.nonEmpty || ends.nonEmpty =>
-          Seq(LogQL.defaultMatcher(l).render(esc))
-        case _ => return None
-      }
-    val query = (matcherParts.mkString("{", ", ", "}") +:
-      lines.map(_.render(esc))).mkString(" ")
+    // a bare DELETE FROM loki must not expand to everything the table
+    // reads: SOMETHING in the condition must narrow the delete
+    if (matchers.isEmpty && lines.isEmpty && starts.isEmpty && ends.isEmpty)
+      return None
+    // the scan's assembler: the table's `selector` option narrows the
+    // delete exactly as it narrows the table's reads
+    val query = LogQL.logQuery(
+      table.options, matchers.reverse, lines.reverse, Nil) match {
+      case Some(q) => q.query
+      case None => return None
+    }
     // SQL window [start, end) → the compactor's inclusive window
     // [start, end − 1ns] (see LokiHttp.deleteRequest)
     Some(LokiDeleteCommand(table.options, query,

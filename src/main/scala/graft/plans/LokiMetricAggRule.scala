@@ -270,15 +270,13 @@ object LokiMetricAggRule extends Rule[LogicalPlan] {
       // query) and applies them to whatever the base aggregate needs.
       // Conjuncts outside that surface — parsed predicates (their gp<N>
       // labels can't be assigned stably from here), timestamp bounds —
-      // keep the host fallback. Stages always render escaped
-      // (beyond-parity surface, the ParsedFilter discipline).
+      // keep the host fallback.
       case ae @ AggregateExpression(_, _, false, Some(cond), _) =>
         def stagesOf(c: Expression): Option[Seq[String]] = {
           val conjuncts = split(c)
           val rendered = conjuncts.map { cj =>
-            LogQL.lineFilter(cj).map(lf => Seq(lf.render(escape = true)))
-              .orElse(LogQL.labelFilterStages(cj)
-                .map(_.map(_.render(escape = true))))
+            LogQL.lineFilter(cj).map(lf => Seq(lf.render))
+              .orElse(LogQL.labelFilterStages(cj).map(_.map(_.render)))
           }
           if (rendered.forall(_.isDefined)) Some(rendered.flatMap(_.get))
           else None
@@ -462,40 +460,26 @@ object LokiMetricAggRule extends Rule[LogicalPlan] {
     // aggregate list (`unix_micros(date_trunc(…)) AS bucket_us`), and
     // the first cut of this rule bailed on exactly that shape — the
     // EXPLAIN-pinned gate probe rewrote while the returned (projected)
-    // plan silently fell back to the scan (caught by the PLANS.md dump).
+    // plan silently fell back to the scan (caught by a plan dump).
     // The structural mapping below substitutes the new relation's
     // attributes for each grouping/count subexpression and accepts iff
     // nothing of the old relation remains. The substitution runs after
     // the relation is built, so build it first (see below). ----
 
-    // ---- render the metric LogQL (the LokiScan.build assembly rules:
-    // selector-option pieces re-render escaped, optimizer-derived pieces
-    // follow escape_logql, selector stages lead) ----
-    val esc = table.options.escapeLogql
-    val (optMatchers, optStages) = table.options.selector
-      .map(LogQL.parseSelector).getOrElse((Nil, Nil))
-    val newMatchers = matchers.filterNot(table.pushedLabelMatchers.contains)
-    val newLines = lines.filterNot(table.pushedLineFilters.contains)
-    val matcherParts =
-      if (optMatchers.nonEmpty || table.pushedLabelMatchers.nonEmpty ||
-          newMatchers.nonEmpty)
-        optMatchers.map(_.render(escape = true)) ++
-          (table.pushedLabelMatchers ++ newMatchers).map(_.render(esc))
-      else table.options.defaultLabel match {
-        case Some(l) => Seq(LogQL.defaultMatcher(l).render(esc))
-        // no matcher and no default: the scan path throws the canonical
-        // no-matcher error — don't preempt it with a rewrite
-        case None => return None
-      }
-    val lineParts = optStages.map(_.render(escape = true)) ++
-      (table.pushedLineFilters ++ newLines).map(_.render(esc)) ++
-      // parser stages after the line filters (the scan-path ordering):
-      // filter-pushed stages already on the table, new predicate stages,
-      // then the bare grouping extractions
-      (table.pushedParsedFilters ++ parsedFilters ++ parsedStages.result())
-        .map(_.render)
-    val inner = (matcherParts.mkString("{", ", ", "}") +: lineParts)
-      .mkString(" ")
+    // ---- render the metric LogQL through the scan's assembler: filters
+    // already pushed on the table, then this rule's new predicates, then
+    // the bare grouping extractions. No matcher and no default: the scan
+    // path throws the canonical no-matcher error — don't preempt it ----
+    val inner = LogQL.logQuery(table.options,
+      table.pushedLabelMatchers ++
+        matchers.filterNot(table.pushedLabelMatchers.contains),
+      table.pushedLineFilters ++
+        lines.filterNot(table.pushedLineFilters.contains),
+      table.pushedParsedFilters ++ parsedFilters ++ parsedStages.result()
+    ) match {
+      case Some(q) => q.query
+      case None => return None
+    }
     val groupLabels = labelGroups.map(_._2)
 
     // ---- materialize the wire kinds: assign one generated label per

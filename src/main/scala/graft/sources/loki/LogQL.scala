@@ -20,55 +20,51 @@ import org.apache.spark.unsafe.types.UTF8String
   * `TableProviderFilterPushDown::Unsupported`), so pushdown is only claimed
   * where Loki fully enforces it (SURVEY.md §7.4(e)).
   *
-  * Like the reference, values are interpolated into `"…"` / `` `…` `` raw
-  * (expr.rs:38-41,65-78,101-104) — quotes/backticks in values break the
-  * query the same way they do upstream. [[LogQL.escaping]] opts into safe
-  * escaping beyond parity.
+  * Unlike the reference, which interpolates values raw
+  * (expr.rs:38-41,65-78,101-104), every value renders through one escaping
+  * renderer ([[escapeQuoted]]): a quote, backslash or control character
+  * in a pushed value would otherwise change the query on the wire under
+  * the Exact claim (SURVEY.md §7.4(d), resolved in favour of §7.4(e)).
   */
 object LogQL {
 
   /** `{app="x"}` piece: label name + operator + value. */
   final case class LabelMatcher(label: String, op: String, value: String) {
-    def render: String = render(escape = false)
-    def render(escape: Boolean): String = {
-      val v = if (escape) escapeQuoted(value) else value
-      s"""$label$op"$v""""
-    }
+    def render: String = s"""$label$op${q(value)}"""
   }
 
   /** `|= "x"` / `|~ `re`` piece. */
   final case class LineFilter(op: String, pattern: String) {
-    def render: String = render(escape = false)
-    def render(escape: Boolean): String = {
+    def render: String =
       // ip() forms (round 16): ops "|=ip" / "!=ip" — the pattern is a
       // validated [0-9./\- ] IPv4 spec, always safely double-quotable
-      if (op.endsWith("ip"))
-        return s"""${op.dropRight(2)} ip("$pattern")"""
-      // backtick literals cannot contain a backtick; fall back to the
-      // quoted-string form when escaping is on and the pattern needs it
-      if (escape && pattern.contains('`')) s"""$op "${escapeQuoted(pattern)}""""
+      if (op.endsWith("ip")) s"""${op.dropRight(2)} ip("$pattern")"""
+      // backtick literals take the pattern verbatim but cannot contain a
+      // backtick; such a pattern falls back to the quoted-string form
+      else if (pattern.contains('`')) s"$op ${q(pattern)}"
       else s"$op `$pattern`"
-    }
   }
 
-  /** Escaping for `"…"`-delimited LogQL strings. OFF by default: the
-    * reference interpolates values raw (expr.rs:38-41,65-78,101-104), so a
-    * quote or backtick in a value breaks the query identically — parity
-    * first, safety behind the `escape_logql` option (SURVEY.md §7.4(d)).
+  /** Escaping for `"…"`-delimited LogQL strings — the one place a value
+    * is made safe for the wire. Every renderer below goes through it
+    * (via [[q]]), so a pushed value always re-parses to itself
+    * (parse∘render is the identity, property-pinned in LogQLProps).
     */
   private def escapeQuoted(s: String): String =
     s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"
       // control characters: a raw newline/tab inside a double-quoted
-      // (Go-syntax) LogQL string is a parse error — the option promises
-      // "safe escaping beyond parity", so it must cover them too
+      // (Go-syntax) LogQL string is a parse error
       case '\n' => "\\n"
       case '\r' => "\\r"
       case '\t' => "\\t"
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     }
+
+  /** A value as an escaped `"…"` LogQL string. */
+  private def q(s: String): String = "\"" + escapeQuoted(s) + "\""
 
   sealed trait TsBound { def ns: Long }
   final case class Start(ns: Long) extends TsBound
@@ -96,12 +92,11 @@ object LogQL {
       filters: Seq[(String, String)]) {
     /** Identity without the generated label (idempotent re-capture). */
     def pred: (String, String, Seq[(String, String)]) = (parser, key, filters)
-    /** Wire rendering. Parsed stages are beyond-parity (no reference
-      * analog interpolates them raw), so values ALWAYS render escaped.
-      * For `pattern`, `key` is the whole template with the target
-      * capture's name spelled as the NUL placeholder (substituted with the generated label
-      * here — a capture name can't be chosen at translation time, the
-      * rule assigns it) and every other named capture anonymized.
+    /** Wire rendering. For `pattern`, `key` is the whole template with
+      * the target capture's name spelled as the NUL placeholder
+      * (substituted with the generated label here — a capture name can't
+      * be chosen at translation time, the rule assigns it) and every
+      * other named capture anonymized.
       */
     def render: String = {
       val ext = parser match {
@@ -114,20 +109,49 @@ object LogQL {
       (ext +: filters.map { case (op, v) => s"| $label$op${q(v)}" })
         .mkString(" ")
     }
-    private def q(s: String): String = "\"" + escapeQuoted(s) + "\""
   }
 
-  /** Assemble the full LogQL query (reference table.rs:124-128): matchers
-    * joined by `, ` inside one selector, then line filters appended.
-    * With no matcher at all, LogQL requires the default-label fallback
-    * `{label=~".+"}` (table.rs:116-122) — the caller handles that.
+  /** Render matchers as one `{…}` selector, line filters appended
+    * (reference table.rs:124-128).
     */
-  def assemble(
+  def assemble(matchers: Seq[LabelMatcher], lines: Seq[LineFilter]): String =
+    (matchers.map(_.render).mkString("{", ", ", "}") +: lines.map(_.render))
+      .mkString(" ")
+
+  /** One log query as it goes on the wire: `query` is the full LogQL,
+    * `selector` its matcher-only `{…}` part (what index/stats probes
+    * take).
+    */
+  final case class LogQuery(selector: String, query: String)
+
+  /** The one assembler of a log query, shared by the scan, the metric
+    * rewrite and DELETE. Matchers: the `selector` option's, then the
+    * pushed ones; with none at all, the `default_label` fallback
+    * `{label=~".+"}` (table.rs:116-122). Stages: the option's (user
+    * order), then the pushed line filters, then the parser stages —
+    * line filters are cheaper and LogQL applies stages in order, so
+    * filtering lines before parsing them is the shape a human would
+    * write. None when there is no matcher and no default label: LogQL
+    * requires one, and each caller decides what that means (the scan
+    * throws, the metric rewrite declines, DELETE refuses).
+    */
+  def logQuery(
+      options: LokiOptions,
       matchers: Seq[LabelMatcher],
       lines: Seq[LineFilter],
-      escape: Boolean = false): String = {
-    val sel = matchers.map(_.render(escape)).mkString("{", ", ", "}")
-    (sel +: lines.map(_.render(escape))).mkString(" ")
+      parsed: Seq[ParsedFilter]): Option[LogQuery] = {
+    val (optMatchers, optStages) =
+      options.selector.map(parseSelector).getOrElse((Nil, Nil))
+    val all = optMatchers ++ matchers
+    val ms =
+      if (all.nonEmpty) Some(all)
+      else options.defaultLabel.map(l => Seq(defaultMatcher(l)))
+    ms.map { m =>
+      val selector = assemble(m, Nil)
+      val stages = optStages.map(_.render) ++ lines.map(_.render) ++
+        parsed.map(_.render)
+      LogQuery(selector, (selector +: stages).mkString(" "))
+    }
   }
 
   def defaultMatcher(defaultLabel: String): LabelMatcher =
@@ -139,27 +163,23 @@ object LogQL {
     * so a streaming TAIL — whose scans DSv2 filter pushdown never
     * reaches — can run `{app="x"} | json | level="error"` server-side).
     */
-  sealed trait PipeStage { def render(escape: Boolean): String }
+  sealed trait PipeStage { def render: String }
   final case class PLine(f: LineFilter) extends PipeStage {
-    def render(escape: Boolean): String = f.render(escape)
+    def render: String = f.render
   }
   /** `| json` / `| logfmt`, bare (full extraction) or with explicit
     * expressions `lbl="key"` (shorthand `lbl` ≡ `lbl="lbl"`).
     */
   final case class PParser(kind: String, exprs: Seq[(String, String)])
     extends PipeStage {
-    def render(escape: Boolean): String = kind match {
-      case "pattern" | "regexp" =>
-        // one string operand — the template/pattern, carried as the
-        // single expr's key (label slot unused)
-        val t = exprs.head._2
-        s"""| $kind "${if (escape) escapeQuoted(t) else t}""""
+    def render: String = kind match {
+      // one string operand — the template/pattern, carried as the
+      // single expr's key (label slot unused)
+      case "pattern" | "regexp" => s"| $kind ${q(exprs.head._2)}"
       case _ =>
         if (exprs.isEmpty) s"| $kind"
-        else s"| $kind " + exprs.map { case (l, k) =>
-          val v = if (escape) escapeQuoted(k) else k
-          s"""$l="$v""""
-        }.mkString(", ")
+        else s"| $kind " + exprs.map { case (l, k) => s"$l=${q(k)}" }
+          .mkString(", ")
     }
   }
   /** Post-parser label filter `| lbl op "v"` (string ops), or the ip()
@@ -168,12 +188,9 @@ object LogQL {
     */
   final case class PLabelFilter(label: String, op: String, value: String)
     extends PipeStage {
-    def render(escape: Boolean): String = {
-      if (op.endsWith("ip"))
-        return s"""| $label${op.dropRight(2)}ip("$value")"""
-      val v = if (escape) escapeQuoted(value) else value
-      s"""| $label$op"$v""""
-    }
+    def render: String =
+      if (op.endsWith("ip")) s"""| $label${op.dropRight(2)}ip("$value")"""
+      else s"| $label$op${q(value)}"
   }
   /** `| line_format "template"` (round 16) — rewrites the returned line
     * from a Go-template over the effective labels. The connector
@@ -181,9 +198,7 @@ object LogQL {
     * templates carry functions/pipelines no host check could validate).
     */
   final case class PLineFormat(template: String) extends PipeStage {
-    def render(escape: Boolean): String =
-      "| line_format \"" +
-        (if (escape) escapeQuoted(template) else template) + "\""
+    def render: String = s"| line_format ${q(template)}"
   }
   /** `| label_format dst=src, dst2="template"` (round 16) — ident
     * operands RENAME (move src's value to dst, Loki semantics), quoted
@@ -191,11 +206,10 @@ object LogQL {
     */
   final case class PLabelFormat(ops: Seq[(String, Either[String, String])])
     extends PipeStage {
-    def render(escape: Boolean): String =
+    def render: String =
       "| label_format " + ops.map {
         case (dst, Left(src)) => s"$dst=$src"
-        case (dst, Right(t)) =>
-          s"""$dst="${if (escape) escapeQuoted(t) else t}""""
+        case (dst, Right(t)) => s"$dst=${q(t)}"
       }.mkString(", ")
   }
 
@@ -204,7 +218,7 @@ object LogQL {
     * clean text (grafana/loki pipeline semantics). No operands.
     */
   case object PDecolorize extends PipeStage {
-    def render(escape: Boolean): String = "| decolorize"
+    def render: String = "| decolorize"
   }
 
   /** `| keep a, b="v"` / `| drop a, b="v"` (round 16, third tranche) —
@@ -219,11 +233,10 @@ object LogQL {
     */
   final case class PKeepDrop(kind: String, ops: Seq[(String, Option[String])])
     extends PipeStage {
-    def render(escape: Boolean): String =
+    def render: String =
       s"| $kind " + ops.map {
         case (l, None) => l
-        case (l, Some(v)) =>
-          s"""$l="${if (escape) escapeQuoted(v) else v}""""
+        case (l, Some(v)) => s"$l=${q(v)}"
       }.mkString(", ")
   }
 
@@ -264,7 +277,7 @@ object LogQL {
     // Go-style double-quoted string or raw backtick string. Unknown
     // escapes (e.g. the `\d` of a regex value typed without doubling)
     // pass through backslash-intact — lenient in the direction users
-    // expect, and round-trippable through the raw renderer.
+    // expect; the renderer then writes the backslash escaped.
     def str(): String = {
       if (i >= s.length) err("expected a string value")
       s.charAt(i) match {

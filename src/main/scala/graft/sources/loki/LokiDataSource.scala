@@ -52,7 +52,12 @@ object LokiDataSource {
       nullable = false))
 }
 
-/** Connector options (reference table.rs:39-43 plus scale knobs). */
+/** Connector options (reference table.rs:39-43 plus scale knobs). Two
+  * reference behaviours are not options: every LogQL value renders
+  * escaped ([[LogQL]]), and repeated timestamp bounds keep the tightest
+  * (the reference keeps the last, table.rs:106-110) — both so that
+  * pushed filters stay exact.
+  */
 final case class LokiOptions(
     endpoint: String,
     defaultLabel: Option[String],
@@ -63,19 +68,7 @@ final case class LokiOptions(
     numPartitions: Int,
     /** Rows per push-API POST on the write path. */
     pushBatchSize: Int,
-    /** Escape quotes/backslashes in LogQL values (parity default: raw
-      * interpolation like the reference — SURVEY.md §7.4(d)). */
-    escapeLogql: Boolean,
     checkConnection: Boolean,
-    /** Conjunct timestamp-bound semantics. true (default): tightest bound
-      * wins — max(start), min(end) — so every pushed conjunct is honored
-      * (Exact claim sound). false: REFERENCE PARITY — last bound of each
-      * kind wins (table.rs:106-110), which widens the window when a query
-      * repeats a bound and silently returns rows an earlier conjunct
-      * excluded. Flag-selectable so the one remaining semantic divergence
-      * from the reference is a user choice, not a hidden default.
-      */
-    strictBounds: Boolean = true,
     /** Slice-boundary placement for `partitions=N`. "width" (default,
       * reference-shaped): N equal-WIDTH time slices — zero extra round
       * trips, but a bursty corpus serializes through the spike slice
@@ -87,18 +80,6 @@ final case class LokiOptions(
       * stats probe fails or reports zero entries.
       */
     split: String = "width",
-    /** Plan-time wall-clock budget for the `split=stats` bisection probes.
-      * Against a real endpoint each probe is an HTTP round trip; past the
-      * budget the remaining bins stay coarse (balance degrades gracefully
-      * toward width-split, correctness never depends on it). */
-    statsBudgetMs: Long = 2000L,
-    /** Concurrent `index/stats` probes per refinement level. The probes
-      * are independent index-only GETs, so the frontier parallelizes —
-      * plan-time latency is O(levels × RTT) instead of O(probes × RTT)
-      * at ~20 ms real-endpoint RTTs. 1 = serial (the stub-test default
-      * path is identical either way — placement is deterministic in the
-      * counts, not the probe order). */
-    statsProbeParallelism: Int = 8,
     /** Explicit per-request `limit` when the query pushes none. 0
       * (default) omits the parameter — REFERENCE PARITY
       * (scan.rs:113-115 omits it too) — but a real Loki then applies its
@@ -273,12 +254,8 @@ final case class LokiOptions(
     "endpoint" -> endpoint,
     "partitions" -> numPartitions.toString,
     "push_batch_size" -> pushBatchSize.toString,
-    "escape_logql" -> escapeLogql.toString,
     "check_connection" -> checkConnection.toString,
-    "strict_bounds" -> strictBounds.toString,
     "split" -> split,
-    "stats_budget_ms" -> statsBudgetMs.toString,
-    "stats_probe_parallelism" -> statsProbeParallelism.toString,
     "query_limit" -> queryLimit.toString,
     "server_max_entries" -> serverMaxEntries.toString,
     "push_count" -> pushCount.toString,
@@ -309,21 +286,16 @@ object LokiOptions {
       defaultLabel = m.get("default_label").filter(_.nonEmpty),
       numPartitions = m.getOrElse("partitions", "1").toInt,
       pushBatchSize = m.getOrElse("push_batch_size", "4096").toInt,
-      escapeLogql = m.getOrElse("escape_logql", "false").toBoolean,
       // parity default: the reference probes /status/buildinfo when the
       // table is constructed (table.rs:60-73), so a typo'd endpoint fails
       // at load time, not first-task time. Opt out with
       // check_connection=false.
       checkConnection = m.getOrElse("check_connection", "true").toBoolean,
-      strictBounds = m.getOrElse("strict_bounds", "true").toBoolean,
       split = m.getOrElse("split", "width") match {
         case s @ ("width" | "stats") => s
         case other => throw new IllegalArgumentException(
           s"split must be 'width' or 'stats', got '$other'")
       },
-      statsBudgetMs = m.getOrElse("stats_budget_ms", "2000").toLong,
-      statsProbeParallelism =
-        m.getOrElse("stats_probe_parallelism", "8").toInt,
       queryLimit = {
         val ql = m.getOrElse("query_limit", "0").toInt
         val sm = m.getOrElse("server_max_entries", "0").toInt

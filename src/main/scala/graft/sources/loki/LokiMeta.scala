@@ -297,28 +297,24 @@ case class LokiMetaScan(
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    // matcher-only render, ALWAYS escaped: the selector option is parsed
-    // (escape-decoded) at load, and parse∘assemble is the identity only
-    // under the escaping renderer — the log-scan builder applies the
-    // same rule to its selector-derived pieces
-    val sel = options.selector.map(s =>
-      LogQL.assemble(LogQL.parseSelector(s)._1, Nil, escape = true))
-      .filter(_ != "{}")
-    // real Loki REQUIRES at least one match[] on /series, and a `query`
-    // on the volume endpoints (labels and label-values take their
-    // selector optionally); fall back to the default-label matcher
-    // exactly like the log scan, else fail at plan time instead of
-    // shipping a request the server must reject
+    // matcher-only render of the selector option (its stages do not
+    // apply to metadata endpoints). Real Loki REQUIRES at least one
+    // match[] on /series, and a `query` on the volume endpoints (labels
+    // and label-values take their selector optionally): those fall back
+    // to the default-label matcher through the log scan's assembler,
+    // else fail at plan time instead of shipping a request the server
+    // must reject
     val needsSel = kind == "series" || kind.startsWith("volume") ||
       kind == "patterns"
     val effSel =
-      if (!needsSel) sel
-      else sel.orElse(options.defaultLabel.map(l =>
-        LogQL.assemble(Seq(LogQL.defaultMatcher(l)), Nil, escape = true)))
-        .orElse(throw new IllegalArgumentException(
+      if (needsSel) Some(LogQL.logQuery(options, Nil, Nil, Nil)
+        .getOrElse(throw new IllegalArgumentException(
           s"loki.meta.$kind requires a selector: real Loki rejects the " +
             "request without one — set the `selector` option or " +
             "configure default_label"))
+        .selector)
+      else options.selector.map(s =>
+        LogQL.assemble(LogQL.parseSelector(s)._1, Nil)).filter(_ != "{}")
     Array(LokiMetaPartition(
       options.endpoint, kind, startNs, endNs, labelEq, effSel, volume))
   }
@@ -418,5 +414,5 @@ object LokiMetaReader {
   private[loki] def renderMetric(kvs: Seq[(String, String)]): String =
     LogQL.assemble(
       kvs.sortBy(_._1).map { case (k, v) => LogQL.LabelMatcher(k, "=", v) },
-      Nil, escape = true)
+      Nil)
 }

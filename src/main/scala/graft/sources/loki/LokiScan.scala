@@ -78,19 +78,13 @@ class LokiScanBuilder(table: LokiTable)
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     val (accepted, residual) = filters.partition(f => LogQL.fromSourceFilter(f).isDefined)
     accepted.flatMap(LogQL.fromSourceFilter).foreach {
-      // conjunct semantics, default (strict_bounds=true): tightest bound
-      // wins — max(start), min(end) — every pushed conjunct is honored.
-      // strict_bounds=false is REFERENCE PARITY: last bound of each kind
-      // wins (table.rs:106-110), which widens the window when a query
-      // repeats a bound and silently returns rows an earlier conjunct
-      // excluded under the Exact claim — see LokiOptions.strictBounds.
+      // conjunct semantics: the tightest bound wins — max(start),
+      // min(end) — so every pushed conjunct is honored. The reference
+      // keeps the LAST bound of each kind (table.rs:106-110), which
+      // widens the window when a query repeats a bound.
       case Left(lf) => pushedLines :+= lf
-      case Right(LogQL.Start(ns)) =>
-        startNs = Some(
-          if (table.options.strictBounds) startNs.fold(ns)(math.max(_, ns)) else ns)
-      case Right(LogQL.End(ns)) =>
-        endNs = Some(
-          if (table.options.strictBounds) endNs.fold(ns)(math.min(_, ns)) else ns)
+      case Right(LogQL.Start(ns)) => startNs = Some(startNs.fold(ns)(math.max(_, ns)))
+      case Right(LogQL.End(ns)) => endNs = Some(endNs.fold(ns)(math.min(_, ns)))
     }
     pushed = accepted
     residual // accepted filters are Exact: Loki fully enforces them
@@ -112,47 +106,13 @@ class LokiScanBuilder(table: LokiTable)
   }
 
   override def build(): Scan = {
-    // explicit `selector` option (the streaming pushdown channel — DSv2
-    // filter pushdown never reaches micro-batch scans): its matchers and
-    // line stages CONJOIN with whatever the optimizer pushed, selector
-    // stages first (user-stated order ahead of derived predicates).
-    // Selector-derived pieces ALWAYS re-render escaped: the option is
-    // parsed (escape-decoded) at load time, and parse∘assemble is the
-    // identity only under the escaping renderer (property-pinned) — a
-    // raw re-render of a value that needed escaping would put a
-    // malformed or semantically different query on the wire despite the
-    // "validated at option time" promise. escape_logql keeps governing
-    // the OPTIMIZER-pushed pieces (that flag exists for reference
-    // parity of derived predicates, not for user-typed LogQL).
-    val esc = table.options.escapeLogql
-    val (optMatchers, optStages) = table.options.selector
-      .map(LogQL.parseSelector).getOrElse((Nil, Nil))
-    val matcherParts =
-      if (optMatchers.nonEmpty || table.pushedLabelMatchers.nonEmpty)
-        optMatchers.map(_.render(escape = true)) ++
-          table.pushedLabelMatchers.map(_.render(esc))
-      else table.options.defaultLabel match {
-        // no matcher at all → default-label fallback, else error
-        // (table.rs:116-122: LogQL requires at least one matcher)
-        case Some(l) => Seq(LogQL.defaultMatcher(l).render(esc))
-        case None => throw new IllegalArgumentException(
-          "no label matcher in query and no default_label configured; " +
-            "LogQL requires at least one label matcher")
-      }
-    val lineParts = optStages.map(_.render(escape = true)) ++
-      (table.pushedLineFilters ++ pushedLines).map(_.render(esc)) ++
-      // parser stages last: line filters are cheaper and LogQL applies
-      // stages in order, so filtering lines before parsing them is the
-      // shape a human would write (stage values always render escaped —
-      // beyond-parity surface, no raw-interpolation parity to keep)
-      table.pushedParsedFilters.map(_.render)
-    // matcher-only selector for index/stats probes, rendered from the
-    // matchers directly — substring-parsing the assembled query to the
-    // first '}' truncated mid-selector whenever a pushed value or regex
-    // contained a brace (e.g. rlike 'app[0-9]{2}'), making every probe
-    // throw and split=stats silently degrade to width
-    val selector = matcherParts.mkString("{", ", ", "}")
-    val logql = (selector +: lineParts).mkString(" ")
+    val LogQL.LogQuery(selector, logql) = LogQL.logQuery(table.options,
+      table.pushedLabelMatchers, table.pushedLineFilters ++ pushedLines,
+      table.pushedParsedFilters).getOrElse(
+      // table.rs:116-122: LogQL requires at least one label matcher
+      throw new IllegalArgumentException(
+        "no label matcher in query and no default_label configured; " +
+          "LogQL requires at least one label matcher"))
     if (countPushed)
       // complete COUNT(*) pushdown: the scan's read schema IS the
       // aggregation output (one non-null long; Spark consumes it
@@ -420,7 +380,7 @@ case class LokiScan(
     * an empty window.
     */
   private def statsBounds(s: Long, e: Long, eff: Int): Option[Seq[(Long, Long)]] = {
-    val deadline = System.nanoTime() + options.statsBudgetMs * 1000000L
+    val deadline = System.nanoTime() + LokiScan.StatsBudgetMs * 1000000L
     try {
       LokiScan.balancedCuts(
         // the ROOT probe (the full [s, e) window) routes through the
@@ -435,7 +395,7 @@ case class LokiScan(
             LokiScan.cachedStats(options.endpoint, selector, lo, hi)._1
           else LokiHttp.indexStats(options.endpoint, selector, lo, hi)._1,
         s, e, eff,
-        probeParallelism = options.statsProbeParallelism,
+        probeParallelism = LokiScan.StatsProbeParallelism,
         shouldStop = () => System.nanoTime() > deadline)
     } catch {
       // never swallow interruption: an interrupted planner thread must
@@ -494,6 +454,20 @@ case class LokiScan(
 
 object LokiScan {
   private[loki] val log = org.slf4j.LoggerFactory.getLogger(classOf[LokiScan])
+
+  /** Plan-time wall-clock budget for the `split=stats` bisection probes.
+    * Against a real endpoint each probe is an HTTP round trip; past the
+    * budget the remaining bins stay coarse (balance degrades gracefully
+    * toward width-split, correctness never depends on it).
+    */
+  private val StatsBudgetMs = 2000L
+
+  /** Concurrent `index/stats` probes per refinement level. The probes are
+    * independent index-only GETs, so the frontier parallelizes: plan-time
+    * latency is O(levels × RTT) instead of O(probes × RTT). Placement is
+    * deterministic in the counts, not the probe order.
+    */
+  private val StatsProbeParallelism = 8
 
   /** Cross-instance stats-split bounds memo (see plannedBounds). True
     * LRU: a hit re-inserts the key at the back, so a session planning

@@ -28,12 +28,10 @@ import org.apache.parquet.schema.{MessageType, MessageTypeParser}
   * range + limit server-side — which is what makes the connector's Exact
   * pushdown claims testable: Spark never re-filters.
   */
-/** Global serving-time counters across every stub instance in the JVM —
-  * dev instrumentation (round 17): the connector gate rows' warm cost had
-  * two candidate owners (stub serving vs Spark-side decode + operator
-  * work), and the counters attribute it. Read and reset by `graft.Prof`
-  * under `GRAFT_STUB_STATS=1`; zero overhead otherwise (three atomic
-  * bumps per request).
+/** Global serving-time counters across every stub instance in the JVM:
+  * requests, response-cache hits and serve time. A benchmark reads them
+  * before and after a run to attribute its cost between stub serving and
+  * the connector (three atomic bumps per request).
   */
 object LokiStubServer {
   // Real Loki (Go) sets TCP_NODELAY on every connection. The JDK server
@@ -53,9 +51,6 @@ object LokiStubServer {
   val reqs = new java.util.concurrent.atomic.AtomicLong(0)
   val cacheHits = new java.util.concurrent.atomic.AtomicLong(0)
   val serveNs = new java.util.concurrent.atomic.AtomicLong(0)
-  def resetStats(): Unit = { reqs.set(0); cacheHits.set(0); serveNs.set(0) }
-  def statsLine: String = "stub: reqs=" + reqs.get + " cacheHits=" +
-    cacheHits.get + f" serve=${serveNs.get / 1e6}%.1f ms"
 }
 
 final class LokiStubServer {

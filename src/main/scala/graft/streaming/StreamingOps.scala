@@ -17,8 +17,8 @@ import graft.Tables
 object StreamingOps {
 
   /** Recursive delete for scratch checkpoint/roundtrip dirs — the one
-    * definition (the helper had grown three verbatim copies across
-    * ConnectorOps and ScaleSmoke; a cleanup fix must land once).
+    * definition (the helper had grown three verbatim copies; a cleanup
+    * fix must land once).
     */
   def rmrf(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(rmrf))

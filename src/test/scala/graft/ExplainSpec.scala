@@ -475,8 +475,7 @@ class ExplainSpec extends SparkTestBase {
   test("corpus-statistics broadcasts are size-conditional: capped estimate falls back to a shuffle join") {
     // the forced broadcast() hints OOM the driver at a 100 TB vocabulary;
     // with the estimate cap forced below any relation the same queries
-    // must re-plan as shuffle joins (and still compute the same relation —
-    // ScaleSmoke runs the fallback end to end on a multiplied corpus)
+    // must re-plan as shuffle joins (and still compute the same relation)
     // autoBroadcastJoinThreshold off too: at test scale Spark would
     // otherwise auto-broadcast the tiny corpus side on its own estimate —
     // at 100 TB both sides' estimates exceed the threshold, which is

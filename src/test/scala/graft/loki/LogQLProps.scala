@@ -225,7 +225,7 @@ object LogQLProps extends Properties("LogQL") {
     Prop.forAll(
       Gen.nonEmptyListOf(matcherGen).map(_.take(4)),
       Gen.listOf(lineGen).map(_.take(3))) { (ms, ls) =>
-      val q = LogQL.assemble(ms, ls, escape = true)
+      val q = LogQL.assemble(ms, ls)
       val (pm, pl) = LogQL.parseSelector(q)
       // quoted-string rendering escapes; parse decodes — matcher values
       // and stage patterns must round-trip byte-for-byte. One accepted
@@ -302,9 +302,8 @@ object LogQLProps extends Properties("LogQL") {
     Prop.forAll(
       Gen.nonEmptyListOf(matcherGen).map(_.take(3)),
       Gen.listOf(stageGen).map(_.take(4))) { (ms, stages) =>
-      val q = (ms.map(_.render(escape = true))
-        .mkString("{", ", ", "}") +: stages.map(_.render(escape = true)))
-        .mkString(" ")
+      val q = (ms.map(_.render).mkString("{", ", ", "}") +:
+        stages.map(_.render)).mkString(" ")
       val (pm, ps) = LogQL.parseSelector(q)
       (Prop(pm == ms) :| s"matchers: $pm vs $ms (q=$q)") &&
         (Prop(ps == stages) :| s"stages: $ps vs $stages (q=$q)")
@@ -435,8 +434,7 @@ object LogQLProps extends Properties("LogQL") {
 
   property("parseSelector rejects junk after the stages (no silent tail drop)") =
     Prop.forAll(ident, hardValue) { (k, v) =>
-      val q = LogQL.assemble(
-        Seq(LogQL.LabelMatcher(k, "=", v)), Nil, escape = true)
+      val q = LogQL.assemble(Seq(LogQL.LabelMatcher(k, "=", v)), Nil)
       Prop.throws(classOf[IllegalArgumentException])(
         LogQL.parseSelector(q + " garbage"))
     }

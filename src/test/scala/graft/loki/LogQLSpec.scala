@@ -32,11 +32,12 @@ class LogQLSpec extends AnyFunSuite {
     // full-match matcher wrapped to find semantics (Spark rlike ≡ find);
     // round 14: the user dot translates to the explicit Java-dot class
     // (RE2's dot admits \r etc.) and the wrapper carries its own (?s)
-    // so it can cross newlines under real RE2 (no blanket dotall)
+    // so it can cross newlines under real RE2 (no blanket dotall). The
+    // value renders Go-escaped: its backslashes double on the wire
     assert(LogQL.labelMatcher(RLike(key("app"), s("a.*"))).map(_.render)
-      .contains("""app=~"(?s).*(?:a[^\n\r\x{85}\x{2028}\x{2029}]*).*""""))
+      .contains("""app=~"(?s).*(?:a[^\\n\\r\\x{85}\\x{2028}\\x{2029}]*).*""""))
     assert(LogQL.labelMatcher(Not(RLike(key("app"), s("a.*")))).map(_.render)
-      .contains("""app!~"(?s).*(?:a[^\n\r\x{85}\x{2028}\x{2029}]*).*""""))
+      .contains("""app!~"(?s).*(?:a[^\\n\\r\\x{85}\\x{2028}\\x{2029}]*).*""""))
   }
 
   test("label matcher: NULL literal treated as empty string (expr.rs:34-35)") {
@@ -139,9 +140,7 @@ class LogQLSpec extends AnyFunSuite {
     val full = LokiOptions.from(Map(
       "endpoint" -> "http://x:3100/", "default_label" -> "app",
       "partitions" -> "7", "push_batch_size" -> "1234",
-      "escape_logql" -> "true", "check_connection" -> "false",
-      "strict_bounds" -> "false", "split" -> "stats",
-      "stats_budget_ms" -> "999", "stats_probe_parallelism" -> "3",
+      "check_connection" -> "false", "split" -> "stats",
       "query_limit" -> "77", "server_max_entries" -> "88",
       "push_count" -> "true", "push_metric" -> "false",
       "push_parsers" -> "false",
@@ -157,39 +156,30 @@ class LogQLSpec extends AnyFunSuite {
       s"round trip drifted:\n${LokiOptions.from(full.toMap)}\nvs\n$full")
     // every case-class field must be representable: the field count is
     // pinned so adding a field forces this test (and toMap) to be updated
-    assert(full.productArity == 27,
+    assert(full.productArity == 23,
       "LokiOptions gained/lost a field — update toMap AND this round trip")
     // direction is validated at option time
     assertThrows[IllegalArgumentException](
       LokiOptions.from(Map("endpoint" -> "http://x:3100", "direction" -> "sideways")))
   }
 
-  test("repeated ts conjuncts: tightest-wins default vs last-wins parity (table.rs:106-110)") {
+  test("repeated ts conjuncts: the tightest bound wins (not table.rs's last)") {
     import org.apache.spark.sql.{sources => sf}
     import graft.sources.loki.{LokiOptions, LokiScan, LokiScanBuilder, LokiTable}
-    def scanWith(strict: Boolean): LokiScan = {
-      val b = new LokiScanBuilder(LokiTable(LokiOptions.from(Map(
-        "endpoint" -> "http://x", "default_label" -> "app",
-        "check_connection" -> "false", "strict_bounds" -> strict.toString))))
-      b.pushFilters(Array[sf.Filter](
-        sf.GreaterThanOrEqual("timestamp", java.time.Instant.ofEpochSecond(200)),
-        sf.GreaterThanOrEqual("timestamp", java.time.Instant.ofEpochSecond(100)),
-        sf.LessThan("timestamp", java.time.Instant.ofEpochSecond(300)),
-        sf.LessThan("timestamp", java.time.Instant.ofEpochSecond(400))))
-      b.build().asInstanceOf[LokiScan]
-    }
-    // default: every conjunct honored — the WINDOW is the intersection
-    val strict = scanWith(strict = true)
-    assert(strict.startNs.contains(200L * 1000000000L))
-    assert(strict.endNs.contains(300L * 1000000000L))
-    // strict_bounds=false is reference parity: the LAST bound of each kind
-    // wins (table.rs:106-110), silently WIDENING the window to
-    // [100s, 400s) — rows the 200s/300s conjuncts excluded come back even
-    // though the filters were claimed Exact. That is the reference's
-    // behavior, reproduced only behind the flag.
-    val parity = scanWith(strict = false)
-    assert(parity.startNs.contains(100L * 1000000000L))
-    assert(parity.endNs.contains(400L * 1000000000L))
+    val b = new LokiScanBuilder(LokiTable(LokiOptions.from(Map(
+      "endpoint" -> "http://x", "default_label" -> "app",
+      "check_connection" -> "false"))))
+    b.pushFilters(Array[sf.Filter](
+      sf.GreaterThanOrEqual("timestamp", java.time.Instant.ofEpochSecond(200)),
+      sf.GreaterThanOrEqual("timestamp", java.time.Instant.ofEpochSecond(100)),
+      sf.LessThan("timestamp", java.time.Instant.ofEpochSecond(300)),
+      sf.LessThan("timestamp", java.time.Instant.ofEpochSecond(400))))
+    val scan = b.build().asInstanceOf[LokiScan]
+    // every conjunct honored — the WINDOW is the intersection; the
+    // reference's last-wins (table.rs:106-110) would widen it to
+    // [100s, 400s) under the Exact claim
+    assert(scan.startNs.contains(200L * 1000000000L))
+    assert(scan.endNs.contains(300L * 1000000000L))
   }
 
   test("assemble matches the reference selector shape (table.rs:124-128)") {
@@ -200,15 +190,15 @@ class LogQLSpec extends AnyFunSuite {
     assert(LogQL.assemble(Seq(LogQL.defaultMatcher("app")), Nil) == """{app=~".+"}""")
   }
 
-  test("escape_logql: raw by default (parity), safe behind the flag (§7.4(d))") {
+  test("values always render escaped; a backtick forces the quoted form") {
+    // the reference interpolates raw (§7.4(d)), which breaks the query
+    // on a quote or backtick; the one renderer escapes every value
     val m = LogQL.LabelMatcher("app", "=", """va"lue""")
-    assert(m.render == """app="va"lue"""")                // raw: broken, like the reference
-    assert(m.render(escape = true) == """app="va\"lue"""")
+    assert(m.render == """app="va\"lue"""")
     val lf = LogQL.LineFilter("|=", "has`tick")
-    assert(lf.render == "|= `has`tick`")                  // raw: broken, like the reference
-    assert(lf.render(escape = true) == """|= "has`tick"""")
-    assert(LogQL.assemble(Seq(m), Seq(lf), escape = true) ==
-      """{app="va\"lue"} |= "has`tick"""")
+    assert(lf.render == """|= "has`tick"""")
+    assert(LogQL.LineFilter("|=", "plain").render == "|= `plain`")
+    assert(LogQL.assemble(Seq(m), Seq(lf)) == """{app="va\"lue"} |= "has`tick"""")
   }
 
   test("parseSelector: matchers, all four ops, line stages, both string forms") {
@@ -224,7 +214,7 @@ class LogQLSpec extends AnyFunSuite {
       LogQL.PLine(LogQL.LineFilter("!=", "noise")),
       LogQL.PLine(LogQL.LineFilter("|~", "\\d{3}")),
       LogQL.PLine(LogQL.LineFilter("!~", "debug"))))
-    // round trip through the raw renderer (backtick regex re-renders
+    // round trip through the renderer (backtick regex re-renders
     // backticked, quoted values re-render quoted — same query semantics)
     assert(LogQL.assemble(ms, ls.collect { case LogQL.PLine(f) => f }) ==
       """{app="api", env!="dev", pod=~"web-.*", zone!~"us-(east|west)"} |= `error` != `noise` |~ `\d{3}` !~ `debug`""")

@@ -962,7 +962,7 @@ class LokiConnectorSpec extends SparkTestBase with BeforeAndAfterAll {
     val oos = new java.io.ObjectOutputStream(out)
     oos.writeObject(part)
     oos.writeObject(LokiReaderFactory())
-    oos.writeObject(LokiWriterFactory(LokiOptions("http://x", None, 1, 4096, false, false)))
+    oos.writeObject(LokiWriterFactory(LokiOptions("http://x", None, 1, 4096, false)))
     oos.close()
     val in = new java.io.ObjectInputStream(
       new java.io.ByteArrayInputStream(out.toByteArray))
@@ -1483,6 +1483,36 @@ class LokiConnectorSpec extends SparkTestBase with BeforeAndAfterAll {
       assert(got == Seq("has tick`mark here"))
       val wire = st.queries.synchronized(st.queries.distinct.toList)
       assert(wire == List("""{msg="say \"hi\""} |= "tick`mark""""), wire)
+    } finally st.stop()
+  }
+
+  test("pushed label values with a backslash, quote or newline match exactly") {
+    // rendered raw, `{path="C:\temp"}` decodes to a TAB on the server
+    // (the TAB row, or no row, with no residual Filter to notice) and
+    // `{path="say "hi""}` is malformed (HTTP 400): every value renders
+    // escaped, so the server decodes exactly the SQL literal
+    val st = new LokiStubServer
+    st.start()
+    try {
+      val now = System.currentTimeMillis() * 1000000L - 60L * 1000000000L
+      val values = Seq("C:\\temp", "say \"hi\"", "two\nlines")
+      st.seed(values.zipWithIndex.map { case (v, i) =>
+        st.LogRow(now + i, Map("path" -> v), s"row $i")
+      } :+ st.LogRow(now + 9, Map("path" -> "C:\temp"), "tab row"))
+      values.zipWithIndex.foreach { case (v, i) =>
+        val df = spark.read.format("loki")
+          .option("endpoint", st.endpoint)
+          .load()
+          .filter(col("labels")("path") === v)
+          .select("line")
+        assert(df.collect().map(_.getString(0)).toSeq == Seq(s"row $i"),
+          s"value $i")
+        val residual = df.queryExecution.optimizedPlan.collect {
+          case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f
+        }
+        assert(residual.isEmpty,
+          s"expected no residual filter:\n${df.queryExecution.optimizedPlan}")
+      }
     } finally st.stop()
   }
 

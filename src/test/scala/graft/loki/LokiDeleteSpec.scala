@@ -60,6 +60,31 @@ class LokiDeleteSpec extends SparkTestBase with BeforeAndAfterAll {
     assert(left == expected, left.toSeq.sorted)
   }
 
+  test("a catalog's selector option narrows its DELETE like its reads") {
+    // api AND web rows carry error lines here; a DELETE through a catalog
+    // configured with selector={app="web"} must reach only web rows
+    stub.clear()
+    stub.seed((0 until 8).map { i =>
+      stub.LogRow(base + i * 1000000000L,
+        Map("app" -> (if (i % 2 == 0) "web" else "api")),
+        s"row $i ${if (i < 4) "error" else "ok"}")
+    })
+    spark.conf.set("spark.sql.catalog.webcat", "graft.sources.loki.LokiCatalog")
+    spark.conf.set("spark.sql.catalog.webcat.endpoint", stub.endpoint)
+    spark.conf.set("spark.sql.catalog.webcat.default_label", "app")
+    spark.conf.set("spark.sql.catalog.webcat.selector", """{app="web"}""")
+    spark.sql(
+      "DELETE FROM webcat.default.loki WHERE line LIKE '%error%' " +
+        "AND timestamp >= TIMESTAMP '2024-01-01 00:00:00'")
+    val req = stub.deleteReqs.synchronized(stub.deleteReqs.last)
+    assert(req.query == """{app="web"} |= `error`""", req)
+    // web error rows (0, 2) are gone; the api error rows (1, 3) are still
+    // visible through the selector-less catalog
+    assert(scanLines() == Set("row 1 error", "row 3 error",
+      "row 4 ok", "row 5 ok", "row 6 ok", "row 7 ok"), scanLines())
+    seed()
+  }
+
   test("line-filter stages ride the delete query") {
     seed()
     spark.sql(

@@ -192,8 +192,8 @@ class LokiMetricSpec extends SparkTestBase with BeforeAndAfterAll {
     // CollapseProject folds a consumer's projection into the aggregate
     // list — unix_micros(date_trunc(…)) AS bucket_us — and the rewrite
     // must still fire, mapping the expression onto the metric relation's
-    // bucket attribute (the PLANS.md regression: the pre-projection
-    // probe rewrote while the projected plan silently scanned)
+    // bucket attribute (a past regression: the pre-projection probe
+    // rewrote while the projected plan silently scanned)
     val df = windowed(lokiDf())
       .groupBy(date_trunc("day", col("timestamp")).as("bucket"))
       .agg(count(lit(1)).as("cnt"))

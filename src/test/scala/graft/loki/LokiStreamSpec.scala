@@ -421,6 +421,60 @@ class LokiStreamSpec extends SparkTestBase {
     }
   }
 
+  test("live tail under concurrent ingest: complete, no double read, windows chain") {
+    // the stub ingests WHILE an open tail (no stream_end_ns) runs; each
+    // trigger's end offset trails wall clock by stream_lag_ms, so every
+    // chunk lands ahead of the windows already planned. Count, distinct
+    // count (an overlap would double-read) and Σv must hit their closed
+    // forms, and the wire windows must chain end-to-start.
+    withStub { stub =>
+      val (n, chunks) = (2000, 5)
+      val per = n / chunks
+      val t0 = System.currentTimeMillis() * 1000000L
+      val q = spark.readStream.format("loki")
+        .option("endpoint", stub.endpoint)
+        .option("selector", """{app="live"}""")
+        .option("stream_start_ns", t0.toString)
+        .option("stream_lag_ms", "500")
+        .load()
+        .select(substring(col("line"), 3, 10).cast("long").as("v"))
+        .writeStream.format("memory").queryName("live_tail")
+        .option("checkpointLocation", tmp("live_ck"))
+        .outputMode("append")
+        .start()
+      try {
+        (0 until chunks).foreach { c =>
+          val now = System.currentTimeMillis() * 1000000L
+          stub.seed((0 until per).map(j =>
+            stub.LogRow(now + j, Map("app" -> "live"), s"v=${c * per + j}")))
+          Thread.sleep(100)
+        }
+        // the last chunk becomes readable once the lag has passed
+        val deadline = System.nanoTime() + 60L * 1000000000L
+        while (spark.table("live_tail").count() < n &&
+            System.nanoTime() < deadline) Thread.sleep(200)
+      } finally {
+        q.stop()
+        q.awaitTermination()
+      }
+      val r = spark.table("live_tail")
+        .agg(count(lit(1)), count_distinct(col("v")), sum("v")).head()
+      assert((r.getLong(0), r.getLong(1), r.getLong(2)) ==
+        ((n.toLong, n.toLong, n.toLong * (n - 1) / 2)), r)
+      val wins = stub.ranges.synchronized(stub.ranges.toList)
+        .collect { case (lq, Some(s0), Some(e0))
+          if lq.startsWith("""{app="live"}""") => (s0, e0) }
+        .distinct.sortBy(_._1)
+      wins.sliding(2).foreach {
+        case List((_, e1), (s2, _)) =>
+          assert(s2 == e1, s"tail windows not contiguous: end $e1, next start $s2")
+        case _ =>
+      }
+      assert(wins.nonEmpty && wins.head._1 == t0,
+        s"first window must start at stream_start_ns: ${wins.headOption}")
+    }
+  }
+
   test("offset json roundtrips and empty windows plan zero partitions") {
     import graft.sources.loki.LokiOffset
     val off = LokiOffset(1704067200000000123L)
