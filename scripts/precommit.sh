@@ -31,6 +31,29 @@ if [[ -n "$per_call" ]]; then
   exit 1
 fi
 
+# One pushdown channel: LokiPushdownRule captures WHERE conjuncts into a
+# log scan through the one cascade, LogQL.translate. A rule under
+# graft/plans calling a single translator directly grows a second cascade
+# (three once copied it by hand), and a log scan builder taking DSv2
+# filters grows a second capture site (it once had its own translator with
+# its own copy of the timestamp arithmetic). LokiMetaScanBuilder's `label`
+# filter feeds the label-values API, not a log query, and stays.
+second_channel=$(
+  grep -rnE 'LogQL\.(timestampBound|labelMatcher|parsedPredicate)\(' \
+    src/main/scala/graft/plans --include='*.scala' || true
+  find src/main -name '*.scala' -exec perl -0777 -ne '
+    while (/\bclass\s+(\w*ScanBuilder)\b[^{]*?\bSupportsPushDownFilters\b/g) {
+      my $line = 1 + (substr($_, 0, $-[0]) =~ tr/\n//);
+      print "$ARGV:$line: $1 mixes in SupportsPushDownFilters\n"
+        unless $1 eq "LokiMetaScanBuilder";
+    }' {} +)
+if [[ -n "$second_channel" ]]; then
+  echo "FAIL: a second pushdown channel; route conjuncts through" >&2
+  echo "LogQL.translate in LokiPushdownRule instead:" >&2
+  echo "$second_channel" >&2
+  exit 1
+fi
+
 # Only the three entry points the scripts and docs use may define a
 # `main`: dev-only mains with no caller once grew to ~1,200 lines.
 extra_mains=$(grep -rlE '^\s*def main\s*\(|extends\s+App\b' src/main --include='*.scala' |

@@ -1,7 +1,8 @@
 package graft.plans
 
 import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{
+  Expression, Literal, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
@@ -22,9 +23,11 @@ import graft.sources.loki.{LogQL, LokiHttp, LokiOptions, LokiTable}
   * with.
   *
   * Exactness contract (the metric-rule discipline):
-  *   - every conjunct must translate: label matcher (absent-matching
-  *     forms rejected — Loki would delete streams the SQL predicate's
-  *     NULL semantics spare), line filter, or timestamp bound;
+  *   - every conjunct must translate through [[LogQL.translate]]: label
+  *     matcher (absent-matching forms rejected — Loki would delete
+  *     streams the SQL predicate's NULL semantics spare), line filter, or
+  *     timestamp bound — parser-stage predicates and repeated bounds are
+  *     refused;
   *   - the query is assembled like the table's reads
   *     ([[LogQL.logQuery]]): the `selector` option's pieces first, then
   *     the translated matchers and line filters, with the
@@ -46,13 +49,7 @@ import graft.sources.loki.{LogQL, LokiHttp, LokiOptions, LokiTable}
   * FILED, like the HTTP API itself. The testkit stub applies deletions
   * immediately, modeling the post-compaction state.
   */
-object LokiDeleteRule extends Rule[LogicalPlan] {
-
-  private def split(e: Expression): Seq[Expression] = e match {
-    case org.apache.spark.sql.catalyst.expressions.And(l, r) =>
-      split(l) ++ split(r)
-    case other => Seq(other)
-  }
+object LokiDeleteRule extends Rule[LogicalPlan] with PredicateHelper {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case del @ DeleteFromTable(
@@ -66,28 +63,22 @@ object LokiDeleteRule extends Rule[LogicalPlan] {
     var lines = List.empty[LogQL.LineFilter]
     var starts = List.empty[Long]
     var ends = List.empty[Long]
-    split(cond).foreach {
+    splitConjunctivePredicates(cond).foreach {
       case Literal(true, _) => // no-op conjunct (bare DELETE's condition)
       case c =>
-        LogQL.timestampBound(c) match {
+        // no parser stages: the compactor's delete takes a selector and
+        // line filters only
+        LogQL.translate(c, pushParsers = false) match {
           case Some(LogQL.Start(ns)) => starts ::= ns
           case Some(LogQL.End(ns)) => ends ::= ns
-          case None =>
-            LogQL.labelMatcher(c) match {
-              case Some(m) =>
-                if (LogQL.matchesAbsentLabel(m)) return None
-                matchers ::= m
-              case None =>
-                LogQL.lineFilter(c) match {
-                  case Some(lf) => lines ::= lf
-                  case None => return None
-                }
-            }
+          case Some(m: LogQL.LabelMatcher) if !LogQL.matchesAbsentLabel(m) =>
+            matchers ::= m
+          case Some(lf: LogQL.LineFilter) => lines ::= lf
+          case _ => return None
         }
     }
     // a repeated bound of one kind is refused rather than folded to the
-    // tightest: the metric rule's rule, kept simple on an irreversible
-    // operation
+    // tightest: kept simple on an irreversible operation
     if (starts.size > 1 || ends.size > 1) return None
     // an exclusive end at the saturated floor is an empty window (no ns
     // timestamp precedes it) — refuse rather than wrap the −1ns below

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.{
   Alias, Attribute, AttributeReference, ExprId, Expression, Literal,
-  NamedExpression, TruncTimestamp}
+  NamedExpression, PredicateHelper, TruncTimestamp}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{
   AggregateExpression, Count}
 import org.apache.spark.sql.catalyst.plans.logical.{
@@ -55,15 +55,16 @@ import graft.sources.loki.{LogQL, LokiMetricTable, LokiTable, MetricAgg}
   *     and/or
   *     expressions over those and the groupings (`count(*)/86400.0` —
   *     the rate() shape — rides the structural projection mapping);
-  *   - the WHERE conjuncts must ALL translate (label matcher / line
-  *     filter / parser-stage predicate / timestamp bound) — an
-  *     untranslatable residual under an Aggregate has nowhere to
-  *     re-filter (a HAVING above the Aggregate survives: output ExprIds
-  *     are preserved through aliases);
-  *   - exactly one start and one end bound, both step-aligned (the
-  *     bucket-reconstruction contract), neither repeated (repeated
-  *     bounds engage the strict/parity tie-break — not worth encoding
-  *     twice; the scan path already handles them);
+  *   - every WHERE conjunct still above the relation must translate
+  *     through [[LogQL.translate]] (label matcher / line filter /
+  *     parser-stage predicate / timestamp bound) — an untranslatable
+  *     residual under an Aggregate has nowhere to re-filter (a HAVING
+  *     above the Aggregate survives: output ExprIds are preserved through
+  *     aliases). What [[LokiPushdownRule]] already captured rides on the
+  *     table;
+  *   - a start and an end bound — the table's and these conjuncts',
+  *     tightest wins — both step-aligned (the bucket-reconstruction
+  *     contract);
   *   - no label matcher that also matches ABSENT labels (Loki would
   *     count streams SQL's NULL-map-access semantics must drop, and an
   *     aggregate has no residual to re-filter with).
@@ -73,18 +74,12 @@ import graft.sources.loki.{LogQL, LokiMetricTable, LokiTable, MetricAgg}
   * rewrite always renders the `by` form — `without` is not a gap, it is
   * unreachable from the relational surface.
   */
-object LokiMetricAggRule extends Rule[LogicalPlan] {
+object LokiMetricAggRule extends Rule[LogicalPlan] with PredicateHelper {
 
   private val NsPerS = 1000000000L
 
   /** Time zones whose `date_trunc` grid is epoch-aligned for hour/day. */
   private val utcZones = Set("UTC", "GMT", "Z", "Etc/UTC", "Etc/GMT", "+00:00")
-
-  private def split(e: Expression): Seq[Expression] = e match {
-    case org.apache.spark.sql.catalyst.expressions.And(l, r) =>
-      split(l) ++ split(r)
-    case other => Seq(other)
-  }
 
   /** Strip Filter/Project down to the Loki relation, collecting filter
     * conjuncts and Project alias bindings (the optimizer's
@@ -96,7 +91,7 @@ object LokiMetricAggRule extends Rule[LogicalPlan] {
       (DataSourceV2Relation, LokiTable, Seq[Expression], Map[ExprId, Expression])] =
     p match {
       case Filter(c, ch) => walk(ch).map { case (r, t, conds, al) =>
-        (r, t, split(c) ++ conds, al)
+        (r, t, splitConjunctivePredicates(c) ++ conds, al)
       }
       case Project(list, ch) if list.forall {
           case _: AttributeReference => true
@@ -273,7 +268,7 @@ object LokiMetricAggRule extends Rule[LogicalPlan] {
       // keep the host fallback.
       case ae @ AggregateExpression(_, _, false, Some(cond), _) =>
         def stagesOf(c: Expression): Option[Seq[String]] = {
-          val conjuncts = split(c)
+          val conjuncts = splitConjunctivePredicates(c)
           val rendered = conjuncts.map { cj =>
             LogQL.lineFilter(cj).map(lf => Seq(lf.render))
               .orElse(LogQL.labelFilterStages(cj).map(_.map(_.render)))
@@ -402,39 +397,29 @@ object LokiMetricAggRule extends Rule[LogicalPlan] {
     if (kinds.exists(_.acc.isDefined) && !table.options.pushParsers)
       return None
 
-    // ---- filters: every conjunct must translate, bounds exactly once ----
-    var starts = List.empty[Long]
-    var ends = List.empty[Long]
+    // ---- filters: every conjunct must translate; the window is the
+    // table's pushed bounds and these conjuncts', tightest wins ----
+    var starts = table.pushedStartNs.toList
+    var ends = table.pushedEndNs.toList
     var matchers = List.empty[LogQL.LabelMatcher]
     var lines = List.empty[LogQL.LineFilter]
     var parsedFilters = List.empty[LogQL.ParsedFilter]
     conds0.map(c => resolve(c, aliases)).foreach { c =>
-      LogQL.timestampBound(c) match {
+      LogQL.translate(c, table.options.pushParsers) match {
         case Some(LogQL.Start(ns)) => starts ::= ns
         case Some(LogQL.End(ns)) => ends ::= ns
-        case None =>
-          LogQL.labelMatcher(c) match {
-            case Some(m) =>
-              if (LogQL.matchesAbsentLabel(m)) return None
-              matchers ::= m
-            case None =>
-              LogQL.lineFilter(c) match {
-                case Some(lf) => lines ::= lf
-                case None => LogQL.parsedPredicate(c) match {
-                  case Some((p, k, fs)) if table.options.pushParsers =>
-                    val lbl = s"gp$gpNext"
-                    gpNext += 1
-                    parsedFilters ::= LogQL.ParsedFilter(p, k, lbl, fs)
-                  case _ => return None
-                }
-              }
-          }
+        case Some(m: LogQL.LabelMatcher) =>
+          if (LogQL.matchesAbsentLabel(m)) return None
+          matchers ::= m
+        case Some(lf: LogQL.LineFilter) => lines ::= lf
+        case Some(p: LogQL.Parsed) =>
+          parsedFilters ::= p.labelled(s"gp$gpNext")
+          gpNext += 1
+        case None => return None
       }
     }
-    val (startNs, endNs) = (starts, ends) match {
-      case (List(s), List(e)) => (s, e)
-      case _ => return None
-    }
+    if (starts.isEmpty || ends.isEmpty) return None
+    val (startNs, endNs) = (starts.max, ends.min)
     if (endNs <= startNs) return None
     val stepNs = truncs.headOption match {
       case Some((_, step)) =>
@@ -575,7 +560,7 @@ object LokiMetricAggRule extends Rule[LogicalPlan] {
   *     the valid answers (ties at the boundary may differ from the
   *     host's pick — the standard topk contract).
   */
-object LokiMetricTopKRule extends Rule[LogicalPlan] {
+object LokiMetricTopKRule extends Rule[LogicalPlan] with PredicateHelper {
   import org.apache.spark.sql.catalyst.expressions.{
     AttributeReference, Descending, IntegerLiteral, SortOrder}
   import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit, Sort}
@@ -686,12 +671,7 @@ object LokiMetricTopKRule extends Rule[LogicalPlan] {
           resolveAttr(order.child, p)
             .exists(_.exprId == r.output.last.exprId) => {
       val rn = we.toAttribute
-      def conjunctsOf(e: Expression): Seq[Expression] = e match {
-        case org.apache.spark.sql.catalyst.expressions.And(l, rr) =>
-          conjunctsOf(l) ++ conjunctsOf(rr)
-        case other => Seq(other)
-      }
-      val ks = conjunctsOf(cond).flatMap(c => rankBound(c, rn))
+      val ks = splitConjunctivePredicates(cond).flatMap(c => rankBound(c, rn))
       // exactly one rank-bound conjunct; other conjuncts stay host-side
       // (they filter survivors, which pruning does not change)
       if (ks.size != 1 || ks.head <= 0) f

@@ -1,14 +1,15 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{And, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 
 import graft.sources.loki.{LogQL, LokiTable}
 
-/** The one custom Catalyst rule the rebuild needs (SURVEY.md §4.2).
+/** The one place a WHERE conjunct is captured into a log scan
+  * (SURVEY.md §4.2).
   *
   * `labels['app'] = 'x'` reaches DSv2 pushdown as
   * `Filter(EqualTo(GetMapValue(labels, "app"), "x"))`; Spark's
@@ -18,55 +19,44 @@ import graft.sources.loki.{LogQL, LokiTable}
   * label matcher (the reference refuses a scan with no matcher unless
   * `default_label` is set, table.rs:116-122).
   *
-  * The rule splits the conjunction, captures every conjunct one of the
-  * LogQL translators accepts into the [[LokiTable]] carried by the
-  * relation, and leaves only the rejected conjuncts as a residual Filter —
-  * the `Exact` pushdown contract of table.rs:140-156 (captured filters are
-  * never re-evaluated by Spark; Loki is trusted to enforce them).
-  * Line-filter forms (LIKE/ILIKE/regex/Contains) are captured here too —
-  * they land on `table.pushedLineFilters` and this route usually wins over
-  * the DSv2 `SupportsPushDownFilters` path, which still handles whatever
-  * reaches it (e.g. `.contains` pushed without a Filter-over-relation
-  * shape) plus all timestamp bounds, which are deliberately left to it.
+  * The rule splits the conjunction, runs every conjunct through
+  * [[LogQL.translate]] and captures what it accepts — timestamp bounds,
+  * label matchers, line filters and parser-stage predicates — into the
+  * [[LokiTable]] carried by the relation. Only the rejected conjuncts stay
+  * as a residual Filter — the `Exact` pushdown contract of
+  * table.rs:140-156 (captured filters are never re-evaluated by Spark;
+  * Loki is trusted to enforce them). The scan builder takes no DSv2
+  * filters, so Spark still pushes a LIMIT or a COUNT into the scan
+  * exactly when no residual is left above it.
   */
-object LokiPushdownRule extends Rule[LogicalPlan] {
-
-  private def split(e: Expression): Seq[Expression] = e match {
-    case org.apache.spark.sql.catalyst.expressions.And(l, r) => split(l) ++ split(r)
-    case other => Seq(other)
-  }
+object LokiPushdownRule extends Rule[LogicalPlan] with PredicateHelper {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case f @ Filter(cond, r @ DataSourceV2Relation(t: LokiTable, _, _, _, _, _)) =>
-      val conjuncts = split(cond)
-      val labels = conjuncts.flatMap(c => LogQL.labelMatcher(c).map(c -> _))
-      val capturedLabelExprs = labels.map(_._1).toSet
-      val lines = conjuncts
-        .filterNot(capturedLabelExprs)
-        .flatMap(c => LogQL.lineFilter(c).map(c -> _))
-      val capturedLineExprs = lines.map(_._1).toSet
+      val conjuncts = splitConjunctivePredicates(cond)
+      val pushed = conjuncts.flatMap(c =>
+        LogQL.translate(c, t.options.pushParsers).map(c -> _))
+      val bounds = pushed.collect { case (_, b: LogQL.TsBound) => b }
+      val labels = pushed.collect { case (c, m: LogQL.LabelMatcher) => c -> m }
+      val lines = pushed.collect { case (_, l: LogQL.LineFilter) => l }
       // parser-stage predicates (round 15): logfmt_get/loki_json_get/
       // get_json_object predicates → | json / | logfmt stages + label
       // filters over generated gp<N> extraction labels. Exact (fully
       // removed from the residual): see LogQL.parsedPredicate.
-      val parsedPreds =
-        if (!t.options.pushParsers) Nil
-        else conjuncts
-          .filterNot(capturedLabelExprs).filterNot(capturedLineExprs)
-          .flatMap(c => LogQL.parsedPredicate(c).map(c -> _))
-          .filterNot { case (_, (p, k, fs)) =>
-            t.pushedParsedFilters.exists(_.pred == ((p, k, fs)))
-          }
-      val parsed = parsedPreds.zipWithIndex.map { case ((_, (p, k, fs)), i) =>
-        LogQL.ParsedFilter(p, k, s"gp${t.pushedParsedFilters.size + i}", fs)
-      }
+      val parsed = pushed
+        .collect { case (_, p: LogQL.Parsed) => p }
+        .filterNot(p => t.pushedParsedFilters.exists(_.pred == p))
+        .zipWithIndex.map { case (p, i) =>
+          p.labelled(s"gp${t.pushedParsedFilters.size + i}")
+        }
       // idempotence: the rule re-fires on its own residual output until the
       // optimizer's fixpoint, so never re-append matchers already pushed
       val newLabels = labels.map(_._2).filterNot(t.pushedLabelMatchers.contains)
-      val newLines = lines.map(_._2).filterNot(t.pushedLineFilters.contains)
-      if (newLabels.isEmpty && newLines.isEmpty && parsed.isEmpty) f
+      val newLines = lines.filterNot(t.pushedLineFilters.contains)
+      if (newLabels.isEmpty && newLines.isEmpty && parsed.isEmpty && bounds.isEmpty) f
       else {
-        val newRel = r.copy(table = t.withPushed(newLabels, newLines, parsed))
+        val newRel =
+          r.copy(table = t.withPushed(newLabels, newLines, parsed, bounds))
         // Matchers that can match a stream WITHOUT the label are pushed for
         // server-side pruning but KEPT in the residual: Loki treats a
         // missing label as the empty string, so != / !~ (which accept ""
@@ -77,13 +67,13 @@ object LokiPushdownRule extends Rule[LogicalPlan] {
         // pushing never loses a row, and the residual re-filter keeps SQL
         // semantics authoritative — the same silent-extra-rows class of gap
         // fixed for timestamp bounds and regex anchoring in round 1.
-        val removable = labels.collect {
-          case (e, m) if !LogQL.matchesAbsentLabel(m) => e
-        }.toSet ++ lines.map(_._1) ++ parsedPreds.map(_._1)
+        val kept = labels.collect {
+          case (e, m) if LogQL.matchesAbsentLabel(m) => e
+        }.toSet
+        val removable = pushed.map(_._1).toSet -- kept
         val residual = conjuncts.filterNot(removable)
         if (residual.isEmpty) newRel
-        else Filter(residual.reduce(
-          org.apache.spark.sql.catalyst.expressions.And(_, _)), newRel)
+        else Filter(residual.reduce(And(_, _)), newRel)
       }
   }
 }

@@ -4,19 +4,23 @@ import org.apache.spark.sql.catalyst.expressions.{
   Attribute, Contains, ElementAt, EqualTo, Expression, GetMapValue,
   GreaterThan, GreaterThanOrEqual, ILike, LessThan, LessThanOrEqual, Like,
   Literal, Lower, Not, RLike}
-import org.apache.spark.sql.sources
 import org.apache.spark.sql.types.{MapType, StringType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** LogQL fragments + the three expression translators, mirroring the
+/** LogQL fragments + the expression translators, mirroring the
   * reference's `src/expr.rs`:
   *
   *   - label matchers  (expr_to_label_filter, expr.rs:11-47)
   *   - line filters    (expr_to_line_filter, expr.rs:49-112)
   *   - timestamp bounds (parse_timestamp_bound, expr.rs:114-152)
+  *   - parsed-label predicates (beyond the reference: `| json` /
+  *     `| logfmt` / `| pattern` / `| regexp` stages)
   *
-  * Translators return None for anything outside the reference's whitelist —
-  * a rejected predicate stays as a residual Spark Filter (the analog of
+  * [[translate]] is the one cascade over them — the analog of the
+  * reference's `supports_filters_pushdown` (table.rs:140-156) — and every
+  * rule that pushes a WHERE conjunct calls it. Translators return None for
+  * anything outside the reference's whitelist — a rejected predicate stays
+  * as a residual Spark Filter (the analog of
   * `TableProviderFilterPushDown::Unsupported`), so pushdown is only claimed
   * where Loki fully enforces it (SURVEY.md §7.4(e)).
   *
@@ -28,13 +32,20 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object LogQL {
 
+  /** What one WHERE conjunct becomes on the wire ([[translate]]): a
+    * window bound, a selector matcher, a line filter or a parser-stage
+    * predicate.
+    */
+  sealed trait Pushed
+
   /** `{app="x"}` piece: label name + operator + value. */
-  final case class LabelMatcher(label: String, op: String, value: String) {
+  final case class LabelMatcher(label: String, op: String, value: String)
+    extends Pushed {
     def render: String = s"""$label$op${q(value)}"""
   }
 
   /** `|= "x"` / `|~ `re`` piece. */
-  final case class LineFilter(op: String, pattern: String) {
+  final case class LineFilter(op: String, pattern: String) extends Pushed {
     def render: String =
       // ip() forms (round 16): ops "|=ip" / "!=ip" — the pattern is a
       // validated [0-9./\- ] IPv4 spec, always safely double-quotable
@@ -66,9 +77,20 @@ object LogQL {
   /** A value as an escaped `"…"` LogQL string. */
   private def q(s: String): String = "\"" + escapeQuoted(s) + "\""
 
-  sealed trait TsBound { def ns: Long }
+  /** A bound of Loki's [start, end) window, in ns. */
+  sealed trait TsBound extends Pushed { def ns: Long }
   final case class Start(ns: Long) extends TsBound
   final case class End(ns: Long) extends TsBound
+
+  /** A parser-stage predicate before its extraction label is assigned
+    * ([[parsedPredicate]]'s result); [[labelled]] names it.
+    */
+  final case class Parsed(
+      parser: String, key: String, filters: Seq[(String, String)])
+    extends Pushed {
+    def labelled(label: String): ParsedFilter =
+      ParsedFilter(parser, key, label, filters)
+  }
 
   /** One pushed PARSER-stage predicate (round 15): an extraction stage
     * (`| json gp0="key"` / `| logfmt gp0="key"`, explicit-expression
@@ -91,7 +113,7 @@ object LogQL {
       label: String,
       filters: Seq[(String, String)]) {
     /** Identity without the generated label (idempotent re-capture). */
-    def pred: (String, String, Seq[(String, String)]) = (parser, key, filters)
+    def pred: Parsed = Parsed(parser, key, filters)
     /** Wire rendering. For `pattern`, `key` is the whole template with
       * the target capture's name spelled as the NUL placeholder
       * (substituted with the generated label here — a capture name can't
@@ -471,8 +493,7 @@ object LogQL {
   }
 
   // ---------------------------------------------------------------------
-  // Catalyst-side translators (used by the optimizer rule for predicates
-  // Spark's DSv2 filter translation cannot express: map access + regex).
+  // Catalyst-side translators, composed by [[translate]].
   // ---------------------------------------------------------------------
 
   /** Loki's label-name grammar (Prometheus: `[a-zA-Z_][a-zA-Z0-9_]*`).
@@ -1051,69 +1072,52 @@ object LogQL {
         if (us > 0) Long.MaxValue else Long.MinValue
     }
 
-  /** ns + 1 without wrapping at the saturated horizon. */
-  private def nsPlus1(ns: Long): Long =
-    if (ns == Long.MaxValue) ns else ns + 1
-
-  private object TsLit {
-    /** µs timestamp literal → ns (SURVEY.md §7.4(b)). */
+  private object TsUs {
+    /** A µs timestamp literal (SURVEY.md §7.4(b)). */
     def unapply(e: Expression): Option[Long] = e match {
-      case Literal(us: java.lang.Long, TimestampType) => Some(usToNsSat(us))
+      case Literal(us: java.lang.Long, TimestampType) => Some(us)
       case _ => None
     }
   }
 
   /** `timestamp </<=/>/>= literal` → Start/End bound, flipping when the
     * literal is on the left (expr.rs:129-147). `=` unsupported, like the
-    * reference. Loki's API window is [start, end): a strict `>` therefore
-    * becomes Start(ns+1) and a non-strict `<=` becomes End(ns+1) — the
-    * reference maps both variants to the bare bound (expr.rs:132-135),
-    * which is off by one nanosecond at the boundary under an Exact claim.
+    * reference. Loki's API window is [start, end) in ns, while Spark reads
+    * each row's ns truncated to µs: `ts > T` and `ts <= T` therefore turn
+    * on the first ns of the NEXT µs — a row at T·1000 + 1 ns reads as T,
+    * so it fails `> T` and passes `<= T`. The reference maps both
+    * variants to the bare bound (expr.rs:132-135), which is off at the
+    * boundary under an Exact claim.
     */
-  def timestampBound(e: Expression): Option[TsBound] = e match {
-    case GreaterThan(TsAttr(), TsLit(ns)) => Some(Start(nsPlus1(ns)))
-    case GreaterThanOrEqual(TsAttr(), TsLit(ns)) => Some(Start(ns))
-    case LessThan(TsAttr(), TsLit(ns)) => Some(End(ns))
-    case LessThanOrEqual(TsAttr(), TsLit(ns)) => Some(End(nsPlus1(ns)))
-    case GreaterThan(TsLit(ns), TsAttr()) => Some(End(ns))       // lit > ts ⇔ ts < lit
-    case GreaterThanOrEqual(TsLit(ns), TsAttr()) => Some(End(nsPlus1(ns)))
-    case LessThan(TsLit(ns), TsAttr()) => Some(Start(nsPlus1(ns)))    // lit < ts ⇔ ts > lit
-    case LessThanOrEqual(TsLit(ns), TsAttr()) => Some(Start(ns))
-    case _ => None
-  }
-
-  // ---------------------------------------------------------------------
-  // DSv2 source.Filter-side translators (for what Spark CAN translate:
-  // top-level column predicates arriving at SupportsPushDownFilters).
-  // ---------------------------------------------------------------------
-
-  def fromSourceFilter(f: sources.Filter): Option[Either[LineFilter, TsBound]] = {
-    // same saturation as TsLit: ms×1e6 / s×1e9 overflow past the int64-ns
-    // horizon and a wrapped bound empties the scan under an Exact claim
-    def satScale(v: Long, f: Long, add: Long): Long =
-      try math.addExact(math.multiplyExact(v, f), add)
-      catch {
-        case _: ArithmeticException =>
-          if (v > 0) Long.MaxValue else Long.MinValue
-      }
-    def ts(v: Any): Option[Long] = v match {
-      case t: java.sql.Timestamp =>
-        Some(satScale(t.getTime, 1000000L, (t.getNanos % 1000000).toLong))
-      case i: java.time.Instant =>
-        Some(satScale(i.getEpochSecond, 1000000000L, i.getNano.toLong))
-      case _ => None
-    }
-    def plus1(ns: Long): Long = if (ns == Long.MaxValue) ns else ns + 1
-    f match {
-      case sources.StringContains("line", x) => Some(Left(LineFilter("|=", x)))
-      case sources.Not(sources.StringContains("line", x)) => Some(Left(LineFilter("!=", x)))
-      // [start, end) window: strict > excludes the boundary ns, non-strict
-      // <= includes it (see timestampBound)
-      case sources.GreaterThan("timestamp", v) => ts(v).map(n => Right(Start(plus1(n))))
-      case sources.GreaterThanOrEqual("timestamp", v) => ts(v).map(n => Right(Start(n)))
-      case sources.LessThan("timestamp", v) => ts(v).map(n => Right(End(n)))
-      case sources.LessThanOrEqual("timestamp", v) => ts(v).map(n => Right(End(plus1(n))))
+  def timestampBound(e: Expression): Option[TsBound] = {
+    def nextUs(us: Long): Long =
+      if (us == Long.MaxValue) Long.MaxValue else usToNsSat(us + 1)
+    e match {
+      case GreaterThan(TsAttr(), TsUs(us)) => Some(Start(nextUs(us)))
+      case GreaterThanOrEqual(TsAttr(), TsUs(us)) => Some(Start(usToNsSat(us)))
+      case LessThan(TsAttr(), TsUs(us)) => Some(End(usToNsSat(us)))
+      case LessThanOrEqual(TsAttr(), TsUs(us)) => Some(End(nextUs(us)))
+      // lit > ts ⇔ ts < lit, and so on
+      case GreaterThan(TsUs(us), TsAttr()) => Some(End(usToNsSat(us)))
+      case GreaterThanOrEqual(TsUs(us), TsAttr()) => Some(End(nextUs(us)))
+      case LessThan(TsUs(us), TsAttr()) => Some(Start(nextUs(us)))
+      case LessThanOrEqual(TsUs(us), TsAttr()) => Some(Start(usToNsSat(us)))
       case _ => None
     }
   }
+
+  /** The one pushdown cascade: which LogQL piece a WHERE conjunct
+    * becomes, or None when it must stay a residual. Tried in order:
+    * window bound, label matcher, line filter, then (when `pushParsers`)
+    * a parser-stage predicate. Each caller keeps its own policy over the
+    * result — the scan keeps absent-label matchers as a residual too
+    * ([[matchesAbsentLabel]]), the metric rewrite and DELETE refuse them.
+    */
+  def translate(e: Expression, pushParsers: Boolean): Option[Pushed] =
+    timestampBound(e)
+      .orElse(labelMatcher(e))
+      .orElse(lineFilter(e))
+      .orElse(
+        if (pushParsers) parsedPredicate(e).map { case (p, k, fs) => Parsed(p, k, fs) }
+        else None)
 }

@@ -277,8 +277,28 @@ final case class LokiOptions(
 }
 
 object LokiOptions {
+  /** Every key [[from]] reads. */
+  private val keys = Seq("endpoint", "default_label", "partitions",
+    "push_batch_size", "check_connection", "split", "query_limit",
+    "server_max_entries", "push_count", "push_metric", "push_parsers",
+    "report_statistics", "group_streams", "structured_metadata",
+    "stream_start_ns", "stream_end_ns", "stream_lag_ms",
+    "max_rows_per_batch", "max_bytes_per_batch", "min_rows_per_batch",
+    "min_batch_delay_ms", "selector", "direction")
+
+  /** Keys Spark itself adds to a source's options (compared ignoring
+    * case): the load/save path and a streaming sink's checkpoint.
+    */
+  private val sparkKeys = Set("path", "paths", "checkpointlocation")
+
   def from(m: CaseInsensitiveStringMap): LokiOptions = from(m.asScala.toMap)
   def from(m: Map[String, String]): LokiOptions = {
+    // a misspelled or removed option would otherwise be dropped silently
+    val unknown = m.keys.filterNot(k =>
+      keys.contains(k) || sparkKeys(k.toLowerCase)).toSeq.sorted
+    if (unknown.nonEmpty) throw new IllegalArgumentException(
+      s"unknown loki option(s): ${unknown.mkString(", ")}; valid options: " +
+        keys.sorted.mkString(", "))
     val endpoint = m.getOrElse("endpoint",
       throw new IllegalArgumentException("loki source requires an 'endpoint' option"))
     LokiOptions(
@@ -348,20 +368,23 @@ class LokiTableProvider extends TableProvider with DataSourceRegister {
   }
 }
 
-/** The one Loki table. `pushedLabelMatchers` / `pushedLineFilters` carry
-  * predicates captured by [[graft.plans.LokiPushdownRule]] (map-key and
-  * regex forms Spark's DSv2 filter translation cannot express — SURVEY.md
-  * §4.2); the ScanBuilder merges them with its own pushed state.
+/** The one Loki table. The `pushed*` fields carry what
+  * [[graft.plans.LokiPushdownRule]] captured from WHERE conjuncts —
+  * label matchers, line filters, parser-stage predicates and the window —
+  * and the ScanBuilder renders them into the scan's query.
   */
 case class LokiTable(
     options: LokiOptions,
     pushedLabelMatchers: Seq[LogQL.LabelMatcher] = Nil,
     pushedLineFilters: Seq[LogQL.LineFilter] = Nil,
-    /** Parser-stage predicates captured by [[graft.plans.LokiPushdownRule]]
-      * (round 15): each renders as `| json/logfmt gpN="key"` + label
-      * filters after the line-filter stages.
+    /** Parser-stage predicates (round 15): each renders as
+      * `| json/logfmt gpN="key"` + label filters after the line-filter
+      * stages.
       */
     pushedParsedFilters: Seq[LogQL.ParsedFilter] = Nil,
+    /** The pushed [start, end) window in ns; None = the scan's default. */
+    pushedStartNs: Option[Long] = None,
+    pushedEndNs: Option[Long] = None,
     /** Statically-known input row count for a pending INSERT, captured by
       * [[graft.plans.LokiInsertRowsRule]] from a VALUES/LocalRelation
       * input — the reference's insert plan display carries `rows=n` from
@@ -385,14 +408,24 @@ case class LokiTable(
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
       TableCapability.MICRO_BATCH_READ, TableCapability.STREAMING_WRITE)
 
+  /** Append captured pieces. Repeated bounds fold to the tightest —
+    * max(start), min(end) — so every conjunct is honored; the reference
+    * keeps the LAST bound of each kind (table.rs:106-110), which widens
+    * the window when a query repeats a bound.
+    */
   def withPushed(
       labels: Seq[LogQL.LabelMatcher],
       lines: Seq[LogQL.LineFilter],
-      parsed: Seq[LogQL.ParsedFilter] = Nil): LokiTable =
+      parsed: Seq[LogQL.ParsedFilter],
+      bounds: Seq[LogQL.TsBound]): LokiTable =
     copy(
       pushedLabelMatchers = pushedLabelMatchers ++ labels,
       pushedLineFilters = pushedLineFilters ++ lines,
-      pushedParsedFilters = pushedParsedFilters ++ parsed)
+      pushedParsedFilters = pushedParsedFilters ++ parsed,
+      pushedStartNs = (pushedStartNs ++ bounds.collect {
+        case LogQL.Start(ns) => ns }).maxOption,
+      pushedEndNs = (pushedEndNs ++ bounds.collect {
+        case LogQL.End(ns) => ns }).minOption)
 
   override def newScanBuilder(caseInsensitiveOptions: CaseInsensitiveStringMap): ScanBuilder = {
     // per-read overrides (`spark.read(.Stream).option(...)` on a catalog

@@ -257,16 +257,12 @@ class LokiMetaScanBuilder(
   override def pushedFilters(): Array[Filter] = pushed
 
   override def build(): Scan = {
-    // same minute-truncated default window as the log scan (its
-    // report_statistics contract): stable across the several DSv2 scan
-    // rebuilds of one query (case-class equality holds), cache-friendly,
-    // and never disagreeing with a log scan planned in the same minute
-    val minuteNs = 60L * 1000000000L
-    LokiMetaScan(
-      kind, options,
-      startNs.getOrElse(LokiHttp.thirtyDaysAgoNs / minuteNs * minuteNs),
-      endNs.getOrElse((LokiHttp.nowNs + minuteNs - 1) / minuteNs * minuteNs),
-      labelEq, volume)
+    // the log scan's plan-time window: stable across the several DSv2
+    // scan rebuilds of one query (case-class equality holds),
+    // cache-friendly, and never disagreeing with a log scan planned in
+    // the same minute
+    val (s, e) = LokiScan.plannedWindow(startNs, endNs)
+    LokiMetaScan(kind, options, s, e, labelEq, volume)
   }
 }
 

@@ -12,7 +12,6 @@ import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountS
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
@@ -20,9 +19,11 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   * (`src/scan.rs`). Pushdown mirrors `src/table.rs:90-156`:
   *
   *   - required columns → parquet projection (ProjectionMask analog)
-  *   - `timestamp` bounds + `line` contains → Exact (omitted from residual)
   *   - limit → Loki `limit` query param
-  *   - label / regex predicates arrive pre-captured on [[LokiTable]]
+  *   - WHERE conjuncts — timestamp bounds, label matchers, line filters,
+  *     parser stages — arrive pre-captured on [[LokiTable]] by
+  *     [[graft.plans.LokiPushdownRule]]; the builder takes no DSv2
+  *     filters of its own
   *
   * Partitioning: 1 InputPartition by default (scan.rs:46); with
   * `partitions=N` the time range splits into N slices, each an independent
@@ -32,18 +33,13 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   */
 class LokiScanBuilder(table: LokiTable)
   extends ScanBuilder
-  with SupportsPushDownFilters
   with SupportsPushDownRequiredColumns
   with SupportsPushDownLimit
   with SupportsPushDownAggregates {
 
   private var requiredSchema: StructType =
     LokiDataSource.logSchema(table.options.structuredMetadata)
-  private var pushedLines: Seq[LogQL.LineFilter] = Nil
-  private var startNs: Option[Long] = None
-  private var endNs: Option[Long] = None
   private var limit: Option[Int] = None
-  private var pushed: Array[Filter] = Array.empty
   private var countPushed = false
 
   /** Bare COUNT(*) → one `index/stats` request (see
@@ -58,7 +54,7 @@ class LokiScanBuilder(table: LokiTable)
       agg.groupByExpressions.isEmpty &&
       agg.aggregateExpressions.length == 1 &&
       agg.aggregateExpressions()(0).isInstanceOf[CountStar] &&
-      pushedLines.isEmpty && table.pushedLineFilters.isEmpty &&
+      table.pushedLineFilters.isEmpty &&
       // parser stages reduce rows below the selector count the same way
       // line filters do — index/stats would overcount
       table.pushedParsedFilters.isEmpty &&
@@ -75,23 +71,6 @@ class LokiScanBuilder(table: LokiTable)
     countPushed
   }
 
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (accepted, residual) = filters.partition(f => LogQL.fromSourceFilter(f).isDefined)
-    accepted.flatMap(LogQL.fromSourceFilter).foreach {
-      // conjunct semantics: the tightest bound wins — max(start),
-      // min(end) — so every pushed conjunct is honored. The reference
-      // keeps the LAST bound of each kind (table.rs:106-110), which
-      // widens the window when a query repeats a bound.
-      case Left(lf) => pushedLines :+= lf
-      case Right(LogQL.Start(ns)) => startNs = Some(startNs.fold(ns)(math.max(_, ns)))
-      case Right(LogQL.End(ns)) => endNs = Some(endNs.fold(ns)(math.min(_, ns)))
-    }
-    pushed = accepted
-    residual // accepted filters are Exact: Loki fully enforces them
-  }
-
-  override def pushedFilters(): Array[Filter] = pushed
-
   override def pruneColumns(required: StructType): Unit = {
     // preserve table column order regardless of the required order
     val names = required.fieldNames.toSet
@@ -107,7 +86,7 @@ class LokiScanBuilder(table: LokiTable)
 
   override def build(): Scan = {
     val LogQL.LogQuery(selector, logql) = LogQL.logQuery(table.options,
-      table.pushedLabelMatchers, table.pushedLineFilters ++ pushedLines,
+      table.pushedLabelMatchers, table.pushedLineFilters,
       table.pushedParsedFilters).getOrElse(
       // table.rs:116-122: LogQL requires at least one label matcher
       throw new IllegalArgumentException(
@@ -117,12 +96,13 @@ class LokiScanBuilder(table: LokiTable)
       // complete COUNT(*) pushdown: the scan's read schema IS the
       // aggregation output (one non-null long; Spark consumes it
       // positionally), answered by one index/stats request
-      LokiScan(table.options, logql, selector, startNs, endNs, limit,
+      LokiScan(table.options, logql, selector, table.pushedStartNs,
+        table.pushedEndNs, limit,
         StructType(Seq(StructField("count(*)", LongType, nullable = false))),
         countOnly = true)
     else
-      LokiScan(table.options, logql, selector, startNs, endNs, limit,
-        requiredSchema)
+      LokiScan(table.options, logql, selector, table.pushedStartNs,
+        table.pushedEndNs, limit, requiredSchema)
   }
 }
 
@@ -162,10 +142,7 @@ case class LokiScan(
       override def sizeInBytes(): OptionalLong = OptionalLong.of(16L)
       override def numRows(): OptionalLong = OptionalLong.of(1L)
     }
-    val minuteNs = 60L * 1000000000L
-    val s = startNs.getOrElse(LokiHttp.thirtyDaysAgoNs / minuteNs * minuteNs)
-    val e = endNs.getOrElse(
-      (LokiHttp.nowNs + minuteNs - 1) / minuteNs * minuteNs)
+    val (s, e) = LokiScan.plannedWindow(startNs, endNs)
     try {
       val (entries, bytes) =
         LokiScan.cachedStats(options.endpoint, selector, s, e)
@@ -316,18 +293,7 @@ case class LokiScan(
   // from now()-relative defaults just miss the cache, which is correct.
   @transient private lazy val plannedBounds: Seq[(Long, Long)] = {
     val n = math.max(options.numPartitions, 1)
-    // default (now-relative) bounds round to minute granularity — start
-    // floor, end ceil, so the window only ever WIDENS (the extra tail is
-    // in the future = empty; the extra head is <60 s on a 30-day
-    // heuristic window). Without this every DSv2 Scan rebuild of the
-    // same query mints fresh ns-exact bounds, the cross-instance bounds
-    // cache never hits, and each of the ~6 rebuilds per query re-pays
-    // the full plan-time probe sequence against a real endpoint.
-    // Pushed explicit bounds stay ns-exact.
-    val minuteNs = 60L * 1000000000L
-    val s = startNs.getOrElse(LokiHttp.thirtyDaysAgoNs / minuteNs * minuteNs)
-    val e = endNs.getOrElse(
-      (LokiHttp.nowNs + minuteNs - 1) / minuteNs * minuteNs)
+    val (s, e) = LokiScan.plannedWindow(startNs, endNs)
     val eff = math.max(1L, math.min(n.toLong, e - s)).toInt
     if (options.split == "stats") {
       val key = (options.endpoint, logql, s, e, eff)
@@ -454,6 +420,22 @@ case class LokiScan(
 
 object LokiScan {
   private[loki] val log = org.slf4j.LoggerFactory.getLogger(classOf[LokiScan])
+
+  /** The concrete window a plan-time computation uses: the statistics
+    * probe, the partition slicer and the metadata scans. A missing bound
+    * defaults to now − 30 d … now (scan.rs:104-115) rounded out to the
+    * minute — start floor, end ceil, so the window only ever WIDENS (the
+    * extra tail is in the future = empty; the extra head is <60 s on a
+    * 30-day heuristic window). Without the rounding every DSv2 Scan
+    * rebuild of the same query mints fresh ns-exact bounds, and the
+    * bounds and stats memos keyed on the window never hit. Pushed bounds
+    * stay ns-exact.
+    */
+  def plannedWindow(startNs: Option[Long], endNs: Option[Long]): (Long, Long) = {
+    val minuteNs = 60L * 1000000000L
+    (startNs.getOrElse(LokiHttp.thirtyDaysAgoNs / minuteNs * minuteNs),
+      endNs.getOrElse((LokiHttp.nowNs + minuteNs - 1) / minuteNs * minuteNs))
+  }
 
   /** Plan-time wall-clock budget for the `split=stats` bisection probes.
     * Against a real endpoint each probe is an HTTP round trip; past the

@@ -54,9 +54,9 @@ class LokiMicroBatchStream(scan: LokiScan)
   /** Start of the tail: TIGHTEST bound wins — max over a pushed lower
     * timestamp bound and `stream_start_ns` — mirroring [[capNs]]'s min
     * (an `orElse` priority would let a stale pushed bound widen the tail
-    * past what stream_start_ns asked for). Spark applies no DSv2 filter
-    * pushdown to micro-batch scans, so scan.startNs is populated only if
-    * that changes (or a bounded scan is constructed directly);
+    * past what stream_start_ns asked for). LokiPushdownRule does not
+    * match streaming relations, so scan.startNs is populated only when a
+    * scan is built from a table carrying pushed bounds;
     * stream_start_ns is the live control. Label/line pushdown for the
     * tail has its own explicit channel instead: the `selector` option
     * ([[LokiOptions.selector]]) puts raw LogQL matchers + line stages in

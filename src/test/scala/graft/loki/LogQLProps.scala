@@ -65,11 +65,11 @@ object LogQLProps extends Properties("LogQL") {
     Prop.forAll(Gen.chooseNum(0L, 4102444800000000L)) { us =>
       val ts = AttributeReference("timestamp", TimestampType, nullable = false)()
       val lit = Literal(us, TimestampType)
-      // ts > lit ⇔ lit < ts; strict > excludes the boundary ns → +1
+      // ts > lit ⇔ lit < ts; strict > excludes the whole boundary µs
       (LogQL.timestampBound(GreaterThan(ts, lit)),
         LogQL.timestampBound(LessThan(lit, ts))) match {
         case (Some(LogQL.Start(a)), Some(LogQL.Start(b))) =>
-          a == b && a == us * 1000L + 1
+          a == b && a == (us + 1) * 1000L
         case _ => false
       }
     }

@@ -402,4 +402,22 @@ class LokiCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
       spark.sql("SELECT * FROM lokicat.default.nope").collect()
     }
   }
+
+  test("unknown options fail through the catalog: base config and per-read") {
+    // the IllegalArgumentException naming the key, however Spark wraps it
+    def rejected(key: String)(body: => Any): Unit = {
+      val t = intercept[Exception](body)
+      val msg = Iterator.iterate[Throwable](t)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case e: IllegalArgumentException => e.getMessage }
+      assert(msg.exists(m => m.contains(key) && m.contains("partitions")), t)
+    }
+    spark.conf.set("spark.sql.catalog.typocat", "graft.sources.loki.LokiCatalog")
+    spark.conf.set("spark.sql.catalog.typocat.endpoint", stub.endpoint)
+    spark.conf.set("spark.sql.catalog.typocat.default_label", "app")
+    spark.conf.set("spark.sql.catalog.typocat.partiton", "4")
+    rejected("partiton")(spark.sql("SELECT line FROM typocat.default.loki").collect())
+    rejected("strict_bounds")(
+      spark.read.option("strict_bounds", "false")
+        .table("lokicat.default.loki").select("line").collect())
+  }
 }

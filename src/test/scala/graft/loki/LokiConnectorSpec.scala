@@ -57,6 +57,21 @@ class LokiConnectorSpec extends SparkTestBase with BeforeAndAfterAll {
         r.getMap[String, String](2).toMap)
     }.sortBy(_._1)
 
+  test("unknown options fail at load, naming the key and the valid keys") {
+    // a typo and two removed options: each was once accepted and ignored
+    for (key <- Seq("partiton", "escape_logql", "strict_bounds")) {
+      val e = intercept[IllegalArgumentException] {
+        spark.read.format("loki")
+          .option("endpoint", stub.endpoint)
+          .option("default_label", "app")
+          .option(key, "4")
+          .load()
+      }
+      assert(e.getMessage.contains(key) && e.getMessage.contains("partitions"),
+        e.getMessage)
+    }
+  }
+
   test("every scan shape decodes columnar, structured metadata included") {
     // the reference streams Arrow batches end-to-end (scan.rs:200-213);
     // the single-request and paged shapes both decode wire parquet

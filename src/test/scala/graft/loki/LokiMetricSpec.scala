@@ -304,6 +304,35 @@ class LokiMetricSpec extends SparkTestBase with BeforeAndAfterAll {
         .groupBy(date_trunc("day", col("timestamp"))).agg(count(lit(1))))
   }
 
+  test("repeated bounds rewrite over the tightest window and match the scan") {
+    // windowed() plus a looser start, a tighter start and a looser end:
+    // the window is their intersection, [2024-01-02, 2024-01-04)
+    def repeated(df: DataFrame): DataFrame =
+      windowed(df).filter(
+        col("timestamp") >= lit("2023-12-31 00:00:00").cast("timestamp") &&
+          col("timestamp") >= lit("2024-01-02 00:00:00").cast("timestamp") &&
+          col("timestamp") < lit("2024-01-05 00:00:00").cast("timestamp"))
+    def agg(df: DataFrame): DataFrame =
+      repeated(df)
+        .groupBy(
+          date_trunc("day", col("timestamp")).as("bucket"),
+          element_at(col("labels"), "app").as("app"))
+        .agg(count(lit(1)).as("cnt"))
+        .orderBy("bucket", "app")
+    def rows(df: DataFrame): Seq[(Long, String, Long)] =
+      df.collect().toSeq.map(r =>
+        (r.getTimestamp(0).getTime, r.getString(1), r.getLong(2)))
+    val plan = planOf(agg(lokiDf()))
+    assert(plan.contains("LokiMetricScan") &&
+      plan.contains(s"start=${baseNs + dayNs}, end=${baseNs + 3 * dayNs},"),
+      plan)
+    val host = agg(lokiDf(Map("push_metric" -> "false")))
+    assert(!planOf(host).contains("LokiMetricScan"))
+    val got = rows(agg(lokiDf()))
+    assert(got.map(_._1).distinct.size == 2, got)
+    assert(got == rows(host))
+  }
+
   test("boundary rows: a row exactly on a bucket edge lands in the floor bucket") {
     // every seeded row sits exactly on an hour boundary; hour-bucketing
     // therefore puts each row at its own timestamp's bucket — the
