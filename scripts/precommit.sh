@@ -64,6 +64,17 @@ if [[ -n "$extra_mains" ]]; then
   exit 1
 fi
 
+# One string escaper (LogQL.quoteTo): LogQL values, push payloads, stub
+# responses and oracle_sql.json all need the same Go/JSON escapes, and the
+# table once had five copies. A `%04x` control-character escape marks one.
+escapers=$(grep -rl '%04x' src/main --include='*.scala' || true)
+if [[ $(printf '%s' "$escapers" | grep -c .) -gt 1 ]]; then
+  echo "FAIL: more than one string escaper under src/main; call LogQL.quote" >&2
+  echo "or LogQL.quoteTo instead:" >&2
+  echo "$escapers" >&2
+  exit 1
+fi
+
 sbt -batch Test/compile "runMain graft.Smoke" | tee /tmp/precommit_smoke.out
 
 # The benchmark (perfbench/) is its own sbt build on top of this one, so a

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.sources.loki.LogQL.quote
+
 /** Driver-run benchmark: two JSON lines — a full-detail line (every
   * query + stage counts) for BENCH_COMPARE tooling, then a compact final
   * line sized to fit the driver's 2000-char output-tail capture (the
@@ -210,18 +212,9 @@ object Bench {
       if (!sys.env.getOrElse("SPARK_GRAFT_DUCKDB", "true").toBoolean) None
       else try {
         val dir = java.nio.file.Files.createTempDirectory("graft_bench_oracle")
-        def jq(s: String): String = "\"" + s.flatMap {
-          case '"' => "\\\""
-          case '\\' => "\\\\"
-          case '\n' => "\\n"
-          case '\r' => "\\r"
-          case '\t' => "\\t"
-          case c if c < ' ' => f"\\u${c.toInt}%04x"
-          case c => c.toString
-        } + "\""
         val oracleJson = SparkEntry.oracleSql
           .filter { case (k, _) => qs.exists(_._1 == k) }
-          .map { case (k, v) => s"${jq(k)}: ${jq(v)}" }.mkString("{", ",", "}")
+          .map { case (k, v) => s"${quote(k)}: ${quote(v)}" }.mkString("{", ",", "}")
         java.nio.file.Files.writeString(
           dir.resolve("oracle_sql.json"), oracleJson)
         val pb = new ProcessBuilder(

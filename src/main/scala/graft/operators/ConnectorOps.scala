@@ -1518,14 +1518,14 @@ object ConnectorOps {
           |  AND ts < TIMESTAMP '2024-02-01 00:00:00'
           |ORDER BY ts_us, line""".stripMargin)),
 
-    // Grouped write path under the oracle (round 10): insert the error
-    // rows with group_streams=true (one stream object per label set on
-    // the wire instead of per row), then read them BACK through the
-    // connector scan — a full write→read roundtrip through the grouped
-    // payload, so a grouping bug (lost value, wrong stream association,
-    // bad JSON) surfaces as a row mismatch against the events oracle,
-    // not just a spec assertion. The in-query check also pins that the
-    // wire really grouped: stream objects on the wire << rows written.
+    // The write path under the oracle (round 10): insert the error rows
+    // (one stream object per label set per push), then read them BACK
+    // through the connector scan — a full write→read roundtrip through
+    // the grouped payload, so a grouping bug (lost value, wrong stream
+    // association, bad JSON) surfaces as a row mismatch against the
+    // events oracle, not just a spec assertion. The in-query check also
+    // pins that the wire really grouped: stream objects on the wire <<
+    // rows written.
     ("loki_insert_grouped_roundtrip",
       (s: SparkSession, d: String) => {
         import s.implicits._
@@ -1542,7 +1542,6 @@ object ConnectorOps {
           .write.format("loki")
           .option("endpoint", scratch.endpoint)
           .option("push_batch_size", "8192")
-          .option("group_streams", "true")
           .mode("append").save()
         val streamObjs = scratch.pushBodies.synchronized(
           scratch.pushBodies.map("\\{\"stream\":".r.findAllIn(_).size).sum)

@@ -73,6 +73,10 @@ import graft.sources.loki.{LogQL, LokiMetricTable, LokiTable, MetricAgg}
   * explicit column list, never "every label except these", so the
   * rewrite always renders the `by` form — `without` is not a gap, it is
   * unreachable from the relational surface.
+  *
+  * Like any optimizer rule, the rewrite is switched off by naming
+  * `graft.plans.LokiMetricAggRule` in `spark.sql.optimizer.excludedRules`;
+  * every aggregate then runs over the log scan.
   */
 object LokiMetricAggRule extends Rule[LogicalPlan] with PredicateHelper {
 
@@ -334,8 +338,6 @@ object LokiMetricAggRule extends Rule[LogicalPlan] with PredicateHelper {
       case Some(x) => x
       case None => return None
     }
-    if (!table.options.pushMetric) return None
-
     // ---- grouping: at most one date_trunc + any number of label
     // accesses. No date_trunc at all is the UNBUCKETED form — "counts
     // per label over the window" — answered by one evaluation with

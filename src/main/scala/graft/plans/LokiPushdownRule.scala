@@ -87,9 +87,10 @@ object LokiPushdownRule extends Rule[LogicalPlan] with PredicateHelper {
   * VALUES / LocalRelation input — exactly the reference README's case),
   * the count rides into the [[LokiTable]] so `newWriteBuilder` bakes it
   * into [[graft.sources.loki.LokiLogWrite]]'s description, and EXPLAIN
-  * shows `LokiLogInsert: endpoint=…, rows=n`. Handles both rule orders:
-  * before V2Writes (count via the table) and after (wrap the built
-  * Write directly).
+  * shows `LokiLogInsert: endpoint=…, rows=n`. The table is the only
+  * channel: extension optimizer rules run in the operator-optimization
+  * batches, before `V2Writes` (one of `SparkOptimizer`'s early scan
+  * push-down rules) builds the Write from it.
   */
 object LokiInsertRowsRule extends Rule[LogicalPlan] {
   import org.apache.spark.sql.catalyst.plans.logical.{AppendData, LocalRelation, Project, SubqueryAlias}
@@ -109,13 +110,7 @@ object LokiInsertRowsRule extends Rule[LogicalPlan] {
         if t.staticInputRows.isEmpty =>
       staticRows(a.query) match {
         case Some(n) =>
-          val a2 =
-            a.copy(table = r.copy(table = t.copy(staticInputRows = Some(n))))
-          a.write match {
-            case Some(w: graft.sources.loki.LokiLogWrite) if w.rows.isEmpty =>
-              a2.copy(write = Some(w.copy(rows = Some(n))))
-            case _ => a2
-          }
+          a.copy(table = r.copy(table = t.copy(staticInputRows = Some(n))))
         case None => a
       }
   }

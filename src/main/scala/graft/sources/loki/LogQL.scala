@@ -26,7 +26,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Unlike the reference, which interpolates values raw
   * (expr.rs:38-41,65-78,101-104), every value renders through one escaping
-  * renderer ([[escapeQuoted]]): a quote, backslash or control character
+  * renderer ([[quote]]): a quote, backslash or control character
   * in a pushed value would otherwise change the query on the wire under
   * the Exact claim (SURVEY.md §7.4(d), resolved in favour of §7.4(e)).
   */
@@ -41,7 +41,7 @@ object LogQL {
   /** `{app="x"}` piece: label name + operator + value. */
   final case class LabelMatcher(label: String, op: String, value: String)
     extends Pushed {
-    def render: String = s"""$label$op${q(value)}"""
+    def render: String = s"""$label$op${quote(value)}"""
   }
 
   /** `|= "x"` / `|~ `re`` piece. */
@@ -52,30 +52,36 @@ object LogQL {
       if (op.endsWith("ip")) s"""${op.dropRight(2)} ip("$pattern")"""
       // backtick literals take the pattern verbatim but cannot contain a
       // backtick; such a pattern falls back to the quoted-string form
-      else if (pattern.contains('`')) s"$op ${q(pattern)}"
+      else if (pattern.contains('`')) s"$op ${quote(pattern)}"
       else s"$op `$pattern`"
   }
 
-  /** Escaping for `"…"`-delimited LogQL strings — the one place a value
-    * is made safe for the wire. Every renderer below goes through it
-    * (via [[q]]), so a pushed value always re-parses to itself
-    * (parse∘render is the identity, property-pinned in LogQLProps).
+  /** `s` as a `"…"`-delimited string, appended to `sb` — the one
+    * escaper in the program. LogQL strings follow Go syntax, and Go and
+    * JSON escape a quote, a backslash and a control character alike, so
+    * the same text is a pushed LogQL value, a push-payload or stub
+    * response JSON string, and an `oracle_sql.json` entry. A raw newline
+    * or tab inside a double-quoted LogQL string is a parse error, and a
+    * pushed value always re-parses to itself (parse∘render is the
+    * identity, property-pinned in LogQLProps).
     */
-  private def escapeQuoted(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      // control characters: a raw newline/tab inside a double-quoted
-      // (Go-syntax) LogQL string is a parse error
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
+  def quoteTo(sb: java.lang.StringBuilder, s: String): java.lang.StringBuilder = {
+    sb.append('"')
+    s.foreach {
+      case '"' => sb.append("\\\"")
+      case '\\' => sb.append("\\\\")
+      case '\n' => sb.append("\\n")
+      case '\r' => sb.append("\\r")
+      case '\t' => sb.append("\\t")
+      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
+      case c => sb.append(c)
     }
+    sb.append('"')
+  }
 
-  /** A value as an escaped `"…"` LogQL string. */
-  private def q(s: String): String = "\"" + escapeQuoted(s) + "\""
+  /** `s` as an escaped `"…"` string ([[quoteTo]]). */
+  def quote(s: String): String =
+    quoteTo(new java.lang.StringBuilder(s.length + 2), s).toString
 
   /** A bound of Loki's [start, end) window, in ns. */
   sealed trait TsBound extends Pushed { def ns: Long }
@@ -125,10 +131,10 @@ object LogQL {
         // pattern AND (round 16) regexp carry the placeholder-marked
         // template/pattern as `key`
         case "pattern" | "regexp" =>
-          s"| $parser ${q(key.replace("\u0000", label))}"
-        case _ => s"| $parser $label=${q(key)}"
+          s"| $parser ${quote(key.replace("\u0000", label))}"
+        case _ => s"| $parser $label=${quote(key)}"
       }
-      (ext +: filters.map { case (op, v) => s"| $label$op${q(v)}" })
+      (ext +: filters.map { case (op, v) => s"| $label$op${quote(v)}" })
         .mkString(" ")
     }
   }
@@ -197,10 +203,10 @@ object LogQL {
     def render: String = kind match {
       // one string operand — the template/pattern, carried as the
       // single expr's key (label slot unused)
-      case "pattern" | "regexp" => s"| $kind ${q(exprs.head._2)}"
+      case "pattern" | "regexp" => s"| $kind ${quote(exprs.head._2)}"
       case _ =>
         if (exprs.isEmpty) s"| $kind"
-        else s"| $kind " + exprs.map { case (l, k) => s"$l=${q(k)}" }
+        else s"| $kind " + exprs.map { case (l, k) => s"$l=${quote(k)}" }
           .mkString(", ")
     }
   }
@@ -212,7 +218,7 @@ object LogQL {
     extends PipeStage {
     def render: String =
       if (op.endsWith("ip")) s"""| $label${op.dropRight(2)}ip("$value")"""
-      else s"| $label$op${q(value)}"
+      else s"| $label$op${quote(value)}"
   }
   /** `| line_format "template"` (round 16) — rewrites the returned line
     * from a Go-template over the effective labels. The connector
@@ -220,7 +226,7 @@ object LogQL {
     * templates carry functions/pipelines no host check could validate).
     */
   final case class PLineFormat(template: String) extends PipeStage {
-    def render: String = s"| line_format ${q(template)}"
+    def render: String = s"| line_format ${quote(template)}"
   }
   /** `| label_format dst=src, dst2="template"` (round 16) — ident
     * operands RENAME (move src's value to dst, Loki semantics), quoted
@@ -231,7 +237,7 @@ object LogQL {
     def render: String =
       "| label_format " + ops.map {
         case (dst, Left(src)) => s"$dst=$src"
-        case (dst, Right(t)) => s"$dst=${q(t)}"
+        case (dst, Right(t)) => s"$dst=${quote(t)}"
       }.mkString(", ")
   }
 
@@ -258,7 +264,7 @@ object LogQL {
     def render: String =
       s"| $kind " + ops.map {
         case (l, None) => l
-        case (l, Some(v)) => s"$l=${q(v)}"
+        case (l, Some(v)) => s"$l=${quote(v)}"
       }.mkString(", ")
   }
 
@@ -761,6 +767,16 @@ object LogQL {
       if (inner.contains('%') || inner.contains('_')) None else Some(inner)
     } else None
 
+  /** Whether a case-insensitive match of `x` is the same under Spark's
+    * `lower` (Java's full lowercasing) and RE2's `(?i)` (simple case-fold
+    * orbits). They differ on `ſ` (U+017F, which RE2 folds to `s`), on `İ`
+    * (U+0130, which Spark lowers to `i` + U+0307) and on non-ASCII
+    * letters such as `µ`/`μ`. So only ASCII literals without `s` or `i`
+    * push; `k` is safe, since the Kelvin sign folds to it on both sides.
+    */
+  private def foldsAlike(x: String): Boolean =
+    x.forall(c => c < 0x80 && "sSiI".indexOf(c) < 0)
+
   /** Predicates on `line` → LogQL line filter. Handles both the raw
     * Like/ILike/RLike forms and the Contains forms Spark's
     * LikeSimplification may already have rewritten them into.
@@ -791,28 +807,21 @@ object LogQL {
     case ILike(LineAttr(), StrLit(p), esc) if !p.contains(esc) =>
       // the LIKE literal is plain text: regex-escape it before embedding in
       // the (?i) regex (a raw dot/paren would change semantics or break the
-      // query — the reference pushes it raw, expr.rs:101-104).
-      // Case-folding caveat: Spark's ILIKE lowercases with full Unicode
-      // (lower('K' U+212A KELVIN) = 'k', lower('İ' U+0130) = "i"+U+0307)
-      // while RE2's (?i) SIMPLE-folds — the two agree on KELVIN/long-s
-      // but diverge on the handful of codepoints whose lowercase is
-      // MULTI-CHAR (U+0130 is the practical case: an input line holding
-      // 'İ' satisfies ILIKE '%i%' Spark-side but not RE2's (?i)i). The
-      // reference pushes ILIKE with the same exposure (and raw
-      // interpolation besides); kept Exact as documented parity, and the
-      // stub folds with UNICODE_CASE so it models RE2, not Java-ASCII.
-      containsPattern(p).map(x => LineFilter("|~", s"(?i)${regexEscape(x)}"))
+      // query — the reference pushes it raw, expr.rs:101-104)
+      containsPattern(p).filter(foldsAlike)
+        .map(x => LineFilter("|~", s"(?i)${regexEscape(x)}"))
     case Not(ILike(LineAttr(), StrLit(p), esc)) if !p.contains(esc) =>
-      containsPattern(p).map(x => LineFilter("!~", s"(?i)${regexEscape(x)}"))
+      containsPattern(p).filter(foldsAlike)
+        .map(x => LineFilter("!~", s"(?i)${regexEscape(x)}"))
     // post-LikeSimplification forms
     case Contains(LineAttr(), StrLit(x)) => Some(LineFilter("|=", x))
     case Not(Contains(LineAttr(), StrLit(x))) => Some(LineFilter("!=", x))
     // sound only for a lowercase literal: lower(line) can never contain
     // an uppercase character, so the SQL result is empty — pushing the
     // case-insensitive regex would RETURN rows the query must not
-    case Contains(Lower(LineAttr()), StrLit(x)) if x == x.toLowerCase =>
+    case Contains(Lower(LineAttr()), StrLit(x)) if x == x.toLowerCase && foldsAlike(x) =>
       Some(LineFilter("|~", s"(?i)${regexEscape(x)}"))
-    case Not(Contains(Lower(LineAttr()), StrLit(x))) if x == x.toLowerCase =>
+    case Not(Contains(Lower(LineAttr()), StrLit(x))) if x == x.toLowerCase && foldsAlike(x) =>
       Some(LineFilter("!~", s"(?i)${regexEscape(x)}"))
     // Loki 3.x pattern LINE FILTERS (round 16, third tranche): `|>` /
     // `!>` — the host expression, this claim, and the conformance

@@ -56,7 +56,11 @@ object LokiDataSource {
   * reference behaviours are not options: every LogQL value renders
   * escaped ([[LogQL]]), and repeated timestamp bounds keep the tightest
   * (the reference keeps the last, table.rs:106-110) — both so that
-  * pushed filters stay exact.
+  * pushed filters stay exact. Nor are two choices that have one right
+  * answer: a push batch always groups its rows by label set
+  * ([[LokiDataWriter]]), and the metric-query rewrite is switched off,
+  * like any optimizer rule, by naming `graft.plans.LokiMetricAggRule` in
+  * `spark.sql.optimizer.excludedRules`.
   */
 final case class LokiOptions(
     endpoint: String,
@@ -110,20 +114,6 @@ final case class LokiOptions(
       * dashboards; the default keeps COUNT exact via the scan.
       */
     pushCount: Boolean = false,
-    /** Answer time-bucketed grouped COUNTs with a server-side LogQL
-      * METRIC query — `sum by (labels…) (count_over_time({sel}[step]))`
-      * via query_range — instead of streaming the log rows and
-      * aggregating host-side (see [[graft.plans.LokiMetricAggRule]]).
-      * Unlike `push_count` (index/stats, approximate on un-compacted
-      * heads), metric queries are evaluated against the chunks
-      * themselves and are EXACT, so this defaults ON: it is the
-      * aggregation path real Loki deployments live on at scale — the
-      * wire carries #series × #buckets samples instead of every log row.
-      * Queries outside the rewrite's contract (unaligned window,
-      * non-count aggregates, absent-label matcher semantics) fall back
-      * to the scan untouched.
-      */
-    pushMetric: Boolean = true,
     /** Translate predicates over parsed-label accessors
       * (`logfmt_get(line,'k') = 'v'`, `get_json_object(line,'$.k') =
       * 'v'`) into pushed `| json` / `| logfmt` pipeline stages plus
@@ -146,15 +136,6 @@ final case class LokiOptions(
       * `split=stats`.
       */
     reportStatistics: Boolean = false,
-    /** Group a push batch's rows by identical label set into ONE stream
-      * object with many values. false (default) = REFERENCE PARITY: one
-      * stream object per row (insert.rs:186-205), byte-identical
-      * payloads — but pathological at scale, where the wire cost is
-      * rows × label-set size instead of rows + label-sets. Semantics are
-      * identical either way (Loki associates each value with its
-      * stream's labels); only the payload shape changes.
-      */
-    groupStreams: Boolean = false,
     /** Surface Loki 3.x per-entry STRUCTURED METADATA (trace/span ids —
       * non-indexed key/values attached to entries at ingest) as a fourth
       * `metadata map<string,string>` column, on reads AND writes (the
@@ -259,10 +240,8 @@ final case class LokiOptions(
     "query_limit" -> queryLimit.toString,
     "server_max_entries" -> serverMaxEntries.toString,
     "push_count" -> pushCount.toString,
-    "push_metric" -> pushMetric.toString,
     "push_parsers" -> pushParsers.toString,
     "report_statistics" -> reportStatistics.toString,
-    "group_streams" -> groupStreams.toString,
     "structured_metadata" -> structuredMetadata.toString,
     "stream_lag_ms" -> streamLagMs.toString,
     "max_rows_per_batch" -> maxRowsPerBatch.toString,
@@ -280,8 +259,8 @@ object LokiOptions {
   /** Every key [[from]] reads. */
   private val keys = Seq("endpoint", "default_label", "partitions",
     "push_batch_size", "check_connection", "split", "query_limit",
-    "server_max_entries", "push_count", "push_metric", "push_parsers",
-    "report_statistics", "group_streams", "structured_metadata",
+    "server_max_entries", "push_count", "push_parsers",
+    "report_statistics", "structured_metadata",
     "stream_start_ns", "stream_end_ns", "stream_lag_ms",
     "max_rows_per_batch", "max_bytes_per_batch", "min_rows_per_batch",
     "min_batch_delay_ms", "selector", "direction")
@@ -326,10 +305,8 @@ object LokiOptions {
       },
       serverMaxEntries = m.getOrElse("server_max_entries", "0").toInt,
       pushCount = m.getOrElse("push_count", "false").toBoolean,
-      pushMetric = m.getOrElse("push_metric", "true").toBoolean,
       pushParsers = m.getOrElse("push_parsers", "true").toBoolean,
       reportStatistics = m.getOrElse("report_statistics", "false").toBoolean,
-      groupStreams = m.getOrElse("group_streams", "false").toBoolean,
       structuredMetadata =
         m.getOrElse("structured_metadata", "false").toBoolean,
       streamStartNs = m.get("stream_start_ns").map(_.toLong),

@@ -69,8 +69,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *     line is malformed. Appending `| __error__=""` is NOT a fix: it
   *     would drop malformed lines from the host's NULL group instead of
   *     counting them there. Deployments that need real-server fidelity
-  *     for parsed-label grouping should disable the metric rewrite
-  *     (`push_metric=false`) or the parser stages (`push_parsers=false`);
+  *     for parsed-label grouping should exclude the metric rewrite
+  *     (`graft.plans.LokiMetricAggRule` in
+  *     `spark.sql.optimizer.excludedRules`) or disable the parser stages
+  *     (`push_parsers=false`);
   *     predicate-push (`| gpN="v"` etc.) and the round-16 UNWRAP render
   *     (`| gpN!="" | unwrap gpN | __error__=""`) are unaffected — their
   *     pipelines filter every would-be error row before sample

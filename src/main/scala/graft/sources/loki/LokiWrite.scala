@@ -2,21 +2,24 @@ package graft.sources.loki
 
 import java.util.concurrent.ConcurrentHashMap
 
-import scala.collection.mutable.ArrayBuffer
+import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.MapData
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.StructType
 
 /** Write half of the connector — the rebuild of `LokiLogInsertExec`
   * (`src/insert.rs`). Rows are buffered per task and POSTed to the push
-  * API in `pushBatchSize` chunks; by default each row becomes its own
-  * stream object like the reference (no label-set grouping,
-  * insert.rs:186-205 — `group_streams=true` collapses a batch's rows
-  * with identical label sets into one stream object, the wire shape real
-  * log shippers use at scale). Null handling mirrors insert.rs:167-236:
-  * null timestamp is an error, null labels → {}, null line → "".
+  * API in `pushBatchSize` chunks. Each chunk carries one stream object
+  * per distinct label set, its values in row order — the wire shape log
+  * shippers use. The reference sends one stream object per row
+  * (insert.rs:186-205); Loki ingests both shapes alike, since it
+  * associates each value with its stream's labels, but per row the wire
+  * costs rows × label-set size instead of rows + label sets. Null
+  * handling mirrors insert.rs:167-236: null timestamp is an error, null
+  * labels → {}, null line → "".
   *
   * Delivery semantics are AT-LEAST-ONCE, matching the reference: batches
   * POST during `write()` (insert.rs:104-113), so a failed or speculative
@@ -137,7 +140,7 @@ case class LokiStreamingWrite(options: LokiOptions)
   extends streaming.StreamingWrite {
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): streaming.StreamingDataWriterFactory =
-    LokiStreamingWriterFactory(options)
+    LokiWriterFactory(options)
 
   // THIS query's running total (the Write instance is per-query,
   // commit() runs driver-side per epoch): the shared per-endpoint cell
@@ -170,13 +173,6 @@ case class LokiStreamingWrite(options: LokiOptions)
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
 }
 
-case class LokiStreamingWriterFactory(options: LokiOptions)
-  extends streaming.StreamingDataWriterFactory {
-  override def createWriter(
-      partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
-    new LokiDataWriter(options)
-}
-
 case class LokiBatchWrite(options: LokiOptions) extends BatchWrite {
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     LokiWriterFactory(options)
@@ -191,21 +187,25 @@ case class LokiBatchWrite(options: LokiOptions) extends BatchWrite {
 
 case class LokiCommitMessage(rows: Long) extends WriterCommitMessage
 
-case class LokiWriterFactory(options: LokiOptions) extends DataWriterFactory {
+/** Builds the one writer, for batch tasks and streaming epochs alike. */
+case class LokiWriterFactory(options: LokiOptions)
+  extends DataWriterFactory with streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
+    new LokiDataWriter(options)
+  override def createWriter(
+      partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
     new LokiDataWriter(options)
 }
 
 /** Buffers rows and flushes one JSON payload per `pushBatchSize` rows —
-  * the per-RecordBatch POST of insert.rs:104-113 with a configurable batch.
+  * the per-RecordBatch POST of insert.rs:104-113 with a configurable
+  * batch: `{"streams":[{"stream":{labels},"values":[["<ns>","<line>"],…]},…]}`,
+  * one stream object per distinct label set in first-seen order.
   */
 class LokiDataWriter(options: LokiOptions) extends DataWriter[InternalRow] {
 
-  private val buf = ArrayBuffer.empty[String]
-  // group_streams=true: per-batch (label set → value tuples), insertion
-  // order preserved so the payload is deterministic in row order
-  private val grouped =
-    scala.collection.mutable.LinkedHashMap.empty[String, ArrayBuffer[String]]
+  // the batch: rendered label set → its values, in insertion order
+  private val streams = mutable.LinkedHashMap.empty[String, java.lang.StringBuilder]
   private var buffered = 0
   private var count = 0L
 
@@ -226,81 +226,55 @@ class LokiDataWriter(options: LokiOptions) extends DataWriter[InternalRow] {
           s"timestamp ${row.getLong(0)}µs exceeds the int64 nanosecond " +
             "range Loki stores (max 2262-04-11)")
       }
-    val labels =
-      if (row.isNullAt(1)) "{}"
-      else {
-        val m = row.getMap(1)
-        val keys = m.keyArray()
-        val vals = m.valueArray()
-        (0 until m.numElements()).map { i =>
-          // a null map VALUE renders as "" — the same missing≡empty rule
-          // Loki/Prometheus apply to labels and the NULL-literal
-          // precedent in LogQL.StrLit (a bare NPE here was an opaque
-          // executor-side task failure after earlier batches had POSTed)
-          val v = if (vals.isNullAt(i)) "" else vals.getUTF8String(i).toString
-          s"${jsonStr(keys.getUTF8String(i).toString)}:${jsonStr(v)}"
-        }.mkString("{", ",", "}")
-      }
-    val line = if (row.isNullAt(2)) "" else row.getUTF8String(2).toString
+    val labels = if (row.isNullAt(1)) "{}" else jsonObject(row.getMap(1))
+    val values = streams.getOrElseUpdate(labels, new java.lang.StringBuilder)
+    if (values.length > 0) values.append(',')
+    values.append("[\"").append(ns).append("\",")
+    LogQL.quoteTo(values, if (row.isNullAt(2)) "" else row.getUTF8String(2).toString)
     // structured metadata (round 16): the entry's third element — the
     // Loki 3.x push shape `["<ts>","<line>",{"k":"v"}]`. A null or
-    // empty map omits the element (the 3-tuple is the universal form).
-    val metaSuffix =
-      if (!options.structuredMetadata || row.numFields < 4 || row.isNullAt(3)) ""
-      else {
-        val m = row.getMap(3)
-        if (m.numElements() == 0) ""
-        else {
-          val keys = m.keyArray()
-          val vals = m.valueArray()
-          (0 until m.numElements()).map { i =>
-            val v = if (vals.isNullAt(i)) "" else vals.getUTF8String(i).toString
-            s"${jsonStr(keys.getUTF8String(i).toString)}:${jsonStr(v)}"
-          }.mkString(",{", ",", "}")
-        }
-      }
-    if (options.groupStreams) {
-      // one stream object per distinct label set, many values
-      grouped.getOrElseUpdate(labels, ArrayBuffer.empty) +=
-        s"""["$ns",${jsonStr(line)}$metaSuffix]"""
-    } else {
-      // one stream object per row, like insert.rs:186-205 (parity default)
-      buf += s"""{"stream":$labels,"values":[["$ns",${jsonStr(line)}$metaSuffix]]}"""
-    }
+    // empty map omits the element (the 2-tuple is the universal form).
+    if (options.structuredMetadata && row.numFields > 3 && !row.isNullAt(3) &&
+        row.getMap(3).numElements() > 0)
+      values.append(',').append(jsonObject(row.getMap(3)))
+    values.append(']')
     buffered += 1
     count += 1
     if (buffered >= options.pushBatchSize) flush()
   }
 
-  private def flush(): Unit = {
-    if (buffered > 0) {
-      val streams =
-        if (options.groupStreams)
-          grouped.map { case (labels, values) =>
-            s"""{"stream":$labels,"values":[${values.mkString(",")}]}"""
-          }.mkString(",")
-        else buf.mkString(",")
-      LokiHttp.push(options.endpoint, s"""{"streams":[$streams]}""")
-      buf.clear()
-      grouped.clear()
-      buffered = 0
+  /** A label or metadata map as a JSON object. A null map VALUE renders
+    * as "" — the same missing≡empty rule Loki/Prometheus apply to labels
+    * and the NULL-literal precedent in LogQL.StrLit (a bare NPE here was
+    * an opaque executor-side task failure after earlier batches had
+    * POSTed).
+    */
+  private def jsonObject(m: MapData): String = {
+    val sb = new java.lang.StringBuilder("{")
+    val keys = m.keyArray()
+    val vals = m.valueArray()
+    (0 until m.numElements()).foreach { i =>
+      if (i > 0) sb.append(',')
+      LogQL.quoteTo(sb, keys.getUTF8String(i).toString).append(':')
+      LogQL.quoteTo(sb, if (vals.isNullAt(i)) "" else vals.getUTF8String(i).toString)
     }
+    sb.append('}').toString
   }
 
-  private def jsonStr(s: String): String = {
-    val sb = new StringBuilder(s.length + 2)
-    sb.append('"')
-    s.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
+  private def flush(): Unit = {
+    if (buffered > 0) {
+      val body = new java.lang.StringBuilder("{\"streams\":[")
+      var first = true
+      streams.foreach { case (labels, values) =>
+        if (!first) body.append(',')
+        first = false
+        body.append("{\"stream\":").append(labels)
+          .append(",\"values\":[").append(values).append("]}")
+      }
+      LokiHttp.push(options.endpoint, body.append("]}").toString)
+      streams.clear()
+      buffered = 0
     }
-    sb.append('"')
-    sb.toString()
   }
 
   override def commit(): WriterCommitMessage = {
@@ -313,7 +287,7 @@ class LokiDataWriter(options: LokiOptions) extends DataWriter[InternalRow] {
 
   // at-least-once: batches already POSTed by write() stay in Loki (see
   // class doc); only the unflushed tail is dropped
-  override def abort(): Unit = { buf.clear(); grouped.clear(); buffered = 0 }
+  override def abort(): Unit = { streams.clear(); buffered = 0 }
 
   override def close(): Unit = ()
 }

@@ -15,6 +15,8 @@ import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.io.{OutputFile, PositionOutputStream}
 import org.apache.parquet.schema.{MessageType, MessageTypeParser}
 
+import graft.sources.loki.LogQL.quote
+
 /** In-process replica of the Loki endpoints the reference integration tests
   * exercise against docker-compose (SURVEY.md §5):
   *
@@ -280,7 +282,7 @@ final class LokiStubServer {
   // ------------------------------------------------------------------ push
 
   /** Raw push payloads as received — wire-shape assertions (e.g. the
-    * group_streams stream-object count) read these; `ingested` stays the
+    * per-push stream-object count) read these; `ingested` stays the
     * row-level view.
     */
   val pushBodies = mutable.ArrayBuffer.empty[String]
@@ -736,7 +738,7 @@ final class LokiStubServer {
         k.map { case (a, b) => s"$a=$b" }.mkString(",") }
       .map { case (k, samples) =>
         val metric = "{" + k.sortBy(_._1)
-          .map { case (a, b) => s"${jsonStr(a)}:${jsonStr(b)}" }
+          .map { case (a, b) => s"${quote(a)}:${quote(b)}" }
           .mkString(",") + "}"
         val vals = samples.map { case (tNs, c) =>
           val ms = tNs / 1000000L
@@ -744,7 +746,7 @@ final class LokiStubServer {
             if (ms % 1000 == 0) s"${ms / 1000}"
             else s"${ms / 1000}.${"%03d".format(ms % 1000)}"
           val vStr = if (integerValued) c.toLong.toString else c.toString
-          s"[$tsStr,${jsonStr(vStr)}]"
+          s"[$tsStr,${quote(vStr)}]"
         }.mkString(",")
         s"""{"metric":$metric,"values":[$vals]}"""
       }.mkString(",")
@@ -814,17 +816,6 @@ final class LokiStubServer {
           java.net.URLDecoder.decode(v, "UTF-8")
       }.toMap).getOrElse(Map.empty)
 
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
   private def windowRows(params: Map[String, String]): Seq[LogRow] = {
     val start = params.get("start").map(_.toLong).getOrElse(Long.MinValue)
     val end = params.get("end").map(_.toLong).getOrElse(Long.MaxValue)
@@ -837,7 +828,7 @@ final class LokiStubServer {
     val names = windowRows(qparams(ex))
       .flatMap(_.labels.keys).distinct.sorted
     respond(ex, 200,
-      s"""{"status":"success","data":[${names.map(jsonStr).mkString(",")}]}"""
+      s"""{"status":"success","data":[${names.map(quote).mkString(",")}]}"""
         .getBytes(UTF_8))
   }
 
@@ -858,7 +849,7 @@ final class LokiStubServer {
       .filter(r => sel.forall(_.matches(r.labels)))
       .flatMap(_.labels.get(name)).distinct.sorted
     respond(ex, 200,
-      s"""{"status":"success","data":[${values.map(jsonStr).mkString(",")}]}"""
+      s"""{"status":"success","data":[${values.map(quote).mkString(",")}]}"""
         .getBytes(UTF_8))
   }
 
@@ -883,7 +874,7 @@ final class LokiStubServer {
         .sortBy(_.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(","))
       val body = sets.map(s =>
         "{" + s.toSeq.sortBy(_._1)
-          .map { case (k, v) => s"${jsonStr(k)}:${jsonStr(v)}" }
+          .map { case (k, v) => s"${quote(k)}:${quote(v)}" }
           .mkString(",") + "}").mkString(",")
       Some(s"""{"status":"success","data":[$body]}""".getBytes(UTF_8))
     }
@@ -972,7 +963,7 @@ final class LokiStubServer {
 
     def render(kvs: Seq[(String, String)]): String =
       "{" + kvs.sortBy(_._1)
-        .map { case (k, v) => s"${jsonStr(k)}:${jsonStr(v)}" }
+        .map { case (k, v) => s"${quote(k)}:${quote(v)}" }
         .mkString(",") + "}"
 
     // (metric, bucket) → bytes
@@ -996,7 +987,7 @@ final class LokiStubServer {
       if (range) {
         val els = bySeries.map { case (m, _, samples) =>
           val vals = samples
-            .map { case (b, v) => s"[${b / 1000000000L},${jsonStr(v.toString)}]" }
+            .map { case (b, v) => s"[${b / 1000000000L},${quote(v.toString)}]" }
             .mkString(",")
           s"""{"metric":${render(m)},"values":[$vals]}"""
         }.mkString(",")
@@ -1004,7 +995,7 @@ final class LokiStubServer {
       } else {
         val endSec = end / 1000000000L
         val els = bySeries.map { case (m, total, _) =>
-          s"""{"metric":${render(m)},"value":[$endSec,${jsonStr(total.toString)}]}"""
+          s"""{"metric":${render(m)},"value":[$endSec,${quote(total.toString)}]}"""
         }.mkString(",")
         s"""{"status":"success","data":{"resultType":"vector","result":[$els]}}"""
       }
@@ -1095,7 +1086,7 @@ final class LokiStubServer {
       .map { case (pat, samples) =>
         val vals = samples
           .map { case (b, c) => s"[${b / 1000000000L},$c]" }.mkString(",")
-        s"""{"pattern":${jsonStr(pat)},"samples":[$vals]}"""
+        s"""{"pattern":${quote(pat)},"samples":[$vals]}"""
       }.mkString(",")
     val body = s"""{"status":"success","data":[$els]}""".getBytes(UTF_8)
     rows.synchronized {
@@ -1224,9 +1215,9 @@ final class LokiStubServer {
         val body = rows.synchronized(deleteReqs.toSeq).map { r =>
           val s = if (r.startNs == Long.MinValue) 0L else r.startNs / 1000000000L
           val e = if (r.endNs == Long.MaxValue) 0L else r.endNs / 1000000000L
-          s"""{"request_id":${jsonStr(r.id.toString)},""" +
+          s"""{"request_id":${quote(r.id.toString)},""" +
             s""""start_time":$s,"end_time":$e,""" +
-            s""""query":${jsonStr(r.query)},"status":${jsonStr(r.status)},""" +
+            s""""query":${quote(r.query)},"status":${quote(r.status)},""" +
             s""""created_at":0}"""
         }.mkString("[", ",", "]")
         respond(ex, 200, body.getBytes(UTF_8))

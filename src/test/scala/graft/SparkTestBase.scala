@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session via
@@ -27,6 +27,20 @@ trait SparkTestBase extends AnyFunSuite {
 
   lazy val sf: String = "/root/testdata/sf0.001"
 
-  def q(name: String): org.apache.spark.sql.DataFrame =
+  def q(name: String): DataFrame =
     SparkEntry.queries(name)(spark, sf)
+
+  /** `df` planned with `rules` (optimizer rule names) added to
+    * `spark.sql.optimizer.excludedRules`, merged into the session's value
+    * and restored after. The plan is forced inside the scope; a DataFrame
+    * caches it, so later actions on the result run it as planned here.
+    */
+  def plannedWithout(rules: String*)(df: => DataFrame): DataFrame = {
+    val key = "spark.sql.optimizer.excludedRules"
+    val before = spark.conf.getOption(key)
+    val merged = before.toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+    spark.conf.set(key, (merged ++ rules).distinct.mkString(","))
+    try { val d = df; d.queryExecution.executedPlan; d }
+    finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }

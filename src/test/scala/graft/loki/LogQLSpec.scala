@@ -136,10 +136,9 @@ class LogQLSpec extends SparkTestBase {
       "partitions" -> "7", "push_batch_size" -> "1234",
       "check_connection" -> "false", "split" -> "stats",
       "query_limit" -> "77", "server_max_entries" -> "88",
-      "push_count" -> "true", "push_metric" -> "false",
+      "push_count" -> "true",
       "push_parsers" -> "false",
       "report_statistics" -> "true",
-      "group_streams" -> "true",
       "structured_metadata" -> "true",
       "stream_start_ns" -> "123", "stream_end_ns" -> "456",
       "stream_lag_ms" -> "11", "max_rows_per_batch" -> "500",
@@ -150,7 +149,7 @@ class LogQLSpec extends SparkTestBase {
       s"round trip drifted:\n${LokiOptions.from(full.toMap)}\nvs\n$full")
     // every case-class field must be representable: the field count is
     // pinned so adding a field forces this test (and toMap) to be updated
-    assert(full.productArity == 23,
+    assert(full.productArity == 21,
       "LokiOptions gained/lost a field — update toMap AND this round trip")
     // direction is validated at option time
     assertThrows[IllegalArgumentException](

@@ -922,44 +922,43 @@ class LokiConnectorSpec extends SparkTestBase with BeforeAndAfterAll {
     } finally propStub.stop()
   }
 
-  test("group_streams groups a batch's rows by label set; default stays per-row (round 10)") {
+  test("a push carries one stream object per label set") {
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
+    import com.fasterxml.jackson.databind.ObjectMapper
+    import scala.jdk.CollectionConverters._
     val ws = new LokiStubServer
     ws.start()
     try {
-      val schema = StructType(Seq(
-        StructField("timestamp", TimestampType, nullable = false),
-        StructField("labels", MapType(StringType, StringType), nullable = true),
-        StructField("line", StringType, nullable = true)))
-      def rows = (0 until 6).map { i =>
-        Row(java.sql.Timestamp.from(
-          java.time.Instant.parse("2024-01-01T00:00:00Z").plusSeconds(i)),
-          Map("app" -> s"a${i % 2}"), s"line-$i")
+      val t0 = java.time.Instant.parse("2024-01-01T00:00:00Z")
+      // 6 rows over 2 interleaved label sets, then one row carrying
+      // structured metadata
+      val rows = (0 until 7).map { i =>
+        (t0.plusSeconds(i), Map("app" -> s"a${i % 2}"), s"line-$i",
+          if (i == 6) Map("trace" -> "t6") else Map.empty[String, String])
       }
-      def writeWith(opts: Map[String, String]): Unit = {
-        val w = spark.createDataFrame(
-          spark.sparkContext.parallelize(rows, 1), schema)
-          .write.format("loki").option("endpoint", ws.endpoint)
-          .option("push_batch_size", "100")
-        opts.foreach { case (k, v) => w.option(k, v) }
-        w.mode("append").save()
-      }
-      // parity default: one stream object PER ROW in one POST
-      writeWith(Map.empty)
-      val flat = ws.pushBodies.synchronized(ws.pushBodies.last)
-      assert("\\{\"stream\":".r.findAllIn(flat).size == 6, flat)
-      val flatRows = ws.ingested.toSet
-      // grouped: one stream object PER LABEL SET (2 here), same rows
-      ws.clear()
-      ws.pushBodies.synchronized(ws.pushBodies.clear())
-      writeWith(Map("group_streams" -> "true"))
-      val g = ws.pushBodies.synchronized(ws.pushBodies.last)
-      assert("\\{\"stream\":".r.findAllIn(g).size == 2, g)
-      assert("\\[\"17040".r.findAllIn(g).size == 6, g) // all 6 values present
-      assert(ws.ingested.toSet == flatRows,
-        "grouped payload must ingest the identical row set")
-      assert(LokiWrite.lastCommittedRows(ws.endpoint) == 6L)
+      spark.createDataFrame(
+        spark.sparkContext.parallelize(rows.map { case (t, l, line, m) =>
+          Row(java.sql.Timestamp.from(t), l, line, m) }, 1),
+        LokiDataSource.logSchema(structuredMetadata = true))
+        .write.format("loki").option("endpoint", ws.endpoint)
+        .option("push_batch_size", "100").option("structured_metadata", "true")
+        .mode("append").save()
+      val bodies = ws.pushBodies.synchronized(ws.pushBodies.toList)
+      assert(bodies.size == 1, bodies)
+      val streams = new ObjectMapper().readTree(bodies.head).get("streams")
+        .elements().asScala.toList
+      // each set's values in row order; only row 6 has a third element
+      assert(streams.map(st => st.get("stream").get("app").textValue ->
+        st.get("values").elements().asScala.map(v => v.get(1).textValue).toList) ==
+        List("a0" -> List("line-0", "line-2", "line-4", "line-6"),
+          "a1" -> List("line-1", "line-3", "line-5")), bodies.head)
+      assert(bodies.head.contains(""""line-6",{"trace":"t6"}]"""), bodies.head)
+      assert(streams.flatMap(_.get("values").elements().asScala).count(_.size == 3) == 1)
+      val ingested = ws.ingested.map(r =>
+        (r.tsNs, r.labels("app"), r.line, r.metadata)).toSet
+      assert(ingested == rows.map { case (t, l, line, m) =>
+        (t.getEpochSecond * 1000000000L, l("app"), line, m) }.toSet)
+      assert(LokiWrite.lastCommittedRows(ws.endpoint) == 7L)
     } finally ws.stop()
   }
 

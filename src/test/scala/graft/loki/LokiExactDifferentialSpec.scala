@@ -25,12 +25,12 @@ import graft.sources.loki.testkit.LokiStubServer
   * replay; failures print it): non-ASCII lines, JSON and logfmt bodies
   * with duplicate keys and nulls, label values with a quote, a backslash
   * or a newline, bursts of rows at one nanosecond, and rows one
-  * nanosecond either side of the timestamp bounds. Two known non-Exact
-  * cases are left out of the corpus: characters whose RE2 case fold
-  * differs from Spark's lowercasing (`ſ`, `İ`, `µ`), which a pushed ILIKE
-  * matches differently, and rows without the `default_label` (`app`),
-  * which a pushed matcher can return although the table's default
-  * matcher does not (table.rs:116-122).
+  * nanosecond either side of the timestamp bounds, and words whose RE2
+  * case fold differs from Spark's lowercasing (`ſ`, `İ`, `µ`) or agrees
+  * with it off ASCII (the Kelvin sign). One known non-Exact case is left
+  * out of the corpus: rows without the `default_label` (`app`), which a
+  * pushed matcher can return although the table's default matcher does
+  * not (table.rs:116-122).
   */
 class LokiExactDifferentialSpec extends SparkTestBase
     with BeforeAndAfterAll with PredicateHelper {
@@ -54,7 +54,7 @@ class LokiExactDifferentialSpec extends SparkTestBase
     def pick[T](xs: Seq[T]): T = xs(rnd.nextInt(xs.size))
     val words = Seq("error", "warn", "info", "timeout", "größe", "日本語",
       "🚀 launch", "naïve", "Crème", "tab\there", "cr\rlf", "10.0.3.7",
-      "192.168.1.20", "ÜBER", "ok")
+      "192.168.1.20", "ÜBER", "ok", "ſtop", "İstanbul", "µs", "\u212Aelvin")
     def line(): String = rnd.nextInt(5) match {
       case 0 =>
         val lvl = pick(Seq("\"error\"", "\"info\"", "null", "\"warn\""))
@@ -141,7 +141,11 @@ class LokiExactDifferentialSpec extends SparkTestBase
     conjuncts.map(LogQL.translate(_, pushParsers = true))
   }
 
-  private def differential(preds: Seq[String]): Unit = preds.foreach { pred =>
+  /** `pushes`: some conjunct of each predicate translates; otherwise none
+    * may.
+    */
+  private def differential(
+      preds: Seq[String], pushes: Boolean = true): Unit = preds.foreach { pred =>
     withClue(s"seed=$seed predicate=[$pred]: ") {
       val (all, baseScan) =
         residualOnly(planned(query(pred).queryExecution.optimizedPlan))
@@ -149,7 +153,8 @@ class LokiExactDifferentialSpec extends SparkTestBase
       assert(baseScan.logql == """{app=~".+"}""" &&
         baseScan.startNs.isEmpty && baseScan.endNs.isEmpty, baseScan.logql)
       val pieces = all.map(LogQL.translate(_, pushParsers = true))
-      assert(pieces.exists(_.isDefined), "nothing in it translates")
+      assert(pieces.exists(_.isDefined) == pushes,
+        if (pushes) "nothing in it translates" else s"it translates: $pieces")
       val expectedResidual = pieces.count {
         case None => true
         case Some(m: LogQL.LabelMatcher) => LogQL.matchesAbsentLabel(m)
@@ -194,12 +199,27 @@ class LokiExactDifferentialSpec extends SparkTestBase
 
   private val linePreds: Seq[String] = Seq(
     "line LIKE '%error%'", "line NOT LIKE '%error%'", "line LIKE '%日本%'",
-    "line ILIKE '%ÜBER%'", "line NOT ILIKE '%crème%'",
+    "line ILIKE '%ERROR%'", "line NOT ILIKE '%warn%'",
     "line RLIKE 'code=5[0-9]+'", "line NOT RLIKE 'lf$'", "line RLIKE 'cr.lf'",
-    "contains(line, 'größe')", "lower(line) LIKE '%naïve%'",
+    "contains(line, 'größe')", "lower(line) LIKE '%ok%'",
     "loki_pattern_match(line, 'level=<_> code=<_> <_>')",
     "NOT loki_pattern_match(line, 'level=<_> code=<_> <_>')",
     "loki_line_ip(line, '10.0.0.0/8')", "NOT loki_line_ip(line, '192.168.1.0/24')")
+
+  /** Case-insensitive line filters that Spark and RE2 fold differently:
+    * each stays a residual.
+    */
+  private val foldResidual: Seq[String] = Seq(
+    "line ILIKE '%s%'", "line NOT ILIKE '%STOP%'", "line ILIKE '%ſ%'",
+    "line ILIKE '%I%'", "line NOT ILIKE '%stan%'", "lower(line) LIKE '%i%'",
+    "lower(line) LIKE '%s%'", "line ILIKE '%µ%'", "lower(line) LIKE '%µs%'",
+    "line ILIKE '%ÜBER%'", "line NOT ILIKE '%crème%'", "lower(line) LIKE '%naïve%'")
+
+  /** Ones over `k`, which both fold alike (the Kelvin sign included):
+    * they push.
+    */
+  private val foldPushed: Seq[String] =
+    Seq("line ILIKE '%K%'", "lower(line) LIKE '%kelv%'", "line NOT ILIKE '%k%'")
 
   private val parsedPreds: Seq[String] = Seq(
     "logfmt_get(line, 'level') = 'error'", "logfmt_get(line, 'level') != 'error'",
@@ -228,6 +248,11 @@ class LokiExactDifferentialSpec extends SparkTestBase
 
   test("line filters: LIKE, ILIKE, regex, contains, pattern and ip forms") {
     differential(linePreds)
+  }
+
+  test("ILIKE and lower(line) push only where Spark and RE2 fold case alike") {
+    differential(foldResidual, pushes = false)
+    differential(foldPushed)
   }
 
   test("parsed predicates: logfmt, json and regexp stages") {

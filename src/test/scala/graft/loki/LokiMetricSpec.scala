@@ -46,6 +46,9 @@ class LokiMetricSpec extends SparkTestBase with BeforeAndAfterAll {
     extra.foldLeft(r) { case (b, (k, v)) => b.option(k, v) }.load()
   }
 
+  /** Exclude it to get the host-side aggregation of the same query. */
+  private val metricRule = "graft.plans.LokiMetricAggRule"
+
   private def windowed(df: DataFrame): DataFrame =
     df.filter(
       col("timestamp") >= lit("2024-01-01 00:00:00").cast("timestamp") &&
@@ -70,12 +73,12 @@ class LokiMetricSpec extends SparkTestBase with BeforeAndAfterAll {
       (r.getTimestamp(0).toInstant.toString, r.getString(1), r.getLong(2)))
 
     // expected: host-side aggregation with the rewrite disabled
-    val exp = windowed(lokiDf(Map("push_metric" -> "false")))
+    val exp = plannedWithout(metricRule)(windowed(lokiDf())
       .groupBy(
         date_trunc("day", col("timestamp")).as("bucket"),
         element_at(col("labels"), "app").as("app"))
       .agg(count(lit(1)).as("cnt"))
-      .orderBy("bucket", "app")
+      .orderBy("bucket", "app"))
     assert(!planOf(exp).contains("LokiMetricScan"))
     val expRows = exp.collect().map(r =>
       (r.getTimestamp(0).toInstant.toString, r.getString(1), r.getLong(2)))
@@ -100,11 +103,11 @@ class LokiMetricSpec extends SparkTestBase with BeforeAndAfterAll {
       plan)
     val got = df.orderBy("bucket").collect()
       .map(r => (r.getTimestamp(0).getTime, r.getLong(1)))
-    val exp = windowed(lokiDf(Map("push_metric" -> "false")))
+    val exp = plannedWithout(metricRule)(windowed(lokiDf())
       .filter(col("line").like("%error%"))
       .groupBy(date_trunc("hour", col("timestamp")).as("bucket"))
       .agg(count(lit(1)).as("cnt"))
-      .orderBy("bucket").collect()
+      .orderBy("bucket")).collect()
       .map(r => (r.getTimestamp(0).getTime, r.getLong(1)))
     assert(got.toSeq == exp.toSeq)
     assert(got.nonEmpty)
@@ -118,11 +121,11 @@ class LokiMetricSpec extends SparkTestBase with BeforeAndAfterAll {
     val plan = planOf(df)
     assert(plan.contains("count_over_time({env=\"prod\"} [86400s])"), plan)
     val got = df.orderBy("bucket").collect().map(r => r.getLong(1)).toSeq
-    val exp = windowed(lokiDf(Map("push_metric" -> "false")))
+    val exp = plannedWithout(metricRule)(windowed(lokiDf())
       .filter(element_at(col("labels"), "env") === "prod")
       .groupBy(date_trunc("day", col("timestamp")).as("bucket"))
       .agg(count(lit(1)).as("cnt"))
-      .orderBy("bucket").collect().map(r => r.getLong(1)).toSeq
+      .orderBy("bucket")).collect().map(r => r.getLong(1)).toSeq
     assert(got == exp && got.nonEmpty)
   }
 
@@ -134,10 +137,10 @@ class LokiMetricSpec extends SparkTestBase with BeforeAndAfterAll {
     // 3 day-buckets, 4 requested slices → clamped to 3 disjoint queries
     assert(df.rdd.getNumPartitions == 3)
     val got = df.orderBy("bucket").collect().map(_.getLong(1)).toSeq
-    val exp = windowed(lokiDf(Map("push_metric" -> "false")))
+    val exp = plannedWithout(metricRule)(windowed(lokiDf())
       .groupBy(date_trunc("day", col("timestamp")).as("bucket"))
       .agg(count(lit(1)).as("cnt"))
-      .orderBy("bucket").collect().map(_.getLong(1)).toSeq
+      .orderBy("bucket")).collect().map(_.getLong(1)).toSeq
     assert(got == exp)
   }
 
@@ -151,10 +154,10 @@ class LokiMetricSpec extends SparkTestBase with BeforeAndAfterAll {
       "metric_query=sum by (env) (count_over_time({app=~\".+\"} [259200s]))"),
       plan)
     val got = df.collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val exp = windowed(lokiDf(Map("push_metric" -> "false")))
+    val exp = plannedWithout(metricRule)(windowed(lokiDf())
       .groupBy(element_at(col("labels"), "env").as("env"))
       .agg(count(lit(1)).as("cnt"))
-      .orderBy("env").collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+      .orderBy("env")).collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(got == exp && got.nonEmpty, s"got=$got exp=$exp")
   }
 
@@ -167,10 +170,10 @@ class LokiMetricSpec extends SparkTestBase with BeforeAndAfterAll {
     assert(plan.contains(
       "metric_query=sum(bytes_over_time({app=~\".+\"} [86400s]))"), plan)
     val got = df.collect().map(r => (r.getTimestamp(0).getTime, r.getLong(1))).toSeq
-    val exp = windowed(lokiDf(Map("push_metric" -> "false")))
+    val exp = plannedWithout(metricRule)(windowed(lokiDf())
       .groupBy(date_trunc("day", col("timestamp")).as("bucket"))
       .agg(sum(octet_length(col("line"))).as("bytes"))
-      .orderBy("bucket").collect()
+      .orderBy("bucket")).collect()
       .map(r => (r.getTimestamp(0).getTime, r.getLong(1))).toSeq
     assert(got == exp && got.nonEmpty)
     // mixed kinds ride one wire query PER KIND since round 15 —
@@ -203,12 +206,12 @@ class LokiMetricSpec extends SparkTestBase with BeforeAndAfterAll {
     val plan = planOf(df)
     assert(plan.contains("LokiMetricScan"), plan)
     val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val exp = windowed(lokiDf(Map("push_metric" -> "false")))
+    val exp = plannedWithout(metricRule)(windowed(lokiDf())
       .groupBy(date_trunc("day", col("timestamp")).as("bucket"))
       .agg(count(lit(1)).as("cnt"))
       .select(unix_micros(col("bucket")).as("bucket_us"),
         (col("cnt") * 2).as("cnt2"))
-      .orderBy("bucket_us").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      .orderBy("bucket_us")).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(got == exp && got.nonEmpty)
   }
 
@@ -228,12 +231,12 @@ class LokiMetricSpec extends SparkTestBase with BeforeAndAfterAll {
       plan.contains("sum by (app) (count_over_time("), plan)
     val got = df.collect().map(r =>
       (r.getTimestamp(0).getTime, r.getString(1), r.getLong(2))).toSeq
-    val exp = windowed(lokiDf(Map("push_metric" -> "false")))
+    val exp = plannedWithout(metricRule)(windowed(lokiDf())
       .groupBy(
         date_trunc("day", col("timestamp")).as("bucket"),
         element_at(col("labels"), "app").as("app"))
       .agg(count(lit(1)).as("cnt"))
-      .orderBy("bucket", "app").collect().map(r =>
+      .orderBy("bucket", "app")).collect().map(r =>
         (r.getTimestamp(0).getTime, r.getString(1), r.getLong(2))).toSeq
     assert(got == exp && got.nonEmpty)
   }
@@ -248,11 +251,11 @@ class LokiMetricSpec extends SparkTestBase with BeforeAndAfterAll {
     assert(plan.contains(
       "count_over_time({env=\"dev\"} |= `ok` [86400s])"), plan)
     val got = df.collect().map(r => r.getLong(1)).toSeq
-    val exp = windowed(lokiDf(
-      Map("selector" -> """{env="dev"} |= "ok"""", "push_metric" -> "false")))
+    val exp = plannedWithout(metricRule)(windowed(lokiDf(
+      Map("selector" -> """{env="dev"} |= "ok"""")))
       .groupBy(date_trunc("day", col("timestamp")).as("bucket"))
       .agg(count(lit(1)).as("cnt"))
-      .orderBy("bucket").collect().map(r => r.getLong(1)).toSeq
+      .orderBy("bucket")).collect().map(r => r.getLong(1)).toSeq
     assert(got == exp && got.nonEmpty, s"got=$got exp=$exp")
   }
 
@@ -298,10 +301,10 @@ class LokiMetricSpec extends SparkTestBase with BeforeAndAfterAll {
       windowed(lokiDf())
         .filter(length(col("line")) > 5)
         .groupBy(date_trunc("day", col("timestamp"))).agg(count(lit(1))))
-    // push_metric=false opt-out
-    noRewrite(
-      windowed(lokiDf(Map("push_metric" -> "false")))
-        .groupBy(date_trunc("day", col("timestamp"))).agg(count(lit(1))))
+    // opt-out: the rule named in spark.sql.optimizer.excludedRules
+    noRewrite(plannedWithout(metricRule)(
+      windowed(lokiDf())
+        .groupBy(date_trunc("day", col("timestamp"))).agg(count(lit(1)))))
   }
 
   test("repeated bounds rewrite over the tightest window and match the scan") {
@@ -326,7 +329,7 @@ class LokiMetricSpec extends SparkTestBase with BeforeAndAfterAll {
     assert(plan.contains("LokiMetricScan") &&
       plan.contains(s"start=${baseNs + dayNs}, end=${baseNs + 3 * dayNs},"),
       plan)
-    val host = agg(lokiDf(Map("push_metric" -> "false")))
+    val host = plannedWithout(metricRule)(agg(lokiDf()))
     assert(!planOf(host).contains("LokiMetricScan"))
     val got = rows(agg(lokiDf()))
     assert(got.map(_._1).distinct.size == 2, got)
@@ -365,11 +368,11 @@ class LokiMetricSpec extends SparkTestBase with BeforeAndAfterAll {
       plan.contains("bytes_over_time(") && plan.contains("count_over_time("),
       plan)
     val got = df.collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2)))
-    val host = windowed(lokiDf(Map("push_metric" -> "false")))
+    val host = plannedWithout(metricRule)(windowed(lokiDf())
       .groupBy(element_at(col("labels"), "app").as("app"))
       .agg(avg(octet_length(col("line"))).as("avg_bytes"),
         count(lit(1)).as("cnt"))
-      .orderBy("app")
+      .orderBy("app"))
       .collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2)))
     assert(got.map(_._1).toSeq == host.map(_._1).toSeq)
     got.zip(host).foreach { case ((_, a, c), (_, ha, hc)) =>
@@ -397,10 +400,10 @@ class LokiMetricSpec extends SparkTestBase with BeforeAndAfterAll {
     assert(plan.contains("topk(1, sum by (env) (count_over_time("), plan)
     // env=dev carries more rows than prod in the seeded corpus: a unique
     // top-1, so the pushed answer equals the host's
-    val host = windowed(lokiDf(Map("push_metric" -> "false")))
+    val host = plannedWithout(metricRule)(windowed(lokiDf())
       .groupBy(element_at(col("labels"), "env").as("env"))
       .agg(count(lit(1)).as("cnt"))
-      .orderBy(col("cnt").desc).limit(1)
+      .orderBy(col("cnt").desc).limit(1))
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(df.collect().map(r => (r.getString(0), r.getLong(1))).toSeq == host)
   }
@@ -415,10 +418,10 @@ class LokiMetricSpec extends SparkTestBase with BeforeAndAfterAll {
     assert(plan.contains("bottomk(1, sum by (env) (count_over_time("), plan)
     // prod carries fewer rows than dev in the seeded corpus: a unique
     // bottom-1, so the pushed answer equals the host's
-    val host = windowed(lokiDf(Map("push_metric" -> "false")))
+    val host = plannedWithout(metricRule)(windowed(lokiDf())
       .groupBy(element_at(col("labels"), "env").as("env"))
       .agg(count(lit(1)).as("cnt"))
-      .orderBy(col("cnt")).limit(1)
+      .orderBy(col("cnt")).limit(1))
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(df.collect().map(r => (r.getString(0), r.getLong(1))).toSeq == host)
   }
@@ -438,12 +441,11 @@ class LokiMetricSpec extends SparkTestBase with BeforeAndAfterAll {
           baseNs + d * dayNs + j * 1000000000L + app.hashCode.abs % 7,
           Map("app" -> app), s"$app row $j"))
       })
-      def ranked(rn: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
-          extra: Map[String, String] = Map.empty) = {
-        val r = spark.read.format("loki")
+      def ranked(rn: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
+        spark.read.format("loki")
           .option("endpoint", scratch.endpoint)
           .option("default_label", "app")
-        extra.foldLeft(r) { case (b, (k, v)) => b.option(k, v) }.load()
+          .load()
           .filter(
             col("timestamp") >= lit("2024-01-01 00:00:00").cast("timestamp") &&
               col("timestamp") < lit("2024-01-03 00:00:00").cast("timestamp"))
@@ -452,7 +454,6 @@ class LokiMetricSpec extends SparkTestBase with BeforeAndAfterAll {
           .agg(count(lit(1)).as("cnt"))
           .withColumn("rn", row_number().over(
             W.partitionBy(col("bucket")).orderBy(rn(col("cnt")))))
-      }
       // top-2 per day, descending
       val top = ranked(_.desc).filter(col("rn") <= 2)
         .select(col("bucket"), col("app"), col("cnt"))
@@ -466,10 +467,10 @@ class LokiMetricSpec extends SparkTestBase with BeforeAndAfterAll {
       assert(got == Seq(("2024-01-01", "a", 5L), ("2024-01-01", "b", 3L),
         ("2024-01-02", "b", 2L), ("2024-01-02", "c", 4L)), got)
       // …equal to the host plan with the rewrite off
-      val host = ranked(_.desc, Map("push_metric" -> "false"))
+      val host = plannedWithout(metricRule)(ranked(_.desc)
         .filter(col("rn") <= 2)
         .select(col("bucket"), col("app"), col("cnt"))
-        .orderBy("bucket", "app").collect()
+        .orderBy("bucket", "app")).collect()
         .map(r => (r.getTimestamp(0).toInstant.toString.take(10),
           r.getString(1), r.getLong(2))).toSeq
       assert(got == host)
@@ -532,10 +533,10 @@ class LokiMetricSpec extends SparkTestBase with BeforeAndAfterAll {
     assert(plan.contains("sum by (app) (count_over_time({app=~\".+\"} " +
       "[259200s]))"), plan)
     val got = df.collect().map(r => (r.getString(0), r.getDouble(1)))
-    val host = windowed(lokiDf(Map("push_metric" -> "false")))
+    val host = plannedWithout(metricRule)(windowed(lokiDf())
       .groupBy(element_at(col("labels"), "app").as("app"))
       .agg(avg(loki_unwrap(logfmt_get(col("line"), lit("h")))).as("avg_h"))
-      .orderBy("app")
+      .orderBy("app"))
       .collect().map(r => (r.getString(0), r.getDouble(1)))
     assert(got.map(_._1).toSeq == host.map(_._1).toSeq)
     got.zip(host).foreach { case ((_, a), (_, ha)) =>
@@ -565,10 +566,10 @@ class LokiMetricSpec extends SparkTestBase with BeforeAndAfterAll {
     val got = df.collect()
       .map(r => (r.getTimestamp(0).getTime, r.getDouble(1), r.getDouble(2),
         r.getDouble(3)))
-    val host = windowed(lokiDf(Map("push_metric" -> "false")))
+    val host = plannedWithout(metricRule)(windowed(lokiDf())
       .groupBy(date_trunc("day", col("timestamp")).as("bucket"))
       .agg(min(acc).as("mn"), max(acc).as("mx"), sum(acc).as("sm"))
-      .orderBy("bucket").collect()
+      .orderBy("bucket")).collect()
       .map(r => (r.getTimestamp(0).getTime, r.getDouble(1), r.getDouble(2),
         r.getDouble(3)))
     assert(got.toSeq == host.toSeq && got.nonEmpty, s"got=${got.toSeq}")
@@ -586,11 +587,11 @@ class LokiMetricSpec extends SparkTestBase with BeforeAndAfterAll {
       "| logfmt gp0=\"h\" | gp0!=\"\" | unwrap gp0 | __error__=\"\" " +
       "[259200s]) by (env)"), plan)
     val got = df.collect().map(r => (r.getString(0), r.getDouble(1)))
-    val host = windowed(lokiDf(Map("push_metric" -> "false")))
+    val host = plannedWithout(metricRule)(windowed(lokiDf())
       .groupBy(element_at(col("labels"), "env").as("env"))
       .agg(percentile(loki_unwrap(logfmt_get(col("line"), lit("h"))),
         lit(0.9)).as("p90"))
-      .orderBy("env").collect().map(r => (r.getString(0), r.getDouble(1)))
+      .orderBy("env")).collect().map(r => (r.getString(0), r.getDouble(1)))
     // identical interpolation formula on both sides: rank = φ(n−1),
     // lower + (upper−lower)·frac over integer-valued samples — exact
     assert(got.toSeq == host.toSeq && got.nonEmpty, s"got=${got.toSeq}")
@@ -610,11 +611,11 @@ class LokiMetricSpec extends SparkTestBase with BeforeAndAfterAll {
     // count_over_time query on the relation
     assert("count_over_time\\(".r.findAllIn(plan).size == 1, plan)
     val got = df.collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
-    val host = windowed(lokiDf(Map("push_metric" -> "false")))
+    val host = plannedWithout(metricRule)(windowed(lokiDf())
       .groupBy(element_at(col("labels"), "app").as("app"))
       .agg(count(lit(1)).as("cnt"),
         avg(loki_unwrap(logfmt_get(col("line"), lit("h")))).as("avg_h"))
-      .orderBy("app").collect()
+      .orderBy("app")).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     assert(got.map(t => (t._1, t._2)).toSeq == host.map(t => (t._1, t._2)).toSeq)
     got.zip(host).foreach { case ((_, _, a), (_, _, ha)) =>
@@ -645,10 +646,10 @@ class LokiMetricSpec extends SparkTestBase with BeforeAndAfterAll {
     assert(plan.contains("stddev_over_time(") && plan.contains("stdvar_over_time("),
       plan)
     val got = df.collect().map(r => (r.getString(0), r.getDouble(1), r.getDouble(2)))
-    val host = windowed(lokiDf(Map("push_metric" -> "false")))
+    val host = plannedWithout(metricRule)(windowed(lokiDf())
       .groupBy(element_at(col("labels"), "app").as("app"))
       .agg(stddev_pop(acc).as("sd"), var_pop(acc).as("vr"))
-      .orderBy("app").collect()
+      .orderBy("app")).collect()
       .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2)))
     got.zip(host).foreach { case ((a, s1, v1), (b, s2, v2)) =>
       assert(a == b)
@@ -683,7 +684,7 @@ class LokiMetricSpec extends SparkTestBase with BeforeAndAfterAll {
       plan.contains("last_over_time("), plan)
     val got = df.collect()
       .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2)))
-    val host = aggd(windowed(lokiDf(Map("push_metric" -> "false"))))
+    val host = plannedWithout(metricRule)(aggd(windowed(lokiDf())))
     assert(!planOf(host).contains("LokiMetricScan"))
     val hostRows = host.collect()
       .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2)))
@@ -755,12 +756,12 @@ class LokiMetricSpec extends SparkTestBase with BeforeAndAfterAll {
       plan)
     val got = df.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
       r.getLong(3)))
-    val host = windowed(lokiDf(Map("push_metric" -> "false")))
+    val host = plannedWithout(metricRule)(windowed(lokiDf())
       .groupBy(element_at(col("labels"), "app").as("app"))
       .agg(count(lit(1)).as("total"),
         expr("count(*) FILTER (WHERE line LIKE '%error%')").as("errs"),
         expr("count(*) FILTER (WHERE labels['env'] = 'prod')").as("prods"))
-      .orderBy("app").collect()
+      .orderBy("app")).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(got.toSeq == host.toSeq && got.nonEmpty, s"got=${got.toSeq}")
     // negated label predicate carries the missing-guard stage
@@ -768,10 +769,10 @@ class LokiMetricSpec extends SparkTestBase with BeforeAndAfterAll {
       .groupBy(element_at(col("labels"), "app").as("app"))
       .agg(expr("count(*) FILTER (WHERE labels['env'] != 'prod')").as("nonprod"))
     assert(planOf(neg).contains("""| env!="" | env!="prod""""), planOf(neg))
-    val negHost = windowed(lokiDf(Map("push_metric" -> "false")))
+    val negHost = plannedWithout(metricRule)(windowed(lokiDf())
       .groupBy(element_at(col("labels"), "app").as("app"))
       .agg(expr("count(*) FILTER (WHERE labels['env'] != 'prod')").as("nonprod"))
-      .orderBy("app").collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+      .orderBy("app")).collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(neg.orderBy("app").collect()
       .map(r => (r.getString(0), r.getLong(1))).toSeq == negHost)
     // untranslatable FILTER conditions keep the whole host fallback
@@ -837,10 +838,10 @@ class LokiMetricSpec extends SparkTestBase with BeforeAndAfterAll {
     val plan = planOf(df)
     assert(plan.contains("LokiMetricScan") && !plan.contains("LokiLogScan"),
       plan)
-    val host = windowed(lokiDf(Map("push_metric" -> "false")))
+    val host = plannedWithout(metricRule)(windowed(lokiDf())
       .groupBy(element_at(col("labels"), "app").as("app"))
       .agg(count(lit(1)).as("cnt"))
-      .filter(col("cnt") > 1).orderBy("app")
+      .filter(col("cnt") > 1).orderBy("app"))
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(df.collect().map(r => (r.getString(0), r.getLong(1))).toSeq == host)
   }

@@ -14,7 +14,7 @@ import org.scalacheck.{Gen, Prop, Properties}
 object LokiHttpProps extends Properties("LokiHttpCodec") {
 
   /** Independent JSON string encoder — deliberately a DIFFERENT (but
-    * equally standards-valid) representation from the stub's `jsonStr`:
+    * equally standards-valid) representation from the stub's `LogQL.quote`:
     * `\n`/`\r`/`\t` go out as `\u000a`-style escapes instead of the
     * shorthand, `\b`/`\f`/`\/` use the shorthand escapes the stub never
     * emits, and `/` is escaped. A decoder blind spot shared with the
