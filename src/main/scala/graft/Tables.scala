@@ -117,15 +117,4 @@ object Tables {
 
   def lokiView(spark: SparkSession, dir: String): DataFrame =
     lokiProject(events(spark, dir))
-
-  /** DuckDB-side projection of the same log view, used as the FROM clause of
-    * oracle SQL. Label predicates filter the underlying columns directly
-    * (FIXTURES.md oracle note: DuckDB map semantics differ from Spark's).
-    */
-  val lokiOracleFrom: String =
-    """(SELECT ts AS "timestamp",
-       |        event_type,
-       |        CAST(user_id AS VARCHAR) AS user_label,
-       |        concat(event_type, ' value=', CAST(value AS VARCHAR)) AS line
-       | FROM events) loki""".stripMargin
 }

@@ -154,8 +154,14 @@ object LogQL {
 
   /** The one assembler of a log query, shared by the scan, the metric
     * rewrite and DELETE. Matchers: the `selector` option's, then the
-    * pushed ones; with none at all, the `default_label` fallback
-    * `{label=~".+"}` (table.rs:116-122). Stages: the option's (user
+    * pushed ones. Without a `selector` option the table's row set is the
+    * `default_label` matcher `{label=~".+"}`, and it stays in the query
+    * unless a pushed matcher already requires that label to be non-empty
+    * (an `=` or `=~` that rejects ""): a pushed matcher on another label
+    * would otherwise widen the query to streams without the default
+    * label, which the unfiltered table does not read. The reference adds
+    * the default matcher only when no matcher is pushed at all
+    * (table.rs:116-122). Stages: the option's (user
     * order), then the pushed line filters, then the parser stages —
     * line filters are cheaper and LogQL applies stages in order, so
     * filtering lines before parsing them is the shape a human would
@@ -170,10 +176,14 @@ object LogQL {
       parsed: Seq[ParsedFilter]): Option[LogQuery] = {
     val (optMatchers, optStages) =
       options.selector.map(parseSelector).getOrElse((Nil, Nil))
-    val all = optMatchers ++ matchers
     val ms =
-      if (all.nonEmpty) Some(all)
-      else options.defaultLabel.map(l => Seq(defaultMatcher(l)))
+      if (optMatchers.nonEmpty) Some(optMatchers ++ matchers)
+      else options.defaultLabel match {
+        case Some(l) if !matchers.exists(m => m.label == l &&
+            (m.op == "=" || m.op == "=~") && !matchesAbsentLabel(m)) =>
+          Some(defaultMatcher(l) +: matchers)
+        case _ => Some(matchers).filter(_.nonEmpty)
+      }
     ms.map { m =>
       val selector = assemble(m, Nil)
       val stages = optStages.map(_.render) ++ lines.map(_.render) ++

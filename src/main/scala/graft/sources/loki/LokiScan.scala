@@ -3,7 +3,6 @@ package graft.sources.loki
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.ParquetReadOptions
 import org.apache.parquet.conf.HadoopParquetConfiguration
-import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.catalyst.InternalRow
@@ -742,6 +741,25 @@ class LokiCountReader(p: LokiInputPartition)
   * order, which the held-run cut rests on, is checked on forward pages
   * only: a backward LIMIT response is descending by contract.
   *
+  * LABEL AND METADATA MAPS belong to streams, not rows: a page holds far
+  * fewer distinct label sets than rows. Each row's map is read as its
+  * sequence of (key id, value id) pairs, and each distinct sequence is
+  * decoded once per column chunk: the first row that has it appends its
+  * keys and values to the map's child vectors, and every later row points
+  * at that child range. The ids come from the chunk's dictionary when the
+  * chunk's encoding stats say every data page is dictionary-encoded (the
+  * converter tree assembles nothing; its leaves only accept dictionaries,
+  * which makes the column readers expose dictionary ids). A chunk with
+  * plain pages, or without stats, numbers its distinct value bytes
+  * instead, so both encodings build maps the same way. Dictionary ids are
+  * numbered per chunk, so the set table is cleared per row group.
+  *
+  * The page's column vectors (and `tsNs`) are reset and reused for the
+  * next page of the partition, keeping their grown capacity, so the
+  * batch returned by `get()` is valid only until the next `next()`, as
+  * for Spark's own vectorized parquet reader. They are released at the
+  * end of the stream and by `close()`.
+  *
   * Each page opens with its own `ParquetReadOptions`, built from the one
   * JVM-wide configuration in the companion object. Building options
   * without a configuration parses Hadoop's `core-default.xml` and
@@ -759,8 +777,11 @@ class LokiColumnarReader(p: LokiInputPartition)
 
   import org.apache.parquet.column.ColumnReader
   import org.apache.parquet.column.impl.ColumnReadStoreImpl
+  import org.apache.parquet.hadoop.metadata.ColumnPath
+  import scala.jdk.CollectionConverters._
   import org.apache.spark.sql.execution.vectorized.{OnHeapColumnVector, WritableColumnVector}
   import org.apache.spark.sql.vectorized.ColumnVector
+  import LokiColumnarReader._
 
   private val wanted = p.requiredSchema.fieldNames
   private val emitTs = wanted.indexOf("timestamp")
@@ -781,6 +802,13 @@ class LokiColumnarReader(p: LokiInputPartition)
   private var vecs: Array[OnHeapColumnVector] = _
   // the decoded page's raw ns timestamps, paged reads only: the cursor
   private var tsNs: Array[Long] = _
+  // one distinct-label-set table per map column, null for the others
+  private val sets = wanted.map {
+    case "timestamp" | "line" => null
+    case _ => new LabelSets
+  }
+  // one row's (key id, value id) sequence
+  private var pairs = new Array[Int](16)
   private var batch: ColumnarBatch = _
   private var pages = 0L
   private var wireBytes = 0L
@@ -788,7 +816,7 @@ class LokiColumnarReader(p: LokiInputPartition)
 
   override def next(): Boolean = {
     while (!done) {
-      close() // release the previous page
+      batch = null // the previous page's vectors are reused below
       val body = LokiHttp.queryRange(p.endpoint, p.logql, cursor, end,
         if (paged) Some(ps) else p.limit,
         if (paged) Some("forward") else p.direction)
@@ -828,6 +856,7 @@ class LokiColumnarReader(p: LokiInputPartition)
 
   private def emit(rows: Int): Boolean = {
     if (rows > 0) batch = new ColumnarBatch(vecs.map(v => v: ColumnVector), rows)
+    else close() // a single request or a window's last page: nothing more
     rows > 0
   }
 
@@ -841,6 +870,7 @@ class LokiColumnarReader(p: LokiInputPartition)
   override def close(): Unit = {
     if (vecs != null) vecs.foreach(_.close())
     vecs = null
+    tsNs = null
     batch = null
   }
 
@@ -854,24 +884,41 @@ class LokiColumnarReader(p: LokiInputPartition)
       val md = reader.getFooter.getFileMetaData
       val fileSchema = md.getSchema
       val total = reader.getRecordCount.toInt
-      vecs = OnHeapColumnVector.allocateColumns(math.max(total, 1), p.requiredSchema)
-      tsNs = if (paged) new Array[Long](total) else null
+      if (vecs == null)
+        vecs = OnHeapColumnVector.allocateColumns(math.max(total, 1), p.requiredSchema)
+      else vecs.foreach { v => v.reset(); v.reserve(total) }
+      if (paged && (tsNs == null || tsNs.length < total)) tsNs = new Array[Long](total)
       val cols = if (paged && emitTs < 0) wanted :+ "timestamp" else wanted
       if (cols.nonEmpty) {
         // projection: the requested subset of the file schema, by column
         // name (the ProjectionMask.roots analog, scan.rs:203-206)
         val requested = new MessageType(fileSchema.getName,
           cols.map(n => fileSchema.getType(fileSchema.getFieldIndex(n))): _*)
-        val converter = new GroupRecordConverter(requested).getRootConverter
         var row = 0
+        var group = 0
         var pages = reader.readNextRowGroup()
         while (pages != null) {
           val n = pages.getRowCount.toInt
           if (n > 0) {
+            // a fresh tree per row group: its leaves hold this chunk's
+            // dictionaries
+            val converter = new NoOpGroup(requested)
             val store = new ColumnReadStoreImpl(pages, converter, requested,
               md.getCreatedBy)
+            val chunks = reader.getRowGroups.get(group).getColumns
             def rd(path: String*): ColumnReader =
               store.getColumnReader(requested.getColumnDescription(path.toArray))
+            // value ids of one map leaf in this chunk (after `rd` made its
+            // reader, which hands the leaf the chunk's dictionary)
+            def ids(path: String*): Ids = {
+              val cp = ColumnPath.get(path: _*)
+              val stats = chunks.asScala.find(_.getPath == cp)
+                .map(_.getEncodingStats).orNull
+              val dict = converter.leaf(path).dictionary
+              if (stats != null && dict != null && !stats.hasNonDictionaryEncodedPages)
+                new DictIds(dict)
+              else new ByteIds
+            }
             if (paged || emitTs >= 0) timestamps(rd("timestamp"), row, n)
             var c = 0
             while (c < wanted.length) {
@@ -879,13 +926,17 @@ class LokiColumnarReader(p: LokiInputPartition)
                 case "timestamp" => // decoded above
                 case "line" => lines(rd("line"), vecs(c), row, n)
                 case m => // labels, metadata: one wire shape
-                  maps(rd(m, "key_value", "key"), rd(m, "key_value", "value"),
-                    vecs(c), row, n)
+                  val kr = rd(m, "key_value", "key")
+                  val vr = rd(m, "key_value", "value")
+                  sets(c).clear()
+                  mapColumn(kr, vr, ids(m, "key_value", "key"),
+                    ids(m, "key_value", "value"), sets(c), vecs(c), row, n)
               }
               c += 1
             }
             row += n
           }
+          group += 1
           pages = reader.readNextRowGroup()
         }
       }
@@ -914,8 +965,8 @@ class LokiColumnarReader(p: LokiInputPartition)
   private def lines(r: ColumnReader, v: WritableColumnVector, row: Int, n: Int): Unit = {
     var i = row
     while (i < row + n) {
-      val b = r.getBinary.getBytes
-      v.putByteArray(i, b, 0, b.length)
+      val b = heapBytes(r.getBinary)
+      v.putByteArray(i, b.array, b.arrayOffset + b.position, b.remaining)
       r.consume()
       i += 1
     }
@@ -924,9 +975,12 @@ class LokiColumnarReader(p: LokiInputPartition)
   /** One `(MAP) { repeated key_value {key, value} }` column. Repetition
     * level 0 starts a row and 1 continues it; definition level 0 is an
     * empty map's placeholder. The value column shares the key column's
-    * repetition structure, so the two are consumed in lockstep.
+    * repetition structure, so the two are consumed in lockstep. A row's
+    * map is its (key id, value id) sequence; the sequence's first row
+    * appends the bytes, later rows share that child range.
     */
-  private def maps(keyReader: ColumnReader, valReader: ColumnReader,
+  private def mapColumn(keyReader: ColumnReader, valReader: ColumnReader,
+      keyIds: Ids, valIds: Ids, seen: LabelSets,
       v: WritableColumnVector, row: Int, n: Int): Unit = {
     val keys = v.getChild(0)
     val vals = v.getChild(1)
@@ -934,33 +988,198 @@ class LokiColumnarReader(p: LokiInputPartition)
     var consumed = 0L
     var i = row
     while (i < row + n) {
-      val offset = keys.getElementsAppended
+      var len = 0
+      var h = 0L
       if (keyReader.getCurrentDefinitionLevel == 0) {
         keyReader.consume(); valReader.consume()
         consumed += 1
       } else {
         var more = true
         while (more) {
-          val kb = keyReader.getBinary.getBytes
-          val vb = valReader.getBinary.getBytes
-          keys.appendByteArray(kb, 0, kb.length)
-          vals.appendByteArray(vb, 0, vb.length)
+          val k = keyIds.id(keyReader)
+          val x = valIds.id(valReader)
+          if (len + 2 > pairs.length) pairs = java.util.Arrays.copyOf(pairs, pairs.length * 2)
+          pairs(len) = k
+          pairs(len + 1) = x
+          len += 2
+          h = (h ^ ((k.toLong << 32) | (x & 0xffffffffL))) * 0x9E3779B97F4A7C15L
+          h ^= h >>> 29
           keyReader.consume(); valReader.consume()
           consumed += 1
           more = consumed < total && keyReader.getCurrentRepetitionLevel == 1
         }
       }
-      v.putArray(i, offset, keys.getElementsAppended - offset)
+      h = mix64(h ^ len)
+      val at = seen.find(h, pairs, len)
+      val offset =
+        if (at >= 0) seen.offset(at)
+        else {
+          val off = keys.getElementsAppended
+          var j = 0
+          while (j < len) {
+            val kb = heapBytes(keyIds.bytes(pairs(j)))
+            keys.appendByteArray(kb.array, kb.arrayOffset + kb.position, kb.remaining)
+            val vb = heapBytes(valIds.bytes(pairs(j + 1)))
+            vals.appendByteArray(vb.array, vb.arrayOffset + vb.position, vb.remaining)
+            j += 2
+          }
+          seen.add(h, pairs, len, off)
+          off
+        }
+      v.putArray(i, offset, len / 2)
       i += 1
     }
   }
 }
 
 object LokiColumnarReader {
+  import org.apache.parquet.column.{ColumnReader, Dictionary}
+  import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter}
+  import org.apache.parquet.schema.GroupType
+
   /** Hadoop's default configuration, parsed once per JVM and only read
     * afterwards; every page builds its options from it.
     */
   private lazy val conf = new HadoopParquetConfiguration(new Configuration())
+
+  /** `b`'s bytes in a heap buffer, without a copy when it already is one. */
+  private def heapBytes(b: Binary): java.nio.ByteBuffer = {
+    val bb = b.toByteBuffer
+    if (bb.hasArray) bb else java.nio.ByteBuffer.wrap(b.getBytes)
+  }
+
+  /** Murmur3's 64-bit finalizer: spreads a hash over all its bits. */
+  private def mix64(x: Long): Long = {
+    var h = x
+    h = (h ^ (h >>> 33)) * 0xff51afd7ed558ccdL
+    h = (h ^ (h >>> 33)) * 0xc4ceb9fe1a85ec53L
+    h ^ (h >>> 33)
+  }
+
+  /** A converter tree that assembles nothing: the reader pulls values from
+    * the column readers itself. Its leaves accept dictionaries, so a
+    * dictionary-encoded page exposes its ids, and keep the chunk's
+    * dictionary.
+    */
+  private final class NoOpGroup(t: GroupType) extends GroupConverter {
+    private val children: Array[Converter] = Array.tabulate(t.getFieldCount) { i =>
+      val f = t.getType(i)
+      if (f.isPrimitive) new DictionaryLeaf else new NoOpGroup(f.asGroupType)
+    }
+    override def getConverter(i: Int): Converter = children(i)
+    override def start(): Unit = ()
+    override def end(): Unit = ()
+
+    def leaf(path: Seq[String]): DictionaryLeaf = {
+      val c = children(t.getFieldIndex(path.head))
+      if (path.tail.isEmpty) c.asInstanceOf[DictionaryLeaf]
+      else c.asInstanceOf[NoOpGroup].leaf(path.tail)
+    }
+  }
+
+  private final class DictionaryLeaf extends PrimitiveConverter {
+    var dictionary: Dictionary = _
+    override def hasDictionarySupport: Boolean = true
+    override def setDictionary(d: Dictionary): Unit = dictionary = d
+  }
+
+  /** The value ids of one map leaf within one column chunk. */
+  private sealed trait Ids {
+    def id(r: ColumnReader): Int
+    def bytes(id: Int): Binary
+  }
+
+  /** A chunk whose every data page is dictionary-encoded: its ids. */
+  private final class DictIds(d: Dictionary) extends Ids {
+    def id(r: ColumnReader): Int = r.getCurrentValueDictionaryID
+    def bytes(id: Int): Binary = d.decodeToBinary(id)
+  }
+
+  /** Any other chunk: ids numbered by first appearance of the bytes. */
+  private final class ByteIds extends Ids {
+    private val ids = new java.util.HashMap[Binary, Integer]
+    private val values = scala.collection.mutable.ArrayBuffer.empty[Binary]
+    def id(r: ColumnReader): Int = {
+      val b = r.getBinary
+      val known = ids.get(b)
+      if (known != null) known
+      else {
+        val c = b.copy()
+        ids.put(c, values.size)
+        values += c
+        values.size - 1
+      }
+    }
+    def bytes(id: Int): Binary = values(id)
+  }
+
+  /** The distinct id sequences of one map column in one column chunk,
+    * each with the child offset its bytes were appended at: open
+    * addressing over a well-mixed 64-bit hash (a weak one clusters the
+    * similar sequences of one page), sequences kept in one int pool.
+    */
+  private final class LabelSets {
+    private var slots = new Array[Int](256) // entry + 1; 0 is empty
+    private var hashes = new Array[Long](128)
+    private var starts = new Array[Int](128)
+    private var lens = new Array[Int](128)
+    private var offsets = new Array[Int](128)
+    private var pool = new Array[Int](1024)
+    private var size = 0
+    private var used = 0
+
+    def clear(): Unit = {
+      if (size > 0) java.util.Arrays.fill(slots, 0)
+      size = 0
+      used = 0
+    }
+
+    def offset(e: Int): Int = offsets(e)
+
+    /** The entry holding `seq(0 until len)`, or -1. */
+    def find(h: Long, seq: Array[Int], len: Int): Int = {
+      val mask = slots.length - 1
+      var s = h.toInt & mask
+      while (slots(s) != 0) {
+        val e = slots(s) - 1
+        if (hashes(e) == h && lens(e) == len &&
+            java.util.Arrays.equals(pool, starts(e), starts(e) + len, seq, 0, len))
+          return e
+        s = (s + 1) & mask
+      }
+      -1
+    }
+
+    def add(h: Long, seq: Array[Int], len: Int, offset: Int): Unit = {
+      if (size == hashes.length) {
+        val cap = size * 2
+        hashes = java.util.Arrays.copyOf(hashes, cap)
+        starts = java.util.Arrays.copyOf(starts, cap)
+        lens = java.util.Arrays.copyOf(lens, cap)
+        offsets = java.util.Arrays.copyOf(offsets, cap)
+        slots = new Array[Int](cap * 2)
+        var e = 0
+        while (e < size) { place(hashes(e), e); e += 1 }
+      }
+      if (used + len > pool.length)
+        pool = java.util.Arrays.copyOf(pool, math.max(pool.length * 2, used + len))
+      System.arraycopy(seq, 0, pool, used, len)
+      hashes(size) = h
+      starts(size) = used
+      lens(size) = len
+      offsets(size) = offset
+      place(h, size)
+      used += len
+      size += 1
+    }
+
+    private def place(h: Long, e: Int): Unit = {
+      val mask = slots.length - 1
+      var s = h.toInt & mask
+      while (slots(s) != 0) s = (s + 1) & mask
+      slots(s) = e + 1
+    }
+  }
 }
 
 /** `query_range` responses the scan read, summed over tasks. */

@@ -191,6 +191,14 @@ final class LokiStubServer {
   @volatile var wireCodec: CompressionCodecName = CompressionCodecName.UNCOMPRESSED
   @volatile var wireDictionary: Boolean = true
   @volatile var wireV2Pages: Boolean = false
+  /** Data-page and dictionary-page caps of the wire writer, parquet's
+    * defaults unless set: small caps make a column chunk's dictionary
+    * overflow into plain pages part-way through.
+    */
+  @volatile var wirePageBytes: Int =
+    org.apache.parquet.column.ParquetProperties.DEFAULT_PAGE_SIZE
+  @volatile var wireDictionaryPageBytes: Int =
+    org.apache.parquet.column.ParquetProperties.DEFAULT_DICTIONARY_PAGE_SIZE
 
   /** Fault injection (round 12): fail the next N requests of each kind
     * with HTTP 503, for the bounded-retry specs — a real Loki throttles
@@ -1831,6 +1839,8 @@ final class LokiStubServer {
       .withType(wireSchema)
       .withCompressionCodec(wireCodec)
       .withDictionaryEncoding(wireDictionary)
+      .withPageSize(wirePageBytes)
+      .withDictionaryPageSize(wireDictionaryPageBytes)
       .withWriterVersion(
         if (wireV2Pages)
           org.apache.parquet.column.ParquetProperties.WriterVersion.PARQUET_2_0

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.scalacheck.{Gen, Prop, Properties, Test}
+import org.scalacheck.{Gen, Prop, Test}
 
 import graft.functions.GraftFunctions
 import graft.operators.DedupOps
@@ -13,11 +13,11 @@ import graft.operators.DedupOps
   * corpus DedupSpec pins. The generator draws from a small vocabulary so
   * near-dup pairs (and boundary-jaccard pairs) arise naturally.
   */
-object DedupProps extends Properties("DedupPrefixJoin") {
+object DedupProps extends SeededProperties("DedupPrefixJoin") {
 
   // each case runs Spark jobs; a handful of random corpora is the budget
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
-    p.withMinSuccessfulTests(6)
+    super.overrideParameters(p).withMinSuccessfulTests(6)
 
   // local[4,2] matches SparkTestBase: whichever suite wins the JVM-global
   // context race must leave task retries enabled (the connector's

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalacheck.{Gen, Prop, Properties, Test}
+import org.scalacheck.{Gen, Prop, Test}
 
 import graft.operators.RelOps
 
@@ -14,10 +14,10 @@ import graft.operators.RelOps
   * points on the skyline frontier, duplicated baskets (so thresholded
   * edges arise), disconnected graph components.
   */
-object RelProps extends Properties("RelOpsShapes") {
+object RelProps extends SeededProperties("RelOpsShapes") {
 
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
-    p.withMinSuccessfulTests(5)
+    super.overrideParameters(p).withMinSuccessfulTests(5)
 
   // full SparkTestBase config block: getOrCreate is JVM-global and test
   // order is arbitrary — if this suite wins the session race with fewer

@@ -3,7 +3,7 @@ package graft
 import scala.math.BigDecimal.RoundingMode
 
 import org.apache.spark.sql.SparkSession
-import org.scalacheck.{Gen, Prop, Properties, Test}
+import org.scalacheck.{Gen, Prop, Test}
 
 import graft.operators.TextOps
 
@@ -13,11 +13,11 @@ import graft.operators.TextOps
   * exercising short docs (whole-text span fallback), singleton vocab
   * entries, and boundary tie-ordering in the PMI ranking.
   */
-object TextStatsProps extends Properties("TextStats") {
+object TextStatsProps extends SeededProperties("TextStats") {
 
   // each case runs Spark jobs; a handful of random corpora is the budget
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
-    p.withMinSuccessfulTests(5)
+    super.overrideParameters(p).withMinSuccessfulTests(5)
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4,2]")

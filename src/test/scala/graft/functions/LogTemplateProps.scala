@@ -1,6 +1,8 @@
 package graft.functions
 
-import org.scalacheck.{Gen, Prop, Properties}
+import org.scalacheck.{Gen, Prop}
+
+import graft.SeededProperties
 
 /** The native template scanner ([[LogTemplateUtil]]) must be
   * byte-identical to the regex chain it replaces —
@@ -13,7 +15,7 @@ import org.scalacheck.{Gen, Prop, Properties}
   * non-ASCII, literal placeholder text, and fragment adjacency with no
   * separators (runs merge across fragment boundaries).
   */
-object LogTemplateProps extends Properties("LogTemplate") {
+object LogTemplateProps extends SeededProperties("LogTemplate") {
 
   /** The rules with RE2's ASCII `\b` made explicit via Java lookarounds:
     * Java's own `\b` is Unicode-aware (`é` is a word char to Java, a

@@ -3,22 +3,23 @@ package graft.loki
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import org.scalacheck.{Gen, Prop, Properties}
+import org.scalacheck.{Gen, Prop}
 
+import graft.SeededProperties
 import graft.sources.loki.LogQL
 
 /** ScalaCheck properties for the LogQL translators (sbt runs Properties
   * suites natively; no scalatest bridge needed). Generators sweep the
   * label/value/pattern space the reference interpolates raw.
   */
-object LogQLProps extends Properties("LogQL") {
+object LogQLProps extends SeededProperties("LogQL") {
 
   // the Java↔RE2 differential properties hunt rare divergence corners
   // (specific codepoint × construct coincidences) — give every property
   // a deeper sweep than the scalacheck default
   override def overrideParameters(
       p: org.scalacheck.Test.Parameters): org.scalacheck.Test.Parameters =
-    p.withMinSuccessfulTests(300)
+    super.overrideParameters(p).withMinSuccessfulTests(300)
 
   private val labels = AttributeReference("labels",
     MapType(StringType, StringType, valueContainsNull = false), nullable = false)()

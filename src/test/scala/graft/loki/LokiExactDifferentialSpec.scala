@@ -27,10 +27,9 @@ import graft.sources.loki.testkit.LokiStubServer
   * or a newline, bursts of rows at one nanosecond, and rows one
   * nanosecond either side of the timestamp bounds, and words whose RE2
   * case fold differs from Spark's lowercasing (`ſ`, `İ`, `µ`) or agrees
-  * with it off ASCII (the Kelvin sign). One known non-Exact case is left
-  * out of the corpus: rows without the `default_label` (`app`), which a
-  * pushed matcher can return although the table's default matcher does
-  * not (table.rs:116-122).
+  * with it off ASCII (the Kelvin sign), and rows labelled only `team`,
+  * without the table's `default_label` (`app`): the unfiltered table does
+  * not read them, so no pushed matcher may return them either.
   */
 class LokiExactDifferentialSpec extends SparkTestBase
     with BeforeAndAfterAll with PredicateHelper {
@@ -74,7 +73,10 @@ class LokiExactDifferentialSpec extends SparkTestBase
       .flatMap(ns => Seq.fill(3 + rnd.nextInt(4))(ns))
     val edges = Seq(anchorNs - 1, anchorNs, anchorNs + 1, anchorNs + 999,
       anchorNs + 1000).flatMap(ns => Seq(ns, ns))
-    (spread ++ bursts ++ edges).map(ns => (ns, labels(), line()))
+    val rows = (spread ++ bursts ++ edges).map(ns => (ns, labels(), line()))
+    val teamOnly = hardValues.flatMap(v => Seq.fill(3)(
+      (baseNs + (rnd.nextDouble() * 2 * hourNs).toLong, Map("team" -> v), line())))
+    rows ++ teamOnly
   }
 
   override def beforeAll(): Unit = {

@@ -119,7 +119,8 @@ class LokiMetricSpec extends SparkTestBase with BeforeAndAfterAll {
       .groupBy(date_trunc("day", col("timestamp")).as("bucket"))
       .agg(count(lit(1)).as("cnt"))
     val plan = planOf(df)
-    assert(plan.contains("count_over_time({env=\"prod\"} [86400s])"), plan)
+    // the table's default matcher stays: `env` does not imply `app`
+    assert(plan.contains("count_over_time({app=~\".+\", env=\"prod\"} [86400s])"), plan)
     val got = df.orderBy("bucket").collect().map(r => r.getLong(1)).toSeq
     val exp = plannedWithout(metricRule)(windowed(lokiDf())
       .filter(element_at(col("labels"), "env") === "prod")

@@ -1,8 +1,9 @@
 package graft.loki
 
 import org.apache.spark.sql.types.{MapType, StringType, StructField, StructType}
-import org.scalacheck.{Gen, Prop, Properties}
+import org.scalacheck.{Gen, Prop}
 
+import graft.SeededProperties
 import graft.sources.loki.{LokiColumnarReader, LokiInputPartition}
 import graft.sources.loki.testkit.LokiStubServer
 
@@ -16,7 +17,7 @@ import graft.sources.loki.testkit.LokiStubServer
   * cursor-column re-add in decode on every case, and the `labels`
   * projection makes page cuts land inside map offsets.
   */
-object LokiPagerProps extends Properties("LokiPager") {
+object LokiPagerProps extends SeededProperties("LokiPager") {
 
   private val stub = new LokiStubServer
   stub.start()

@@ -2,8 +2,9 @@ package graft.loki
 
 import org.apache.spark.sql.catalyst.expressions.{GetJsonObject, Literal}
 import org.apache.spark.unsafe.types.UTF8String
-import org.scalacheck.{Gen, Prop, Properties}
+import org.scalacheck.{Gen, Prop}
 
+import graft.SeededProperties
 import graft.sources.loki.LokiParsers
 
 /** The honesty pin for the `get_json_object(line,'$.k') = 'v'` pushdown
@@ -18,7 +19,7 @@ import graft.sources.loki.LokiParsers
   * '' for an empty json string where the label model reads absent) —
   * that is exactly why those shapes are rejected by the translator.
   */
-object LokiParsersProps extends Properties("LokiParsers") {
+object LokiParsersProps extends SeededProperties("LokiParsers") {
 
   private def gjo(line: String, path: String): String = {
     val r = GetJsonObject(

@@ -1,6 +1,8 @@
 package graft.sources.loki
 
-import org.scalacheck.{Gen, Prop, Properties}
+import org.scalacheck.{Gen, Prop}
+
+import graft.SeededProperties
 
 /** ScalaCheck properties for the JSON response decoders (metadata,
   * series, volume/metric, patterns, delete listing), which read every
@@ -11,7 +13,7 @@ import org.scalacheck.{Gen, Prop, Properties}
   * mis-shaped bodies fail loudly with the decoder's own message. Lives
   * in the source package (the decoders are private[loki] by design).
   */
-object LokiHttpProps extends Properties("LokiHttpCodec") {
+object LokiHttpProps extends SeededProperties("LokiHttpCodec") {
 
   /** Independent JSON string encoder — deliberately a DIFFERENT (but
     * equally standards-valid) representation from the stub's `LogQL.quote`:
